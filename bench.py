@@ -1,8 +1,9 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+Prints two JSON lines, a transparency record and then, LAST, the compact one:
+  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+   "cpus": N, "shuffle_partitions": N}
 
 Each query is forced end-to-end with the noop sink (full computation,
 no driver collect).  Timings include Catalyst planning but exclude
@@ -141,6 +142,8 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": sf_val,
+                "cpus": spark.sparkContext.defaultParallelism,
+                "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
             }
         )
     )

@@ -25,6 +25,16 @@ from pyspark.sql import functions as F
 # parse drift).  The py4j round-trips that dominated these builders'
 # build time (~40-60 calls each for the lambda-heavy trees) are paid
 # once instead of once per query build.
+#
+# Assumption: ONE py4j gateway (one JVM) per Python process.
+# Each cached Column holds a py4j reference into that JVM, and the
+# caches are never invalidated.  If the JVM is relaunched in-process
+# (the gateway shut down and a new one launched, e.g. by an embedding
+# host), the cached trees point into the dead JVM and the next query
+# build fails with an opaque py4j error instead of rebuilding.
+# SparkContext.stop() leaves the gateway running, so stopping and
+# re-creating a session is safe: the expressions are unresolved and
+# session-free.
 
 # A small function-word profile per language-analog.  The fixture's
 # `lang` column is the ground truth; the classifier must not peek at it.

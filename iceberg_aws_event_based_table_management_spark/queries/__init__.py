@@ -1,36 +1,37 @@
 """Query modules; importing them populates the registry.
 
-Import order IS registration order.  The driver grades the first 50
-registered queries per round, so the order below is a rotation
-schedule: queries that have never produced a green driver row come
-first, already-proven ones last.  On top of the manual order, load()
-runs a self-maintaining rotation driven by the repo's
-CORRECTNESS_r*.json records, with two hand-authored regime flips:
+Each grading round checks the first 50 registered queries, so
+load() reorders the registry by one sort key computed from the
+grading ledger (registry.grading_ledger, built from the repo's
+CORRECTNESS_r*.json files).  In order:
 
-- ROUND-8 (active once the r7 backlog graded green): the 9-name
-  never-graded tail leads, 41 pinned canaries fill the window;
-  queries REGISTERED in round 8 (staged_new_r8) are deliberately
-  excluded from this flip's backlog so they cannot displace the
-  pre-validated window mid-round.
-- ROUND-9 (once every tail_r8 name is green): the round-8 newcomers
-  lead (never-graded first), plus the re-oracled C20 row, and
-  canaries_r9 — a FRESH sample, not a rerun of the r8 list — fills
-  the remaining slots.
-- ROUND-10 (once every staged_new_r8 name is green): the round-9
-  newcomers (staged_new_r9) lead, and canaries_r10 — a third fresh
-  sample sweeping the r5-r7 green slices no prior window re-graded —
-  fills the rest.
-
-Rows-only registrations (oracle=None) are excluded from every backlog
-count and demoted with the greens: the driver can only ever record
-`err: no_oracle` for them, so a front-window slot would be wasted and
-the flip thresholds would never be reached (the r7 verdict's headline
-defect).
+1. Never graded: a query with no grade row has no evidence at all.
+2. Latest grade red (latest grade round > latest green round): a
+   regression re-grades every round until it is green again.
+3. Rewritten since its latest grade (a REGRADE entry whose round is
+   later than that grade): the green on record is for a plan that no
+   longer exists.  The entry stops counting once a round grades
+   the new plan, so stale entries are harmless.
+4. Oldest latest-green round first: with 50 slots and ~340 queries,
+   every query re-grades within 7 rounds, which catches record-format
+   drift and silent regressions in plans nobody touched.
+5. Name: a stable tie-break, so the window is deterministic.
 """
 
 from __future__ import annotations
 
 _LOADED = False
+
+# Plans rewritten after their latest grade -> the round of the
+# rewrite (key part 3).  Add an entry when a plan changes; it expires by
+# itself once a grade from that round or later is on the ledger.
+REGRADE: dict[str, int] = {
+    "dedup_cluster_survivors": 16,
+    "dedup_near_candidates": 16,
+    "dedup_near_verified": 16,
+    "pipeline_training_corpus": 16,
+    "quantile_histogram_sketch": 16,
+}
 
 
 def load() -> None:
@@ -89,1064 +90,13 @@ def load() -> None:
 
     from .. import registry
 
-    # Round-6 grading window: exactly the first 50 names below — all
-    # never-driver-graded, ordered by the r5 verdict's priority:
-    # (a) dedup / similarity / retrieval family (incl. the two
-    #     plan-fixed-this-round queries E116/E119 — oracle rows are
-    #     unchanged by the fixes);
-    # (b) graph / iteration trio;
-    # (c) streaming pair (E67 is in family (a)'s stream join);
-    # (d) table-format quartet E161-E164 + the file/metadata audits;
-    # (e) sketches, SCD2, event analytics, and the TPC-H composites.
-    window_r6 = [
-        # (a) dedup / similarity / retrieval
-        "dedup_semantic_semdedup",
-        "dedup_segment_windows",
-        "text_interdoc_ngram_coverage",
-        "stream_join_view_purchase",
-        "ann_recall_audit",
-        "text_quality_classifier",
-        "dedup_cross_source_matrix",
-        "dedup_containment_pairs",
-        "split_cluster_holdout",
-        "text_winnow_fingerprints",
-        "embedding_pq_codes",
-        "dedup_prefix_filter_pairs",
-        "dedup_simhash_hamming",
-        "ann_ivfpq_recall_audit",
-        "bm25_topk_retrieval",
-        "rrf_fuse_retrieval",
-        "dedup_edit1_names",
-        "label_noise_knn_consensus",
-        "linkage_blocked_nearest_name",
-        # (b) graph / iteration
-        "pagerank_integer_bipartite",
-        "graph_triangle_census",
-        "graph_khop_reach",
-        # (c) streaming
-        "stream_static_enrichment",
-        "stream_ohlc_daily",
-        # (d) table-format + file/metadata audits
-        "mor_deletes_read",
-        "refs_aware_snapshot_expiry",
-        "two_tier_manifest_skipping",
-        "partition_evolution_scan",
-        "files_skipping_estimate",
-        "files_overlap_depth",
-        "files_composite_predicate_skipping",
-        "file_bloom_pruning_estimate",
-        "sink_partitioned_pruning",
-        "sort_compaction_zorder_quantile",
-        "cdc_apply_tombstones",
-        "agg_incremental_maintenance",
-        "table_freshness_sla",
-        # (e) sketches, SCD2, event analytics, composites
-        "distinct_hll_neutral",
-        "distinct_kmv_estimate",
-        "distinct_kmv_set_ops",
-        "sketch_heavy_hitters_cms",
-        "scd2_user_state_intervals",
-        "scd2_point_in_time_join",
-        "event_transition_matrix",
-        "event_funnel_conversion",
-        "event_cohort_retention",
-        "rolling_active_users",
-        "join_key_skew_diagnosis",
-        "composite_nation_trade_volume",
-        "composite_top_supplier",
-    ]
-    # ROUND-7 HANDOFF: positions 51-109 below are the 59 remaining
-    # never-driver-graded queries, already ordered as next round's
-    # candidates — round 7 should promote the first 50 of them into
-    # its window (drop the graded r6 names to the tail) and stage the
-    # last 9 plus regression canaries for round 8.
-    staged_r7 = [
-        "sample_weighted_reservoir",
-        "sketch_heavy_hitters_cms",  # dropped below if already in window
-        "event_path_signatures",
-        "text_char_entropy_filter",
-        "source_length_gini",
-        "event_cooccurrence_pmi",
-        "event_interarrival_stats",
-        "source_lang_mix_entropy",
-        "benford_first_digit_audit",
-        "source_length_zscore_outliers",
-        "vocab_oov_rate",
-        "equidepth_histogram",
-        "dq_expectations_report",
-        "event_disorder_audit",
-        "twap_user_daily",
-        "robust_mad_outliers",
-        "user_longest_streak",
-        "join_cardinality_sampled_estimate",
-        "distinct_kmv_estimate",  # dropped below if already in window
-        "source_length_trend",
-        "commit_seasonality_profile",
-        "densify_daily_commits",
-        "attribution_multi_touch",
-        "basket_part_lift",
-        "pareto_revenue_concentration",
-        "session_first_purchase_mrr",
-        "langid_confusion_matrix",
-        "vocab_coverage_curve",
-        "pareto_skyline_customers",
-        "tree_split_gini_quantity",
-        "bollinger_breakout_days",
-        "cusum_changepoint_daily",
-        "ewma_daily_smoothing",
-        "apportion_token_budget",
-        "drift_chi_square_gate",
-        "mannwhitney_u_lengths",
-        "salting_plan_skewed_keys",
-        "quantile_normalize_lengths",
-        "ohlc_daily_value",
-        "merge_user_intervals",
-        "cohort_ltv_weekly",
-        "functional_dependency_audit",
-        "classifier_auc_exact",
-        "survival_km_repurchase",
-        "ratio_to_parent_revenue",
-        "calibration_reliability_bins",
-        "text_lexical_diversity",
-        "cumulative_unique_users",
-        "rolling_distinct_users_7d",
-        "shipping_lag_percentiles",
-        "fair_share_allocation",
-        "rank_movers_nations",
-        "setop_bag_halves",
-        "absence_view_no_purchase",
-        "max_concurrent_activity",
-        "rolling_median_spikes",
-        "business_days_lag",
-        "ks_two_sample_lengths",
-        "emd_lengths",
-        "acf_daily_lags",
-        "correlation_event_series",
-    ]
-    # ROUND-8 PLAN (hand-authored now, per the r7 verdict): once the
-    # round-7 window — the first 50 staged_r7 names — is graded, only
-    # the 9 names below remain never-driver-graded.  Round 8's window
-    # is those 9 plus 41 PINNED regression canaries: known-green
-    # queries deliberately re-graded to catch driver-format drift (the
-    # r4 lesson) and plan-rewrite regressions (E116/E119 in r6, the
-    # E26/E101 star-component swap in r7).  The canary set is the
-    # bench HEADLINE mix (every family: control plane, relational,
-    # maintenance, dedup/similarity/retrieval, text, streaming,
-    # sketches, SCD2) plus the three queries rewritten after their
-    # green row this round and a table-format/streaming pair.  Round 9
-    # should rotate in a FRESH canary sample — don't reuse this list.
-    tail_r8 = [
-        "setop_bag_halves",
-        "absence_view_no_purchase",
-        "max_concurrent_activity",
-        "rolling_median_spikes",
-        "business_days_lag",
-        "ks_two_sample_lengths",
-        "emd_lengths",
-        "acf_daily_lags",
-        "correlation_event_series",
-    ]
-    canaries_r8 = [
-        # rewritten after green (highest re-grade value)
-        "dedup_cluster_survivors",
-        "split_cluster_holdout",
-        "dedup_prefix_filter_pairs",
-        "dedup_simhash_hamming",
-        # earliest greens (r2) — most exposed to format drift
-        "should_optimize_decision",
-        "agg_pricing_summary",
-        "join_inner_orders_customer",
-        "window_rank_orders_per_cust",
-        "topk_orders_by_price",
-        "binpack_group_assignment",
-        "dedup_exact_documents",
-        # family representatives (the bench HEADLINE mix)
-        "merge_upsert_orders",
-        "composite_shipping_priority",
-        "pipeline_training_corpus",
-        "pipeline_rag_corpus",
-        "dedup_ngram_jaccard",
-        "topk_similarity_bruteforce",
-        "similarity_knn_join",
-        "similarity_threshold_pairs",
-        "text_token_stats",
-        "explode_unnest_tokens",
-        "stream_tumbling_commits_per_hour",
-        "dedup_incremental_neardup",
-        "tfidf_top_terms",
-        "text_boilerplate_ngrams",
-        "quantile_histogram_sketch",
-        "dedup_semantic_semdedup",
-        "dedup_segment_windows",
-        "text_quality_classifier",
-        "event_funnel_conversion",
-        "sketch_heavy_hitters_cms",
-        "scd2_user_state_intervals",
-        "linkage_blocked_nearest_name",
-        "ann_ivfpq_recall_audit",
-        "text_winnow_fingerprints",
-        "bm25_topk_retrieval",
-        "rrf_fuse_retrieval",
-        "dedup_edit1_names",
-        "label_noise_knn_consensus",
-        # table-format + streaming coverage
-        "stream_static_enrichment",
-        "refs_aware_snapshot_expiry",
-    ]
-    # ROUND-9 PLAN (authored in round 8, per the r7 verdict #5): once
-    # the r8 window grades (every tail_r8 name green), rotate in a
-    # FRESH canary sample — a different earliest-green slice (the r8
-    # list leaned r2; this one sweeps r1/r3/r4/r5 families none of
-    # which r8 re-graded), led by the queries ROUND 8 REWROTE that the
-    # r8 window does NOT cover (streaming parquet-sink rework:
-    # stream_join_view_purchase / stream_merge_upsert; star-fallback
-    # singleton fix: dedup_near_clusters).  50 names = a full window;
-    # all schemas audited flat (no array/map/struct/binary) and
-    # pre-validated green under the bare driver-mimic session before
-    # round-8 close.  Round 10 should rotate again — don't reuse.
-    canaries_r9 = [
-        # rewritten in round 8, not re-graded by the r8 window
-        "stream_join_view_purchase",
-        "stream_merge_upsert",
-        "dedup_near_clusters",
-        # rewritten in round 9 (driver-collect removed; executor-side
-        # parquet scratch sink) — must be re-graded inside the first-50
-        # window, so it leads the canary fill
-        "stream_session_real",
-        # earliest greens (r1) — the slice the r8 canaries skipped
-        "scan_parquet",
-        "scan_projection",
-        "scan_pushdown_filter",
-        "project_arithmetic",
-        "filter_predicates",
-        "case_when_bucket",
-        "join_broadcast_nation_region",
-        "agg_count_distinct",
-        "agg_rollup_by_nation_region",
-        "agg_salted_two_stage",
-        "sort_compaction_zorder",
-        "composite_local_supplier_volume",
-        # r3 greens — joins, sorts/sets, scalars, sampling, similarity
-        "join_outer_customer_orders",
-        "join_semi_customers_with_orders",
-        "join_anti_customers_without_orders",
-        "join_range_events_windows",
-        "sort_global_topcustomers",
-        "topk_per_group",
-        "setop_intersect_keys",
-        "scalar_string_suite",
-        "scalar_math_suite",
-        "sample_deterministic",
-        "ann_topk_ivf",
-        "dedup_embedding_neardup",
-        # r4 greens — control plane, lifecycle, windows, streaming
-        "events_scan",
-        "commit_filter",
-        "table_lookup_join",
-        "snapshot_lineage_scan",
-        "commits_since_last_replace",
-        "commit_threshold_trigger",
-        "join_asof_latest_snapshot",
-        "window_lag_commit_gap",
-        "changelog_cdc_diff",
-        "snapshot_time_travel",
-        "stream_watermark_latedrop",
-        "udf_tablename_parse_parity",
-        "dedup_near_verified",
-        # r5 greens — dedup/embedding/corpus-assembly families
-        "dedup_near_candidates",
-        "dedup_simhash_buckets",
-        "embedding_normalize_quantize",
-        "kmeans_assign_step",
-        "pack_sequences_token_budget",
-        "corpus_mixture_weights",
-        "wap_publish_gate",
-        # r6/r7 family reps untouched by the r8 canary list
-        "mor_deletes_read",
-        "pagerank_integer_bipartite",
-    ]
+    ledger = registry.grading_ledger()
 
-    ordered = window_r6
-    ordered += [n for n in staged_r7 if n not in set(ordered)]
-    ordered += [n for n in registry.QUERIES if n not in set(ordered)]
-    registry.demote(*ordered)
+    def key(name: str) -> tuple[bool, bool, bool, int, str]:
+        graded, green = ledger.get(name, (0, 0))
+        return (graded > 0, graded <= green, REGRADE.get(name, 0) <= graded, green, name)
 
-    # Self-maintaining rotation on top of the manual order: any query
-    # with a green driver row in the repo's CORRECTNESS_r*.json records
-    # is stably demoted, so the round-7 window is automatically the
-    # first 50 staged_r7 names (red rows stay in front for re-grading).
-    # Once the never-green backlog shrinks to the 9-name tail, the
-    # regime flips: the hand-authored round-8 window (tail + pinned
-    # canaries) wins, and rotate_graded cannot evict the canaries.
-    #
-    # Rows-only registrations (oracle=None — today just
-    # `agg_approx_distinct`, C20) can never earn a green row: the
-    # driver records `err: no_oracle` for them every round.  They are
-    # therefore (a) excluded from the never-green backlog, which would
-    # otherwise be pinned above the flip threshold forever (r7 verdict
-    # headline defect), and (b) demoted with the greens so they stop
-    # burning a front-window grading slot on a guaranteed err row.
-    # Queries REGISTERED in round 8 (after the r8 window was already
-    # hand-validated): deliberately staged OUT of the round-8 flip —
-    # they must neither break the <=9 backlog condition nor displace
-    # the pre-validated tail+canary window mid-round.  They have no
-    # grading history, so in the ROUND-9 regime they lead the window
-    # (never-green first), with canaries_r9 filling the rest.
-    staged_new_r8 = [
-        "theilsen_daily_slope",
-        "seasonal_decompose_daily",
-        "anova_f_source_lengths",
-        "basket_triples_apriori",
-        "rfm_customer_segments",
-        "conversion_lift_ztest",
-        "rolling_ols_slope",
-        "dedup_pair_span_align",
-        "ccf_event_lead_lag",
-        "cuped_adjusted_lift",
-        "trimmed_mean_lengths",
-        "zipf_term_exponent",
-        "weighted_median_doclen",
-        "composite_returned_item_revenue",
-        "markov_next_event_accuracy",
-        "funnel_time_to_convert",
-        "event_trigram_topk",
-        "drift_psi_lengths",
-        "forecast_mase_seasonal_naive",
-        "matched_pairs_by_decile",
-        "max_drawdown_daily_value",
-        "text_rake_keyphrases",
-        "transition_entropy",
-        "dedup_degree_profile",
-        "orders_aging_buckets",
-        "text_bigram_perplexity",
-        "dedup_minhash_estimate_audit",
-        "ab_minimum_detectable_effect",
-    ]
-    # Queries RE-REGISTERED with an oracle in round 9 (previously
-    # rows-only, so no hash-green history exists for them): graded as
-    # newcomers in the round-9 window, right behind the r8 staged set.
-    # `agg_approx_distinct` was the last permanent no_oracle row; its
-    # r9 re-registration emits (group, exact, within-bound boolean) so
-    # the driver can finally hash it (the E99/E106 audit device).
-    reoracled_r9 = ["agg_approx_distinct"]
-    # Queries REGISTERED in round 9: staged OUT of the round-9 flip —
-    # the pre-validated r9 window must not be displaced mid-round.
-    # They have no grading history, so in the ROUND-10 regime they
-    # lead the window (never-green first), with canaries_r10 filling
-    # the rest.
-    staged_new_r9 = [
-        "minhash_jaccard_regression",
-        "winsorized_revenue_stats",
-        "grubbs_outlier_daily",
-        "jackknife_mean_loo",
-        "kendall_tau_price_qty",
-        "spearman_daily_corr",
-        "partial_corr_controls",
-        "lift_curve_deciles",
-        "gini_impurity_split_scan",
-        "ks_statistic_by_source",
-        "vocab_overlap_coefficient",
-        "holt_linear_forecast",
-        "croston_intermittent_demand",
-        "abc_xyz_inventory",
-        "price_elasticity_ols",
-        "cannibalization_share_shift",
-        "changepoint_binary_segmentation",
-        "sessionization_gap_stats",
-        "text_hapax_ratio",
-        "text_sentence_stats",
-        "text_yule_k",
-        "dedup_band_tuning_audit",
-        "stratified_neyman_allocation",
-        "bh_fdr_correction",
-        "bag_bootstrap_ci",
-        "isotonic_calibration_pav",
-        "lorenz_curve_points",
-        "entity_resolution_scorecard",
-    ]
-    # ROUND-10 PLAN (authored in round 9, per the r8 verdict #9): once
-    # the r9 window grades (every staged_new_r8 name green), rotate in
-    # ANOTHER fresh canary sample — the r5/r6/r7 green slices that
-    # neither the r8 nor the r9 window ever re-graded (computed from
-    # the CORRECTNESS_r01-r08 latest-green ledger; disjoint from
-    # canaries_r8, canaries_r9, tail_r8 by construction).  Round 11
-    # should rotate again — don't reuse.
-    canaries_r10 = [
-        # r7 greens never re-swept
-        "sample_weighted_reservoir",
-        "event_path_signatures",
-        "text_char_entropy_filter",
-        "source_length_gini",
-        "event_cooccurrence_pmi",
-        "event_interarrival_stats",
-        "benford_first_digit_audit",
-        "vocab_oov_rate",
-        "equidepth_histogram",
-        "dq_expectations_report",
-        "twap_user_daily",
-        "robust_mad_outliers",
-        "user_longest_streak",
-        "attribution_multi_touch",
-        "basket_part_lift",
-        "pareto_revenue_concentration",
-        "langid_confusion_matrix",
-        "classifier_auc_exact",
-        "survival_km_repurchase",
-        "salting_plan_skewed_keys",
-        # r6 greens never re-swept
-        "distinct_hll_neutral",
-        "distinct_kmv_estimate",
-        "event_transition_matrix",
-        "event_cohort_retention",
-        "rolling_active_users",
-        "join_key_skew_diagnosis",
-        "composite_nation_trade_volume",
-        "graph_triangle_census",
-        "cdc_apply_tombstones",
-        "partition_evolution_scan",
-        "files_skipping_estimate",
-        "two_tier_manifest_skipping",
-        "table_freshness_sla",
-        "scd2_point_in_time_join",
-        "dedup_containment_pairs",
-        # r5 greens never re-swept
-        "audit_k_anonymity",
-        "bloom_membership_audit",
-        "corpus_mixture_apply",
-        "curriculum_interleave",
-        "dedup_token_savings",
-        "profile_table_stats",
-        "shard_assignment_balanced",
-        "split_train_val_test",
-        "text_repetition_stats",
-        "window_forward_fill",
-        # r2/r3/r4 greens never re-swept (format-drift sentinels)
-        "sort_compaction_order",
-        "multimodal_feature_extract",
-        "scalar_regex_suite",
-        "stream_dedup_event_ids",
-        "maintenance_expire_snapshots",
-    ]
-
-    # ROUND-11 STAGING (late-round-9 + round-10 registrations): these
-    # cannot displace the pre-validated round-10 window (sized by
-    # staged_new_r9 + canaries_r10); they lead the round-11 window
-    # once staged_new_r9 grades green.
-    staged_new_r10: list[str] = [
-        "good_turing_unseen_mass",
-        "welch_ttest_lengths",
-        "mann_kendall_trend",
-        "page_hinkley_drift",
-        "vif_multicollinearity",
-        "hurst_exponent_rs",
-        "gumbel_weekly_maxima",
-        "cpk_shipping_capability",
-        "runs_test_daily",
-        "ljung_box_q",
-        "kl_divergence_sources",
-        "theil_u2_forecast",
-        "herfindahl_category",
-        "moments_skew_kurtosis",
-        # registered in round 10 proper
-        "stream_latedrop_outoforder",
-    ]
-    # ROUND-11 PLAN (authored in round 10, per the r9 verdict #8): once
-    # the r10 window grades (every staged_new_r9 name green), the
-    # round-10-staged newcomers lead and a FOURTH fresh canary sample
-    # fills the window.  This sample is the r8/r9 green slices' FIRST
-    # re-grade — the 9-name r8 tail, the 28 round-8-staged operators
-    # graded green in round 9, and the re-oracled C20 row — plus 12
-    # family-diverse greens (multimodal, CSV/ORC round-trips,
-    # correlated subquery, LSH ANN, pivot, stateful stream, rollup
-    # cascade, lang-id, pandas UDAF, datetime scalars) that no earlier
-    # canary window ever re-swept.  Disjoint from canaries_r8/r9/r10
-    # by construction.  Round 12 should rotate again — don't reuse.
-    canaries_r11 = [
-        # r9 greens (staged_new_r8): first re-grade
-        "theilsen_daily_slope",
-        "seasonal_decompose_daily",
-        "anova_f_source_lengths",
-        "basket_triples_apriori",
-        "rfm_customer_segments",
-        "conversion_lift_ztest",
-        "rolling_ols_slope",
-        "dedup_pair_span_align",
-        "ccf_event_lead_lag",
-        "cuped_adjusted_lift",
-        "trimmed_mean_lengths",
-        "zipf_term_exponent",
-        "weighted_median_doclen",
-        "composite_returned_item_revenue",
-        "markov_next_event_accuracy",
-        "funnel_time_to_convert",
-        "event_trigram_topk",
-        "drift_psi_lengths",
-        "forecast_mase_seasonal_naive",
-        "matched_pairs_by_decile",
-        "max_drawdown_daily_value",
-        "text_rake_keyphrases",
-        "transition_entropy",
-        "dedup_degree_profile",
-        "orders_aging_buckets",
-        "text_bigram_perplexity",
-        "dedup_minhash_estimate_audit",
-        "ab_minimum_detectable_effect",
-        "agg_approx_distinct",
-        # r8 greens (tail_r8): first re-grade
-        "setop_bag_halves",
-        "absence_view_no_purchase",
-        "max_concurrent_activity",
-        "rolling_median_spikes",
-        "business_days_lag",
-        "ks_two_sample_lengths",
-        "emd_lengths",
-        "acf_daily_lags",
-        "correlation_event_series",
-        # greens never swept by any canary window (family diversity)
-        "multimodal_binary_meta",
-        "multimodal_frame_sample",
-        "source_csv_roundtrip",
-        "source_orc_roundtrip",
-        "filter_correlated_exists",
-        "ann_topk_lsh",
-        "agg_pivot_status_matrix",
-        "stream_stateful_trigger",
-        "rollup_hypertable_cascade",
-        "text_lang_id",
-        "udaf_weighted_avg",
-        "scalar_datetime_suite",
-    ]
-
-    # ROUND-12 STAGING (round-10 registrations beyond the already-
-    # pre-validated r11 window): these lead the round-12 window once
-    # staged_new_r10 grades green; until then they are staged OUT of
-    # every flip's backlog so they cannot displace a pre-validated
-    # window mid-round.
-    staged_new_r11: list[str] = [
-        "link_adamic_adar_topk",
-        "retrieval_ndcg_audit",
-        "kneser_ney_bigram_probs",
-        "sprt_conversion_monitor",
-    ]
-
-    # ROUND-12 PLAN (authored in round 11, per the r10 verdict #8):
-    # once staged_new_r10 grades green, the four round-11-staged
-    # newcomers lead and a FIFTH fresh canary sample fills the window.
-    # The sample sweeps 46 greens NO prior canary window ever
-    # re-graded (disjoint from canaries_r8-r11 and every staged list
-    # by construction — asserted in tests/test_registry_window.py),
-    # family-diverse: control plane, maintenance/files, relational
-    # agg/window/setop, scalars, streaming, dedup/ANN/multimodal,
-    # text/corpus, graph.  Round 13 should rotate again — the
-    # never-re-swept pool still holds ~57 more greens.
-    canaries_r12 = [
-        # control plane + SQL rendering
-        "table_identifier_parse",
-        "sql_command_render",
-        "config_drop_keys",
-        "conf_argv_explode",
-        "time_threshold_trigger",
-        # maintenance / file-inventory planning
-        "compaction_rowcount_invariant",
-        "compaction_benefit_estimate",
-        "maintenance_orphan_files",
-        "sort_compaction_zorder_quantile",
-        "files_overlap_depth",
-        "file_bloom_pruning_estimate",
-        "sink_partitioned_pruning",
-        "snapshot_retention_policies",
-        # relational: aggregates / windows / setops / subqueries
-        "agg_array_collect",
-        "agg_grouping_sets",
-        "agg_percentiles_exact",
-        "filter_scalar_subquery",
-        "join_self_snapshot_gaps",
-        "setop_except_keys",
-        "setop_union_events",
-        "window_range_frame",
-        "window_rank_distributions",
-        "window_running_filesize_cumsum",
-        "window_ntile_value_quartiles",
-        "window_interpolate_linear",
-        "unpivot_stack_metrics",
-        "rank_movers_nations",
-        "ratio_to_parent_revenue",
-        # scalar suites
-        "scalar_array_suite",
-        "scalar_json_extract",
-        "scalar_map_suite",
-        # streaming
-        "stream_events_ingest",
-        "stream_should_optimize",
-        "stream_sliding_event_rate",
-        "stream_session_user_activity",
-        # dedup / ANN / multimodal
-        "dedup_cross_source_matrix",
-        "dedup_incremental_batch",
-        "ann_recall_audit",
-        "embedding_pq_codes",
-        "multimodal_join_docs_embeddings",
-        "multimodal_resize",
-        # text / corpus / sampling / graph
-        "text_contamination_eval_overlap",
-        "text_chunk_overlap",
-        "text_pii_redact",
-        "sample_stratified_by_lang",
-        "graph_khop_reach",
-    ]
-
-    # ROUND-13 STAGING: §2 was frozen in round 12 (reference coverage
-    # complete at 324 rows since r7; every staged generation consumed),
-    # so no round-12 registrations exist — the list is empty and the
-    # round-13 window is pure canaries.
-    staged_new_r12: list[str] = []
-
-    # ROUND-13 PLAN (authored in round 12, per the r11 registry note):
-    # once staged_new_r11 (E242–E245) grades green, a SIXTH fresh
-    # canary sample fills the window — the 50 OLDEST never-re-swept
-    # greens (single driver grade, never in any canary list; computed
-    # from the CORRECTNESS_r01–r11 ledger): every remaining r3–r6
-    # green (26) plus 24 of the 28 r7 greens (the four held back for
-    # round 14 — ohlc_daily_value, cusum_changepoint_daily,
-    # ewma_daily_smoothing, cumulative_unique_users — have close
-    # family siblings already in this sample).  Disjoint from
-    # canaries_r8–r12 and every staged list by construction.  After
-    # this window the never-re-swept pool holds ~47 more greens
-    # (4 × r7, 28 × r10, 15 × r11) — round 14 should rotate again.
-    canaries_r13 = [
-        # r3 greens: format-drift sentinels, oldest grades on ledger
-        "source_json_roundtrip",
-        "text_fingerprint_rolling",
-        "text_quality_score",
-        # r4 greens
-        "anomaly_commit_rate",
-        "corpus_token_topk",
-        "corpus_version_diff",
-        "session_commit_bursts",
-        "udtf_binpack_per_table",
-        # r5 greens
-        "audit_referential_integrity",
-        "corpus_length_histogram",
-        "corpus_term_drift",
-        "embedding_label_outliers",
-        "quality_gate_adaptive",
-        "route_quarantine",
-        "sample_quality_deciles",
-        "seqlen_bucket_padding",
-        "source_token_budget",
-        "text_heuristic_filter",
-        "text_rarity_score",
-        "vocab_pair_merge_counts",
-        # r6 greens
-        "agg_incremental_maintenance",
-        "composite_top_supplier",
-        "distinct_kmv_set_ops",
-        "files_composite_predicate_skipping",
-        "stream_ohlc_daily",
-        "text_interdoc_ngram_coverage",
-        # r7 greens (24 of 28)
-        "apportion_token_budget",
-        "bollinger_breakout_days",
-        "calibration_reliability_bins",
-        "cohort_ltv_weekly",
-        "commit_seasonality_profile",
-        "densify_daily_commits",
-        "drift_chi_square_gate",
-        "event_disorder_audit",
-        "fair_share_allocation",
-        "functional_dependency_audit",
-        "join_cardinality_sampled_estimate",
-        "mannwhitney_u_lengths",
-        "merge_user_intervals",
-        "pareto_skyline_customers",
-        "quantile_normalize_lengths",
-        "rolling_distinct_users_7d",
-        "session_first_purchase_mrr",
-        "shipping_lag_percentiles",
-        "source_lang_mix_entropy",
-        "source_length_trend",
-        "source_length_zscore_outliers",
-        "text_lexical_diversity",
-        "tree_split_gini_quantity",
-        "vocab_coverage_curve",
-    ]
-
-    # ROUND-14 PLAN (authored in round 13's close, per the r13 verdict
-    # #4): the SEVENTH fresh canary sample = the 50 STALEST grades on
-    # the whole cumulative ledger (computed from CORRECTNESS_r01-r13
-    # latest-grade rounds) — finally including the three r2-era
-    # grades every prior rotation missed (agg_conditional,
-    # composite_large_volume_customers, sort_compaction_order — the
-    # last of which gets its fresh grade ON ITS NEW range-partitioned
-    # plan this round), all 19 r3 greens, all 16 r4 greens, and 12 of
-    # the 19 r5 greens (the 7 held back — bloom_membership_audit,
-    # corpus_mixture_apply, curriculum_interleave, dedup_near_verified,
-    # dedup_simhash_buckets, dedup_token_savings, split_train_val_test
-    # — have close family siblings in the sample).  After this window
-    # no grade on the ledger is older than r5; round 15 should rotate
-    # again (the r5 holds + r6 cohort lead).
-    canaries_r14 = [
-        # r2 grades — the three staleness outliers on the entire ledger
-        "agg_conditional",
-        "composite_large_volume_customers",
-        "sort_compaction_order",
-        # r3 grades (all 19)
-        "agg_pivot_status_matrix",
-        "ann_topk_ivf",
-        "ann_topk_lsh",
-        "dedup_embedding_neardup",
-        "filter_correlated_exists",
-        "multimodal_binary_meta",
-        "multimodal_feature_extract",
-        "multimodal_frame_sample",
-        "sample_deterministic",
-        "scalar_datetime_suite",
-        "scalar_math_suite",
-        "scalar_regex_suite",
-        "scalar_string_suite",
-        "setop_intersect_keys",
-        "source_csv_roundtrip",
-        "source_orc_roundtrip",
-        "text_lang_id",
-        "topk_per_group",
-        "udaf_weighted_avg",
-        # r4 grades (all 16)
-        "changelog_cdc_diff",
-        "commit_filter",
-        "commit_threshold_trigger",
-        "commits_since_last_replace",
-        "config_prefix_select",
-        "join_asof_latest_snapshot",
-        "maintenance_expire_snapshots",
-        "rollup_hypertable_cascade",
-        "snapshot_lineage_scan",
-        "snapshot_time_travel",
-        "stream_dedup_event_ids",
-        "stream_stateful_trigger",
-        "stream_watermark_latedrop",
-        "table_lookup_join",
-        "udf_tablename_parse_parity",
-        "window_lag_commit_gap",
-        # r5 grades (12 of 19, family-diverse)
-        "audit_k_anonymity",
-        "corpus_mixture_weights",
-        "dedup_near_candidates",
-        "embedding_normalize_quantize",
-        "events_scan",
-        "kmeans_assign_step",
-        "pack_sequences_token_budget",
-        "profile_table_stats",
-        "shard_assignment_balanced",
-        "text_repetition_stats",
-        "wap_publish_gate",
-        "window_forward_fill",
-    ]
-
-    # ROUND-15 PLAN (authored in round 14, same discipline as every
-    # prior window: the next round's sample is staged the round
-    # before, conditioned on THIS round's window actually grading).
-    # The EIGHTH fresh canary sample = the post-r14 stale frontier:
-    # the 7 r5 holds, all 15 r6 greens, the 4 r7 holds, and 24 of the
-    # 34 r8 greens (the 10 held back — dedup_edit1_names,
-    # dedup_incremental_neardup, dedup_prefix_filter_pairs,
-    # dedup_segment_windows, dedup_simhash_hamming,
-    # similarity_threshold_pairs, rrf_fuse_retrieval, acf_daily_lags,
-    # pipeline_rag_corpus, emd_lengths — have close family siblings in
-    # the sample).  After this window grades, no ledger entry is older
-    # than r8; round 16 rotates the r8 holds + the r9/r10 cohorts.
-    canaries_r15 = [
-        # r5 holds from the r14 sample
-        "bloom_membership_audit",
-        "corpus_mixture_apply",
-        "curriculum_interleave",
-        "dedup_near_verified",
-        "dedup_simhash_buckets",
-        "dedup_token_savings",
-        "split_train_val_test",
-        # r6 greens (all 15)
-        "cdc_apply_tombstones",
-        "composite_nation_trade_volume",
-        "dedup_containment_pairs",
-        "event_cohort_retention",
-        "event_transition_matrix",
-        "files_skipping_estimate",
-        "graph_triangle_census",
-        "join_key_skew_diagnosis",
-        "mor_deletes_read",
-        "pagerank_integer_bipartite",
-        "partition_evolution_scan",
-        "rolling_active_users",
-        "scd2_point_in_time_join",
-        "table_freshness_sla",
-        "two_tier_manifest_skipping",
-        # r7 holds from the r13 sample
-        "cumulative_unique_users",
-        "cusum_changepoint_daily",
-        "ewma_daily_smoothing",
-        "ohlc_daily_value",
-        # r8 greens (24 of 34, family-diverse)
-        "agg_pricing_summary",
-        "ann_ivfpq_recall_audit",
-        "binpack_group_assignment",
-        "bm25_topk_retrieval",
-        "composite_shipping_priority",
-        "correlation_event_series",
-        "dedup_cluster_survivors",
-        "dedup_exact_documents",
-        "dedup_ngram_jaccard",
-        "dedup_semantic_semdedup",
-        "event_funnel_conversion",
-        "explode_unnest_tokens",
-        "join_inner_orders_customer",
-        "label_noise_knn_consensus",
-        "linkage_blocked_nearest_name",
-        "merge_upsert_orders",
-        "pipeline_training_corpus",
-        "quantile_histogram_sketch",
-        "refs_aware_snapshot_expiry",
-        "scd2_user_state_intervals",
-        "should_optimize_decision",
-        "similarity_knn_join",
-        "sketch_heavy_hitters_cms",
-        "split_cluster_holdout",
-    ]
-
-    # ROUND-16 PLAN (authored in round 15, REVISED in round 16 per the
-    # r15 VERDICT "Next round #2").  The NINTH fresh canary sample is
-    # built on the re-grade-on-new-plan priority first, staleness
-    # second: the r15 optimization round rewrote EIGHT more plans that
-    # appear in no graded window (survival_km_repurchase's pivot,
-    # dq_expectations_report's fused checks, minhash_jaccard_regression
-    # / text_interdoc_ngram_coverage / text_contamination_eval_overlap
-    # / dedup_pair_span_align / dedup_degree_profile's posting-list +
-    # hashed-shingle forms, dedup_cross_source_matrix's xxhash64 key) —
-    # they take the 8 window slots previously held by never-rewritten
-    # r9 trivial scans (scan_parquet, scan_projection,
-    # scan_pushdown_filter, filter_predicates, project_arithmetic,
-    # case_when_bucket, agg_count_distinct,
-    # join_broadcast_nation_region), whose plans are untouched since
-    # their r9 green and carry the least regression risk.  The rest is
-    # the post-r15 stale frontier (all 20 remaining r8 grades, the
-    # other 13 r9 grades) plus the 9 r14/r15 skew-device fillers —
-    # after this window grades, EVERY rewritten plan carries a
-    # post-rewrite driver grade.
-    canaries_r16 = [
-        # r8 grades (all 20 remaining — the 10 r15 holds + 10 more)
-        "acf_daily_lags",
-        "dedup_edit1_names",
-        "dedup_incremental_neardup",
-        "dedup_prefix_filter_pairs",
-        "dedup_segment_windows",
-        "dedup_simhash_hamming",
-        "emd_lengths",
-        "pipeline_rag_corpus",
-        "rrf_fuse_retrieval",
-        "similarity_threshold_pairs",
-        "stream_static_enrichment",
-        "stream_tumbling_commits_per_hour",
-        "text_boilerplate_ngrams",
-        "text_quality_classifier",
-        "text_token_stats",
-        "text_winnow_fingerprints",
-        "tfidf_top_terms",
-        "topk_orders_by_price",
-        "topk_similarity_bruteforce",
-        "window_rank_orders_per_cust",
-        # r9 grades (13 of 21 — the 8 trivial scans ceded their slots)
-        "agg_rollup_by_nation_region",
-        "agg_salted_two_stage",
-        "composite_local_supplier_volume",
-        "dedup_near_clusters",
-        "join_anti_customers_without_orders",
-        "join_outer_customer_orders",
-        "join_range_events_windows",
-        "join_semi_customers_with_orders",
-        "sort_compaction_zorder",
-        "sort_global_topcustomers",
-        "stream_join_view_purchase",
-        "stream_merge_upsert",
-        "stream_session_real",
-        # r15-rewritten plans with no post-rewrite driver grade
-        # (r15 VERDICT "What's wrong #2" / "Next round #2")
-        "dedup_cross_source_matrix",
-        "dedup_degree_profile",
-        "dedup_pair_span_align",
-        "dq_expectations_report",
-        "minhash_jaccard_regression",
-        "survival_km_repurchase",
-        "text_contamination_eval_overlap",
-        "text_interdoc_ngram_coverage",
-        # re-grade-on-new-plan fillers (plan changed after last grade)
-        "abc_xyz_inventory",
-        "lift_curve_deciles",
-        "matched_pairs_by_decile",
-        "pack_sequences_token_budget",
-        "rfm_customer_segments",
-        "sessionization_gap_stats",
-        "shard_assignment_balanced",
-        "sort_compaction_zorder_quantile",
-        "udtf_binpack_per_table",
-    ]
-
-    green = registry.driver_green_names()
-    rows_only = {n for n, q in registry.QUERIES.items() if q.oracle is None}
-    backlog = [n for n in ordered if n not in green and n not in rows_only]
-
-    def _flip(window_names: list[str], regime: str, backlog: list[str]) -> None:
-        # Shared flip mechanics for the hand-authored windows: the
-        # COMPUTED backlog leads (a query added/renamed after the list
-        # was written must not be silently evicted — r7 ADVICE, low;
-        # hand-authored order wins for names present in both), the
-        # canaries fill the rest, and rotation can never evict them.
-        extra = set(backlog) - set(window_names)
-        if extra:
-            import warnings
-
-            warnings.warn(
-                f"{regime} flip: never-green backlog contains names "
-                f"outside the hand-authored window: {sorted(extra)}; "
-                "they are appended to the window tail",
-                RuntimeWarning,
-                stacklevel=3,
-            )
-        backlog_set = set(backlog)
-        lead = [n for n in window_names if n in backlog_set]
-        lead += [n for n in backlog if n not in set(lead)]
-        window = lead + [n for n in window_names if n not in set(lead)]
-        rest = [n for n in registry.QUERIES if n not in set(window)]
-        registry.demote(*(window + rest))
-        registry.rotate_graded(green | rows_only, pinned=set(window))
-
-    staged_out = (
-        set(staged_new_r8)
-        | set(staged_new_r9)
-        | set(staged_new_r10)
-        | set(staged_new_r11)
-        | set(staged_new_r12)
-        | set(reoracled_r9)
-    )
-    ledger = registry.driver_latest_grade_round()
-    green_ledger = registry.driver_latest_green_round()
-
-    def _graded_green(names: list[str], rnd: int, regime: str) -> bool:
-        # A ledger-keyed regime flip requires the window's round to
-        # have graded AND every canary's latest grade to be GREEN (r14
-        # ADVICE, low): driver_latest_grade_round counts red rows too,
-        # so without the green check a canary that regressed red would
-        # advance the window and, being cumulatively green from an
-        # earlier round, silently drop out of all future grading.
-        # Holding the flip keeps the prior window — which contains the
-        # regressed query — live, so it re-grades next round.
-        if not all(ledger.get(n, 0) >= rnd for n in names):
-            return False
-        red = [n for n in names if green_ledger.get(n, 0) < rnd]
-        if red:
-            import warnings
-
-            warnings.warn(
-                f"{regime} flip held: canaries graded RED in round {rnd}: "
-                f"{sorted(red)}; the prior window stays live so they "
-                "re-grade",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            return False
-        return True
-
-    if _graded_green(canaries_r15, 15, "round-16"):
-        # ROUND-16 REGIME: the r15 canary sample has been driver-graded
-        # green; the ninth fresh sample IS the window.
-        _flip(canaries_r16, "round-16", backlog)
-    elif _graded_green(canaries_r14, 14, "round-15"):
-        # ROUND-15 REGIME: the r14 canary sample has been driver-graded
-        # (ledger fact); the eighth fresh sample IS the window.
-        _flip(canaries_r15, "round-15", backlog)
-    elif all(ledger.get(n, 0) >= 13 for n in canaries_r13):
-        # ROUND-14 REGIME: the r13 canary sample has been driver-graded
-        # (ledger fact, not just cumulative green — no staged-newcomer
-        # generation is left to discriminate rounds, so the flip keys
-        # off driver_latest_grade_round).  The seventh fresh canary
-        # sample — the ledger's 50 stalest — IS the window.
-        _flip(canaries_r14, "round-14", backlog)
-    elif not set(staged_new_r11) - green:
-        # ROUND-13 REGIME: the r12 window has been driver-graded (every
-        # round-11-staged newcomer green).  No round-12 registrations
-        # exist (§2 frozen), so the sixth fresh canary sample IS the
-        # window.
-        pending_new = [
-            n for n in staged_new_r12 if n not in green and n in registry.QUERIES
-        ]
-        _flip(pending_new + canaries_r13, "round-13", backlog)
-    elif not set(staged_new_r10) - green:
-        # ROUND-12 REGIME: the r11 window has been driver-graded (every
-        # round-10-staged newcomer green), so the four round-11-staged
-        # newcomers lead and the FIFTH fresh canary sample fills the
-        # window.  Every staged generation is consumed after this flip,
-        # so nothing is staged out of the backlog.
-        pending_new = [
-            n for n in staged_new_r11 if n not in green and n in registry.QUERIES
-        ]
-        _flip(pending_new + canaries_r12, "round-12", backlog)
-    elif not set(staged_new_r9) - green:
-        # ROUND-11 REGIME: the r10 window has been driver-graded (every
-        # round-9-staged newcomer green), so the round-10-staged
-        # newcomers lead and the FOURTH fresh canary sample — the
-        # r8/r9 green slices' first re-grade — fills the window.
-        pending_new = [
-            n for n in staged_new_r10 if n not in green and n in registry.QUERIES
-        ]
-        _flip(
-            pending_new + canaries_r11,
-            "round-11",
-            [n for n in backlog if n not in set(staged_new_r11)],
-        )
-    elif not set(staged_new_r8) - green:
-        # ROUND-10 REGIME: the r9 window has been driver-graded (every
-        # round-8-staged newcomer green), so the round-9-staged
-        # newcomers lead (plus any re-oracled name the r9 window
-        # missed) and the THIRD fresh canary sample fills the window.
-        # Round-10-registered newcomers are staged out until round 11.
-        pending_new = [n for n in staged_new_r9 + reoracled_r9 if n not in green]
-        _flip(
-            pending_new + canaries_r10,
-            "round-10",
-            [
-                n
-                for n in backlog
-                if n not in set(staged_new_r10) | set(staged_new_r11)
-            ],
-        )
-    elif not set(tail_r8) - green:
-        # ROUND-9 REGIME: the r8 window has been driver-graded (every
-        # tail name green), so the round-8-staged newcomers plus the
-        # re-oracled C20 row plus the FRESH canary sample rotate in —
-        # re-using the r8 list would re-grade the same 41 queries
-        # forever and never sweep the other families for format drift.
-        # Round-9-staged AND later-staged newcomers are excluded from
-        # this flip's backlog so they cannot displace the
-        # pre-validated window.
-        pending_new = [n for n in staged_new_r8 + reoracled_r9 if n not in green]
-        _flip(
-            pending_new + canaries_r9,
-            "round-9",
-            [
-                n
-                for n in backlog
-                if n
-                not in set(staged_new_r9) | set(staged_new_r10) | set(staged_new_r11)
-            ],
-        )
-    elif len(backlog) - len(set(backlog) & staged_out) <= len(tail_r8):
-        # ROUND-8 REGIME: the 9-name never-graded tail leads, the 41
-        # pinned canaries fill the window; later-staged newcomers
-        # wait at positions 51+ for their own rotation.
-        _flip(
-            tail_r8 + [n for n in canaries_r8 if n not in set(tail_r8)],
-            "round-8",
-            [n for n in backlog if n not in staged_out],
-        )
-    else:
-        registry.rotate_graded(green | rows_only)
-
+    ordered = {n: registry.QUERIES[n] for n in sorted(registry.QUERIES, key=key)}
+    registry.QUERIES.clear()
+    registry.QUERIES.update(ordered)
     _LOADED = True
-

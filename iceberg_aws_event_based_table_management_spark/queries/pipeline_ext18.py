@@ -1,8 +1,7 @@
 """Tier D (part 19) — robust trends, decomposition, and experiment
 stats (SURVEY.md §2-E E171-E178).
 
-Eighteenth batch, registered in round 8 and STAGED for the round-9
-grading window (queries/__init__.py staged_new_r8): robust trend
+Eighteenth batch, registered in round 8: robust trend
 estimation (Theil-Sen, rolling OLS), additive seasonal decomposition,
 a one-way ANOVA omnibus test, A-priori frequent triples, RFM customer
 segmentation, a two-proportion conversion z-test, and near-dup span

@@ -1,8 +1,7 @@
 """Tier D (part 25) — robust moments and rank/association statistics
 (SURVEY.md §2-E E199-E205).
 
-Twenty-fourth batch, registered in round 9 and STAGED for the
-round-10 grading window (staged_new_r9): MinHash-vs-exact-Jaccard
+Twenty-fourth batch, registered in round 9: MinHash-vs-exact-Jaccard
 calibration REGRESSION (the fitted-line extension of E197's per-pair
 audit), winsorized revenue stats (clamp complement of E181's trim),
 the Grubbs max-deviation outlier statistic per daily series, the

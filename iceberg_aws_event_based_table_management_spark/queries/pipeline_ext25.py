@@ -1,8 +1,7 @@
 """Tier D (part 26) — model-quality curves, distribution audits, and
 demand analytics (SURVEY.md §2-E E206-E212).
 
-Twenty-fifth batch, registered in round 9 and STAGED for the round-10
-grading window (staged_new_r9): the cumulative lift/gains curve by
+Twenty-fifth batch, registered in round 9: the cumulative lift/gains curve by
 score decile, the full Gini-impurity split scan over a value grid,
 per-source KS distance against the rest of the corpus, pairwise
 vocabulary overlap coefficients, Holt's linear-trend exponential

@@ -1,8 +1,7 @@
 """Tier D (part 27) — econometrics on the order stream and
 lexical-statistics text QA (SURVEY.md §2-E E213-E219).
 
-Twenty-sixth batch, registered in round 9 and STAGED for the round-10
-grading window (staged_new_r9): fixed-point log-log price-elasticity
+Twenty-sixth batch, registered in round 9: fixed-point log-log price-elasticity
 OLS per brand, brand share-shift (cannibalization) across the early/
 late halves of the order stream, level-1 binary-segmentation
 changepoint detection on the daily series, session gap/duration

@@ -2,8 +2,7 @@
 resampling, calibration, and inequality/linkage audits (SURVEY.md
 §2-E E220-E226).
 
-Twenty-seventh batch, registered in round 9 and STAGED for the
-round-10 grading window (staged_new_r9): the MinHash band/row tuning
+Twenty-seventh batch, registered in round 9: the MinHash band/row tuning
 audit (precision/recall per (bands, rows) configuration), Neyman
 optimal sample allocation across strata, Benjamini-Hochberg FDR
 correction over per-source mean tests, a DETERMINISTIC Poisson

@@ -2,9 +2,7 @@
 tests, trend/drift detectors, and collinearity diagnostics (SURVEY.md
 §2-E E227-E231).
 
-Twenty-eighth batch, registered late in round 9 and STAGED for the
-ROUND-11 grading window (staged_new_r10 — the round-10 window is
-already sized by staged_new_r9 + canaries_r10): Good-Turing adjusted
+Twenty-eighth batch, registered late in round 9: Good-Turing adjusted
 counts and unseen-mass estimate from the frequency spectrum, Welch's
 unequal-variance t-test with Cohen's d, the Mann-Kendall
 (nonparametric) trend test with tie-corrected variance, the

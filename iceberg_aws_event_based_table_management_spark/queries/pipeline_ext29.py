@@ -2,8 +2,7 @@
 randomness diagnostics on the event/order series (SURVEY.md §2-E
 E232-E236).
 
-Twenty-ninth batch, registered late in round 9 and STAGED for the
-ROUND-11 grading window (staged_new_r10): the rescaled-range Hurst
+Twenty-ninth batch, registered late in round 9: the rescaled-range Hurst
 exponent (long-memory gauge), Gumbel block-maxima fitting with a
 return level (extreme-value capacity planning), the Cp/Cpk process-
 capability indices on shipping lag, the Wald-Wolfowitz runs test for

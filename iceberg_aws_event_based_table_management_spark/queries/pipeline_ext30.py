@@ -1,8 +1,7 @@
 """Tier D (part 31) — divergence, forecast-quality, concentration,
 and higher-moment profiles (SURVEY.md §2-E E237-E240).
 
-Thirtieth batch, registered late in round 9 and STAGED for the
-ROUND-11 grading window (staged_new_r10): per-source KL divergence
+Thirtieth batch, registered late in round 9: per-source KL divergence
 against the corpus length distribution (the directed companion of
 E188's symmetric-ish PSI), Theil's U2 forecast-quality ratio for the
 seasonal-naive forecaster (the relative-accuracy complement of E189's

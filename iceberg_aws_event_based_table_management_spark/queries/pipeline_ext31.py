@@ -1,9 +1,7 @@
 """Tier D (part 31) — graph link prediction, retrieval quality,
 LM smoothing, and sequential testing (SURVEY.md §2-E E242-E245).
 
-Round-10 batch, staged for the ROUND-12 grading window
-(staged_new_r11 in queries/__init__.py — the pre-validated r11 window
-must not be displaced): Adamic-Adar link prediction over the
+Round-10 batch: Adamic-Adar link prediction over the
 customer-part bipartite graph, an nDCG@10 retrieval audit with
 integer position weights, Kneser-Ney absolutely-discounted bigram
 probabilities in pure rational arithmetic, and a Wald SPRT conversion

@@ -39,83 +39,17 @@ def register(name: str, *, oracle: str | None, tier: str, doc: str = "") -> Call
     return deco
 
 
-def demote(*names: str) -> None:
-    """Move already-verified queries to the back of registration order.
+def grading_ledger() -> dict[str, tuple[int, int]]:
+    """name -> (latest_grade_round, latest_green_round) from the repo's
+    CORRECTNESS_r*.json files, one grading record per round;
+    0 means no such row.  Each file is read once.
 
-    Registration order is the driver's grading order; demoting queries
-    whose correctness is already on record keeps the verification
-    window pointed at not-yet-verified entries.
-
-    Unknown names warn-and-skip instead of raising: the hand-authored
-    window lists in queries/__init__.py reference queries by string,
-    and a rename must degrade to a slightly-off window order — never
-    crash load() and take the whole driver contract (entry/queries/
-    oracle_sql) down with it.
+    Green = value-hash match with no error.  A query registered WITHOUT
+    an oracle can only ever earn the weaker rows-only row, so
+    rows_match counts for it.  A file that exists but cannot be parsed
+    warns and is excluded: it changes the next window's composition,
+    which must not happen silently.
     """
-    import warnings
-
-    for n in names:
-        if n not in QUERIES:
-            warnings.warn(
-                f"demote: unknown query name {n!r} (renamed or removed?) — "
-                "skipped; fix the hand-authored window list",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            continue
-        QUERIES[n] = QUERIES.pop(n)
-
-
-def driver_green_names(records: list[dict[str, dict]] | None = None) -> set[str]:
-    """Names with a GREEN driver correctness row on record.
-
-    Reads the repo's CORRECTNESS_r*.json files (the driver's per-round
-    grading output) unless `records` is injected.  Green = value-hash
-    match with no error; a query registered WITHOUT an oracle can only
-    ever earn the weaker rows-only row, so rows_match counts for it —
-    otherwise it would squat in every future grading window.
-    """
-    if records is None:
-        import glob
-        import json
-        import os
-        import warnings
-
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        records = []
-        for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-            try:
-                with open(path) as fh:
-                    records.append(json.load(fh))
-            except (OSError, ValueError) as exc:
-                # A grading record that exists but cannot be parsed
-                # changes the next window's composition; that must not
-                # happen silently (round-7 ADVICE).
-                warnings.warn(
-                    f"unparseable driver correctness record {path!r}: {exc}; "
-                    "its greens are excluded from grading rotation",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-                continue
-    green: set[str] = set()
-    for rec in records:
-        if not isinstance(rec, dict):
-            continue
-        for name, row in rec.items():
-            if not isinstance(row, dict) or row.get("err"):
-                continue
-            rows_only = name in QUERIES and QUERIES[name].oracle is None
-            if row.get("hash_match") or (rows_only and row.get("rows_match")):
-                green.add(name)
-    return green
-
-
-def _iter_driver_records(max_round: int | None):
-    """(round, record) pairs from the repo's CORRECTNESS_r*.json files,
-    skipping unparseable ones with a warning (round-7 ADVICE: a grading
-    record that exists but cannot be read changes the next window's
-    composition, which must not happen silently)."""
     import glob
     import json
     import os
@@ -123,82 +57,35 @@ def _iter_driver_records(max_round: int | None):
     import warnings
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
+    ledger: dict[str, tuple[int, int]] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         if not m:
             continue
         rnd = int(m.group(1))
-        if max_round is not None and rnd > max_round:
-            # test hook: reconstruct an earlier round's ledger view,
-            # mirroring driver_green_names' records injection
-            continue
         try:
             with open(path) as fh:
                 rec = json.load(fh)
         except (OSError, ValueError) as exc:
             warnings.warn(
                 f"unparseable driver correctness record {path!r}: {exc}; "
-                "excluded from the grade-freshness ledger",
+                "excluded from the grading ledger",
                 RuntimeWarning,
-                stacklevel=3,
+                stacklevel=2,
             )
             continue
-        if isinstance(rec, dict):
-            yield rnd, rec
-
-
-def driver_latest_grade_round(max_round: int | None = None) -> dict[str, int]:
-    """name -> the highest round number whose CORRECTNESS_r*.json
-    contains ANY grade row for it (green or not).  The grading-window
-    regime flips key off this ledger when no staged-newcomer set is
-    left to discriminate rounds (every generation was consumed by r13):
-    'was the r13 canary sample actually graded in round >= 13' is a
-    fact only the per-round files carry, not the cumulative green set.
-    """
-    latest: dict[str, int] = {}
-    for rnd, rec in _iter_driver_records(max_round):
+        if not isinstance(rec, dict):
+            continue
         for name, row in rec.items():
-            if isinstance(row, dict):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def driver_latest_green_round(max_round: int | None = None) -> dict[str, int]:
-    """name -> the highest round number whose CORRECTNESS_r*.json
-    contains a GREEN grade row for it (same green definition as
-    driver_green_names: hash match with no error, or rows-only match
-    for oracle-less queries).  The regime flips require this to reach
-    the window's round (r14 ADVICE, low): keying the flip off ANY
-    grade row would let a canary that regressed RED advance the window
-    and silently drop out of all future grading — requiring green
-    keeps the regime (and so the regressed query) in the window until
-    it re-grades clean."""
-    latest: dict[str, int] = {}
-    for rnd, rec in _iter_driver_records(max_round):
-        for name, row in rec.items():
-            if not isinstance(row, dict) or row.get("err"):
+            if not isinstance(row, dict):
                 continue
             rows_only = name in QUERIES and QUERIES[name].oracle is None
-            if row.get("hash_match") or (rows_only and row.get("rows_match")):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def rotate_graded(green: set[str], *, pinned: frozenset[str] | set[str] = frozenset()) -> None:
-    """Self-maintaining grading rotation: stably demote every query
-    that already has a green driver row, so the first-50 window always
-    points at never-green entries in their staged order — no manual
-    window edit needed between rounds.
-
-    `pinned` names are exempt from demotion even when green: the
-    hand-authored window wins for them.  This is what makes regression
-    canaries possible (deliberately re-grading known-green queries to
-    catch driver-format drift or plan-rewrite regressions — the r4
-    lesson); without it a query could never be re-graded after its
-    first green row (round-7 ADVICE, medium).
-    """
-    for n in [n for n in QUERIES if n in green and n not in pinned]:
-        QUERIES[n] = QUERIES.pop(n)
+            green = not row.get("err") and bool(
+                row.get("hash_match") or (rows_only and row.get("rows_match"))
+            )
+            graded, greened = ledger.get(name, (0, 0))
+            ledger[name] = (max(graded, rnd), max(greened, rnd) if green else greened)
+    return ledger
 
 
 def query_map() -> dict[str, QueryFn]:

@@ -42,7 +42,12 @@ def test_compact_headline_line_is_last_and_minimal():
     last = payloads[-1]
     # the driver-parsed record: exactly the compact contract keys, no
     # per-run transparency fields that can overflow the stdout tail
-    assert set(last) == {"metric", "value", "unit", "queries", "sf"}, last
+    # cpus / shuffle_partitions: the effective parallelism the timings
+    # were taken at, so a reader can tell a run that ignored the
+    # requested core count from a slow one
+    assert set(last) == {
+        "metric", "value", "unit", "queries", "sf", "cpus", "shuffle_partitions"
+    }, last
     assert "queries_runs" not in last and "queries_cold" not in last
     # the verbose transparency record exists and comes BEFORE it
     assert any("queries_runs" in p for p in payloads[:-1]), payloads

@@ -278,3 +278,20 @@ def test_zorder_quantile_approx_above_gate(spark, sf_dir, monkeypatch):
     # same grouping shape (boundaries shift within sketch error)
     rows = df.collect()
     assert rows and all(r.n_rows > 0 for r in rows)
+
+
+def test_quantile_sketch_fused_branch_matches_three_pass(spark, sf_dir, monkeypatch):
+    """The fused one-scan branch of quantile_histogram_sketch engages
+    only past 2M lineitem footer rows, so no graded sf runs it.  Force
+    it and require the exact rows of the three-pass shape."""
+    import iceberg_aws_event_based_table_management_spark as engine
+
+    engine.load_all_queries()
+    fn = engine.query_map()["quantile_histogram_sketch"]
+    three_pass = fn(spark, sf_dir)
+    monkeypatch.setattr(gates, "corpus_exceeds", lambda *a, **k: True)
+    fused = fn(spark, sf_dir)
+    # fused derives hist and n from the checkpointed value counts
+    assert _analyzed(fused).count("LogicalRDD") > _analyzed(three_pass).count("LogicalRDD")
+    assert fused.columns == three_pass.columns
+    assert sorted(fused.collect()) == sorted(three_pass.collect())

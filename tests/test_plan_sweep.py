@@ -136,12 +136,23 @@ def _executed(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_no_cartesian_products(spark, sf_dir, qmap):
+@pytest.fixture(scope="module")
+def plans(spark, sf_dir, qmap) -> dict[str, str]:
+    """name -> executedPlan string of every swept query under the
+    default session config, shared by the four default-plan rules
+    below.  Each query is built and planned once: building can run
+    eager footer, checkpoint and CC gates, the bulk of the sweep's
+    cost."""
+    return {
+        name: _executed(fn(spark, sf_dir))
+        for name, fn in qmap.items()
+        if name not in SKIP
+    }
+
+
+def test_no_cartesian_products(plans):
     bad = {}
-    for name, fn in qmap.items():
-        if name in SKIP:
-            continue
-        plan = _executed(fn(spark, sf_dir))
+    for name, plan in plans.items():
         if "CartesianProduct" in plan:
             bad[name] = "CartesianProduct"
         elif "BroadcastNestedLoopJoin" in plan and name not in NESTED_LOOP_OK:
@@ -149,13 +160,11 @@ def test_no_cartesian_products(spark, sf_dir, qmap):
     assert not bad, f"cartesian-family joins leaked into: {bad}"
 
 
-def test_no_row_at_a_time_python(spark, sf_dir, qmap):
+def test_no_row_at_a_time_python(plans):
     bad = [
         name
-        for name, fn in qmap.items()
-        if name not in SKIP
-        and name not in ROW_PYTHON_OK
-        and "BatchEvalPython" in _executed(fn(spark, sf_dir))
+        for name, plan in plans.items()
+        if name not in ROW_PYTHON_OK and "BatchEvalPython" in plan
     ]
     assert not bad, f"row-at-a-time Python UDF in the hot path of: {bad}"
 
@@ -282,12 +291,11 @@ def test_no_corpus_broadcast_above_gate(spark, sf_dir, qmap, monkeypatch):
     )
 
 
-def test_no_unbounded_global_sorts(spark, sf_dir, qmap):
+def test_no_unbounded_global_sorts(plans):
     bad = []
-    for name, fn in qmap.items():
-        if name in SKIP or name in GLOBAL_SORT_OK:
+    for name, plan in plans.items():
+        if name in GLOBAL_SORT_OK:
             continue
-        plan = _executed(fn(spark, sf_dir))
         for line in plan.splitlines():
             s = line.strip().lstrip("+-*: ")
             # global sort = Sort over a rangepartitioned exchange; local
@@ -411,7 +419,7 @@ def _unpartitioned_windows(plan: str) -> list[str]:
     return out
 
 
-def test_no_unpartitioned_windows_over_data(spark, sf_dir, qmap):
+def test_no_unpartitioned_windows_over_data(plans):
     """The r13-verdict incident class: a window with no PARTITION BY
     over a data-proportional relation plans as Exchange
     SinglePartition -> Sort -> Window — one task sorts (and holds)
@@ -423,10 +431,10 @@ def test_no_unpartitioned_windows_over_data(spark, sf_dir, qmap):
     unpartitioned window orders on the `_pid` sentinel over a bounded
     count frame) or carry a reviewed bounded-input allowlist entry."""
     bad = {}
-    for name, fn in qmap.items():
-        if name in SKIP or name in UNPART_WINDOW_OK:
+    for name, plan in plans.items():
+        if name in UNPART_WINDOW_OK:
             continue
-        hits = _unpartitioned_windows(_executed(fn(spark, sf_dir)))
+        hits = _unpartitioned_windows(plan)
         if hits:
             bad[name] = hits[0]
     assert not bad, f"unpartitioned window over unreviewed input: {bad}"

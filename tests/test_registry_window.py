@@ -1,941 +1,127 @@
-"""Grading-window mechanics: rotation, pinning (regression canaries),
-and the hand-authored round-8 regime flip.
+"""Grading rotation: load() orders the registry by one key computed
+from the grading ledger (queries/__init__.py docstring); each grading
+round checks the first 50 names.
 
-These are driver-contract tests — no SparkSession needed.  They lock
-the round-7 ADVICE fix (rotate_graded must not be able to evict a
-hand-pinned canary) and the r7 verdict's task 4 (the round-8 window =
-9 never-graded tail names + 41 pinned canaries, flipped automatically
-once the staged backlog is green).
+Registry-contract tests — no SparkSession needed.  Ledgers are injected
+by replacing registry.grading_ledger, so no test depends on which
+CORRECTNESS_r*.json files happen to be on disk except the replay,
+which starts from whatever the real ledger holds.
 """
 
 from __future__ import annotations
 
-import re
+import glob
+import json
 import warnings
-from pathlib import Path
 
 import pytest
 
-from iceberg_aws_event_based_table_management_spark import registry
+import iceberg_aws_event_based_table_management_spark as engine
+from iceberg_aws_event_based_table_management_spark import queries, registry
 
-QUERIES_INIT = (
-    Path(__file__).resolve().parents[1]
-    / "iceberg_aws_event_based_table_management_spark"
-    / "queries"
-    / "__init__.py"
-)
-
-TAIL_R8 = [
-    "setop_bag_halves",
-    "absence_view_no_purchase",
-    "max_concurrent_activity",
-    "rolling_median_spikes",
-    "business_days_lag",
-    "ks_two_sample_lengths",
-    "emd_lengths",
-    "acf_daily_lags",
-    "correlation_event_series",
-]
-
-
-def _hand_authored(list_name: str) -> list[str]:
-    src = QUERIES_INIT.read_text()
-    m = re.search(rf"{list_name}(?:: list\[str\])? = \[(.*?)\]", src, re.S)
-    assert m, f"{list_name} not found in queries/__init__.py"
-    return re.findall(r'"([a-z0-9_]+)"', m.group(1))
+WINDOW = 50
 
 
 @pytest.fixture()
-def loaded():
-    import iceberg_aws_event_based_table_management_spark as engine
-
+def order_for(monkeypatch):
+    """Registry order load() computes from an injected ledger."""
     engine.load_all_queries()
-    return registry
-
-
-def test_rotate_graded_pinned_names_survive(loaded):
-    """A green name listed as pinned must keep its manual position —
-    this is what makes deliberate canary re-grading possible."""
-    names = list(registry.QUERIES)
-    head = names[0]
-    # Pretend the head of the window is already green; without pinning
-    # it would rotate to the back.
     snapshot = dict(registry.QUERIES)
-    try:
-        registry.rotate_graded({head}, pinned={head})
-        assert list(registry.QUERIES)[0] == head
-        registry.rotate_graded({head})
-        assert list(registry.QUERIES)[-1] == head
-    finally:
-        registry.QUERIES.clear()
-        registry.QUERIES.update(snapshot)
+
+    def compute(ledger: dict[str, tuple[int, int]]) -> list[str]:
+        monkeypatch.setattr(registry, "grading_ledger", lambda: ledger)
+        monkeypatch.setattr(queries, "_LOADED", False)
+        queries.load()
+        return list(registry.QUERIES)
+
+    yield compute
+    registry.QUERIES.clear()
+    registry.QUERIES.update(snapshot)
 
 
-def test_r8_window_names_all_registered(loaded):
-    tail = _hand_authored("tail_r8")
-    canaries = _hand_authored("canaries_r8")
-    assert tail == TAIL_R8
-    assert len(canaries) == 41
-    assert len(set(canaries)) == 41
-    assert not set(canaries) & set(tail)
-    for n in tail + canaries:
-        assert n in registry.QUERIES, f"unregistered window name {n}"
+def _all_green(rnd: int) -> dict[str, tuple[int, int]]:
+    return {n: (rnd, rnd) for n in registry.QUERIES}
 
 
-def _real_records(max_round: int | None = None) -> list[dict]:
-    """The repo's actual CORRECTNESS_r*.json contents — the same
-    inputs the driver-facing load() consumes in production.  The
-    optional `max_round` cut reconstructs an EARLIER round's view
-    (the driver appends one record per round)."""
-    import glob
-    import json
-
-    root = Path(__file__).resolve().parents[1]
-    records = []
-    for path in sorted(glob.glob(str(root / "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if max_round is not None and m and int(m.group(1)) > max_round:
-            continue
-        with open(path) as fh:
-            records.append(json.load(fh))
-    assert records, "no CORRECTNESS records found — did the layout change?"
-    return records
-
-
-def _expected_window(green: set[str], ledger: dict[str, int] | None = None) -> list[str]:
-    """Mirror of load()'s regime selection, derived from a green set —
-    NOT from a frozen round number.  The r8 verdict's headline defect
-    was a regime assertion hard-coded to round 8's composition: the
-    driver mutates the records directory every round, so any frozen
-    expectation is guaranteed to go stale the moment it succeeds.
-
-    From round 14 on the discriminator is the grade-freshness LEDGER
-    (driver_latest_grade_round) — every staged-newcomer generation was
-    consumed by r13, so 'was the r13 canary sample graded in a round
-    >= 13' is the only fact that separates r14+ from r13.  From round
-    15 on the flip also requires the window's grades to be GREEN
-    (driver_latest_green_round — a red canary holds the prior window
-    live so it re-grades)."""
-    if ledger is None:
-        ledger = registry.driver_latest_grade_round()
-    green_ledger = registry.driver_latest_green_round()
-
-    def _graded_green(names: list[str], rnd: int) -> bool:
-        return all(
-            ledger.get(n, 0) >= rnd and green_ledger.get(n, 0) >= rnd
-            for n in names
-        )
-
-    if _graded_green(_hand_authored("canaries_r15"), 15):
-        return _hand_authored("canaries_r16")
-    if _graded_green(_hand_authored("canaries_r14"), 14):
-        return _hand_authored("canaries_r15")
-    if all(ledger.get(n, 0) >= 13 for n in _hand_authored("canaries_r13")):
-        return _hand_authored("canaries_r14")
-    staged_r8 = _hand_authored("staged_new_r8")
-    staged_r9 = _hand_authored("staged_new_r9")
-    staged_r10 = _hand_authored("staged_new_r10")
-    staged_r11 = _hand_authored("staged_new_r11")
-    staged_r12 = _hand_authored("staged_new_r12")
-    reoracled = _hand_authored("reoracled_r9")
-    if not set(staged_r11) - green:
-        lead = [
-            n for n in staged_r12 if n not in green and n in registry.QUERIES
-        ]
-        return lead + _hand_authored("canaries_r13")
-    if not set(staged_r10) - green:
-        lead = [
-            n for n in staged_r11 if n not in green and n in registry.QUERIES
-        ]
-        return lead + _hand_authored("canaries_r12")
-    if not set(staged_r9) - green:
-        lead = [
-            n for n in staged_r10 if n not in green and n in registry.QUERIES
-        ]
-        return lead + _hand_authored("canaries_r11")
-    if not set(staged_r8) - green:
-        lead = [n for n in staged_r9 + reoracled if n not in green]
-        return lead + _hand_authored("canaries_r10")
-    if not set(TAIL_R8) - green:
-        lead = [n for n in staged_r8 + reoracled if n not in green]
-        return lead + _hand_authored("canaries_r9")
-    return TAIL_R8 + _hand_authored("canaries_r8")
-
-
-def test_regime_flip_is_live(loaded, monkeypatch):
-    """With the REAL driver records on disk, load() must hand the
-    first-50 window to whichever regime those records imply — the
-    expectation is DERIVED from the records (via the same green-set
-    arithmetic the engine uses), so the driver landing next round's
-    CORRECTNESS file advances the expectation instead of breaking it.
-
-    No green-set monkeypatching: this asserts exactly what the driver
-    will grade next round."""
-    import iceberg_aws_event_based_table_management_spark.queries as q
-
-    expected = _expected_window(registry.driver_green_names())
-    snapshot = dict(registry.QUERIES)
-    monkeypatch.setattr(q, "_LOADED", False)
-    try:
-        q.load()
-        names = list(registry.QUERIES)
-        assert names[: min(50, len(expected))] == expected[:50]
-        # Rows-only registrations must never burn a grading slot.
-        rows_only = {n for n, qq in registry.QUERIES.items() if qq.oracle is None}
-        assert not rows_only & set(names[:50])
-    finally:
-        registry.QUERIES.clear()
-        registry.QUERIES.update(snapshot)
-        monkeypatch.setattr(q, "_LOADED", True)
-
-
-def test_r8_regime_with_r7_records(loaded, monkeypatch):
-    """Pin the ROUND-8 regime against the round-7 record set (real
-    r1-r7 files): tail_r8 leads, canaries_r8 fill — the composition
-    the driver actually graded in round 8, reconstructed rather than
-    frozen against the live records directory."""
-    import iceberg_aws_event_based_table_management_spark.queries as q
-
-    records = _real_records(max_round=7)
-    real_fn = registry.driver_green_names
-    monkeypatch.setattr(
-        registry, "driver_green_names", lambda recs=None: real_fn(records=records)
-    )
-    # pre-r13 reconstruction: cap the grade-freshness ledger the same
-    # way the record set is capped, so the round-14 regime (which keys
-    # off "canaries_r13 graded in round >= 13") cannot fire
-    real_ledger = registry.driver_latest_grade_round
-    monkeypatch.setattr(
-        registry,
-        "driver_latest_grade_round",
-        lambda max_round=None: real_ledger(max_round=12),
-    )
-    snapshot = dict(registry.QUERIES)
-    monkeypatch.setattr(q, "_LOADED", False)
-    try:
-        q.load()
-        names = list(registry.QUERIES)
-        canaries = _hand_authored("canaries_r8")
-        assert names[:9] == TAIL_R8
-        assert names[9:50] == canaries
-        assert "dedup_cluster_survivors" in names[:50]
-        assert "should_optimize_decision" in names[:50]
-        # Never graded before round 9 by design: the round-9-staged
-        # newcomers and the re-oracled C20 row must wait at 51+.
-        assert "agg_approx_distinct" not in names[:50]
-        for n in _hand_authored("staged_new_r8"):
-            assert n not in names[:50]
-    finally:
-        registry.QUERIES.clear()
-        registry.QUERIES.update(snapshot)
-        monkeypatch.setattr(q, "_LOADED", True)
-
-
-def test_r9_flip_after_tail_greens(loaded, monkeypatch):
-    """Real records plus a synthetic r8 record greening the 9 tail
-    names — exactly what round 9's load() saw once CORRECTNESS_r08
-    landed: the regime must rotate to the FRESH canaries_r9 window
-    (r7 verdict #5), pinned against rotation, not re-grade the r8
-    canaries forever.
-
-    The record set is PINNED to the r7 view (max_round=7): this test
-    reconstructs a historical flip, so reading the live records
-    directory would let every later driver round (r9's real record
-    greens the r8-staged names and advances the regime past the one
-    under test) redden it — the exact time bomb the r8 and r9
-    verdicts both flagged."""
-    import iceberg_aws_event_based_table_management_spark.queries as q
-
-    synthetic_r8 = {
-        n: {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
-        for n in TAIL_R8
-    }
-    records = _real_records(max_round=7) + [synthetic_r8]
-    real_fn = registry.driver_green_names
-    monkeypatch.setattr(
-        registry, "driver_green_names", lambda recs=None: real_fn(records=records)
-    )
-    # pre-r13 reconstruction: cap the grade-freshness ledger the same
-    # way the record set is capped, so the round-14 regime (which keys
-    # off "canaries_r13 graded in round >= 13") cannot fire
-    real_ledger = registry.driver_latest_grade_round
-    monkeypatch.setattr(
-        registry,
-        "driver_latest_grade_round",
-        lambda max_round=None: real_ledger(max_round=12),
-    )
-    snapshot = dict(registry.QUERIES)
-    monkeypatch.setattr(q, "_LOADED", False)
-    try:
-        q.load()
-        names = list(registry.QUERIES)
-        canaries = _hand_authored("canaries_r9")
-        staged = _hand_authored("staged_new_r8")
-        lead = staged + _hand_authored("reoracled_r9")
-        assert len(canaries) == 50
-        # Never-graded round-8 newcomers lead (plus the re-oracled C20
-        # row), fresh canaries fill the window behind them (the driver
-        # grades the first 50).
-        assert names[: len(lead)] == lead
-        assert names[len(lead) : len(lead) + 50] == canaries
-        # The round-8/9 rewrites that no earlier window re-graded are
-        # the first canaries.
-        assert canaries[:4] == [
-            "stream_join_view_purchase",
-            "stream_merge_upsert",
-            "dedup_near_clusters",
-            "stream_session_real",
-        ]
-        # The re-oracled row now EARNS a grading slot (r8 verdict #3).
-        assert "agg_approx_distinct" in names[:50]
-    finally:
-        registry.QUERIES.clear()
-        registry.QUERIES.update(snapshot)
-        monkeypatch.setattr(q, "_LOADED", True)
-
-
-def test_canaries_r9_all_registered_and_fresh(loaded):
-    """Every r9 canary must be a registered query, the list must be
-    duplicate-free, and — bar the three round-8 rewrites it exists to
-    re-grade — disjoint from the r8 canary list (the rotation's whole
-    point is sweeping DIFFERENT families each round)."""
-    canaries_r9 = _hand_authored("canaries_r9")
-    assert len(canaries_r9) == len(set(canaries_r9))
-    for n in canaries_r9:
-        assert n in registry.QUERIES, f"unregistered r9 canary {n}"
-    overlap = set(canaries_r9) & set(_hand_authored("canaries_r8"))
-    assert not overlap, f"r9 canaries reuse r8 names: {sorted(overlap)}"
-
-
-def test_canaries_r10_all_registered_and_fresh(loaded):
-    """The round-10 canary sample (authored in round 9, r8 verdict #9)
-    must be registered, duplicate-free, 50 long, and disjoint from
-    BOTH earlier canary lists and the r8 tail — it exists to sweep the
-    r5-r7 green slices no prior window ever re-graded."""
-    canaries_r10 = _hand_authored("canaries_r10")
-    assert len(canaries_r10) == 50
-    assert len(set(canaries_r10)) == 50
-    for n in canaries_r10:
-        assert n in registry.QUERIES, f"unregistered r10 canary {n}"
-    stale = set(canaries_r10) & (
-        set(_hand_authored("canaries_r8"))
-        | set(_hand_authored("canaries_r9"))
-        | set(TAIL_R8)
-        | set(_hand_authored("staged_new_r8"))
-    )
-    assert not stale, f"r10 canaries reuse earlier window names: {sorted(stale)}"
-
-
-def test_r10_flip_after_staged_r8_greens(loaded, monkeypatch):
-    """Real records plus a synthetic r9 record greening the round-8
-    staged newcomers and the re-oracled row — what round 10's load()
-    sees once CORRECTNESS_r09 lands: the regime must rotate to the
-    round-9-staged newcomers + canaries_r10.
-
-    Records pinned to the r8 view (max_round=8) so the driver landing
-    CORRECTNESS_r10 (which greens the r9-staged names and advances the
-    live regime to round 11) cannot redden this reconstruction."""
-    import iceberg_aws_event_based_table_management_spark.queries as q
-
-    staged_r8 = _hand_authored("staged_new_r8")
-    synthetic_r9 = {
-        n: {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
-        for n in staged_r8 + _hand_authored("reoracled_r9")
-    }
-    records = _real_records(max_round=8) + [synthetic_r9]
-    real_fn = registry.driver_green_names
-    monkeypatch.setattr(
-        registry, "driver_green_names", lambda recs=None: real_fn(records=records)
-    )
-    # pre-r13 reconstruction: cap the grade-freshness ledger the same
-    # way the record set is capped, so the round-14 regime (which keys
-    # off "canaries_r13 graded in round >= 13") cannot fire
-    real_ledger = registry.driver_latest_grade_round
-    monkeypatch.setattr(
-        registry,
-        "driver_latest_grade_round",
-        lambda max_round=None: real_ledger(max_round=12),
-    )
-    snapshot = dict(registry.QUERIES)
-    monkeypatch.setattr(q, "_LOADED", False)
-    try:
-        q.load()
-        names = list(registry.QUERIES)
-        staged_r9 = [
-            n for n in _hand_authored("staged_new_r9") if n in registry.QUERIES
-        ]
-        canaries = _hand_authored("canaries_r10")
-        assert names[: len(staged_r9)] == staged_r9
-        assert names[len(staged_r9) : len(staged_r9) + 50] == canaries
-    finally:
-        registry.QUERIES.clear()
-        registry.QUERIES.update(snapshot)
-        monkeypatch.setattr(q, "_LOADED", True)
-
-
-def test_canaries_r11_all_registered_and_fresh(loaded):
-    """The round-11 canary sample (authored in round 10, r9 verdict #8)
-    must be registered, duplicate-free, 50 long, and — this round's
-    whole point — the FIRST re-grade of the r8/r9 green slices: it must
-    contain every tail_r8 and staged_new_r8 name, and be disjoint from
-    the three earlier canary lists."""
-    canaries_r11 = _hand_authored("canaries_r11")
-    assert len(canaries_r11) == 50
-    assert len(set(canaries_r11)) == 50
-    for n in canaries_r11:
-        assert n in registry.QUERIES, f"unregistered r11 canary {n}"
-    missing = (set(TAIL_R8) | set(_hand_authored("staged_new_r8"))) - set(
-        canaries_r11
-    )
-    assert not missing, f"r8/r9 green slices not re-swept: {sorted(missing)}"
-    stale = set(canaries_r11) & (
-        set(_hand_authored("canaries_r8"))
-        | set(_hand_authored("canaries_r9"))
-        | set(_hand_authored("canaries_r10"))
-    )
-    assert not stale, f"r11 canaries reuse earlier canary names: {sorted(stale)}"
-
-
-def test_canaries_r12_all_registered_and_fresh(loaded):
-    """The round-12 canary sample (authored in round 11, r10 verdict
-    #8) must be registered, duplicate-free, sized so staged_new_r11 +
-    canaries fill the 50-slot window exactly, driver-green already
-    (canaries re-grade proven rows, never burn a slot on a gamble),
-    and FRESH: disjoint from all four earlier canary lists and from
-    every staged generation — it sweeps greens no prior window ever
-    re-graded."""
-    canaries_r12 = _hand_authored("canaries_r12")
-    staged_r11 = _hand_authored("staged_new_r11")
-    assert len(staged_r11) + len(canaries_r12) == 50
-    assert len(set(canaries_r12)) == len(canaries_r12)
-    green = registry.driver_green_names()
-    for n in canaries_r12:
-        assert n in registry.QUERIES, f"unregistered r12 canary {n}"
-        assert n in green, f"r12 canary {n} has no driver-green record"
-    prior = (
-        set(_hand_authored("canaries_r8"))
-        | set(_hand_authored("canaries_r9"))
-        | set(_hand_authored("canaries_r10"))
-        | set(_hand_authored("canaries_r11"))
-        | set(TAIL_R8)
-        | set(_hand_authored("staged_new_r8"))
-        | set(_hand_authored("staged_new_r9"))
-        | set(_hand_authored("staged_new_r10"))
-        | set(staged_r11)
-        | set(_hand_authored("reoracled_r9"))
-    )
-    stale = set(canaries_r12) & prior
-    assert not stale, f"r12 canaries reuse already-swept names: {sorted(stale)}"
-
-
-def test_r12_flip_after_staged_r10_greens(loaded, monkeypatch):
-    """Pin the ROUND-12 regime against a synthetic record set where
-    every staged_new_r10 name has graded green (the state the driver
-    creates by landing CORRECTNESS_r11): staged_new_r11 leads,
-    canaries_r12 fill.  Records pinned to the r10 view (max_round=10)
-    plus one synthetic round so the driver landing CORRECTNESS_r11
-    for real cannot redden this reconstruction."""
-    import iceberg_aws_event_based_table_management_spark.queries as q
-
-    synthetic_r11 = {
-        n: {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
-        for n in _hand_authored("staged_new_r10")
-    }
-    records = _real_records(max_round=10) + [synthetic_r11]
-    real_fn = registry.driver_green_names
-    monkeypatch.setattr(
-        registry, "driver_green_names", lambda recs=None: real_fn(records=records)
-    )
-    # pre-r13 reconstruction: cap the grade-freshness ledger the same
-    # way the record set is capped, so the round-14 regime (which keys
-    # off "canaries_r13 graded in round >= 13") cannot fire
-    real_ledger = registry.driver_latest_grade_round
-    monkeypatch.setattr(
-        registry,
-        "driver_latest_grade_round",
-        lambda max_round=None: real_ledger(max_round=12),
-    )
-    snapshot = dict(registry.QUERIES)
-    monkeypatch.setattr(q, "_LOADED", False)
-    try:
-        q.load()
-        names = list(registry.QUERIES)
-        staged_r11 = [
-            n for n in _hand_authored("staged_new_r11") if n in registry.QUERIES
-        ]
-        canaries = _hand_authored("canaries_r12")
-        assert names[: len(staged_r11)] == staged_r11
-        assert (
-            names[len(staged_r11) : len(staged_r11) + len(canaries)] == canaries
-        )
-    finally:
-        registry.QUERIES.clear()
-        registry.QUERIES.update(snapshot)
-        monkeypatch.setattr(q, "_LOADED", True)
-
-
-def test_canaries_r13_all_registered_and_fresh(loaded):
-    """The round-13 canary sample (authored in round 12, per the r11
-    registry note) must be registered, duplicate-free, sized so
-    staged_new_r12 (empty — §2 frozen in round 12) + canaries fill the
-    50-slot window exactly, driver-green already, and FRESH: disjoint
-    from all five earlier canary lists and every staged generation —
-    it sweeps the 50 OLDEST greens no prior window ever re-graded."""
-    canaries_r13 = _hand_authored("canaries_r13")
-    staged_r12 = _hand_authored("staged_new_r12")
-    assert len(staged_r12) + len(canaries_r13) == 50
-    assert len(set(canaries_r13)) == len(canaries_r13)
-    green = registry.driver_green_names()
-    for n in canaries_r13:
-        assert n in registry.QUERIES, f"unregistered r13 canary {n}"
-        assert n in green, f"r13 canary {n} has no driver-green record"
-    prior = (
-        set(_hand_authored("canaries_r8"))
-        | set(_hand_authored("canaries_r9"))
-        | set(_hand_authored("canaries_r10"))
-        | set(_hand_authored("canaries_r11"))
-        | set(_hand_authored("canaries_r12"))
-        | set(TAIL_R8)
-        | set(_hand_authored("staged_new_r8"))
-        | set(_hand_authored("staged_new_r9"))
-        | set(_hand_authored("staged_new_r10"))
-        | set(_hand_authored("staged_new_r11"))
-        | set(_hand_authored("reoracled_r9"))
-    )
-    stale = set(canaries_r13) & prior
-    assert not stale, f"r13 canaries reuse already-swept names: {sorted(stale)}"
-
-
-def test_r13_flip_after_staged_r11_greens(loaded, monkeypatch):
-    """Pin the ROUND-13 regime against a synthetic record set where
-    every staged_new_r11 name has graded green (the state the driver
-    creates by landing CORRECTNESS_r12): canaries_r13 IS the window
-    (no round-12 registrations exist).  Records pinned to the r11 view
-    plus one synthetic round so the driver landing CORRECTNESS_r12 for
-    real cannot redden this reconstruction."""
-    import iceberg_aws_event_based_table_management_spark.queries as q
-
-    synthetic_r12 = {
-        n: {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
-        for n in _hand_authored("staged_new_r11")
-    }
-    records = _real_records(max_round=11) + [synthetic_r12]
-    real_fn = registry.driver_green_names
-    monkeypatch.setattr(
-        registry, "driver_green_names", lambda recs=None: real_fn(records=records)
-    )
-    # pre-r13 reconstruction: cap the grade-freshness ledger the same
-    # way the record set is capped, so the round-14 regime (which keys
-    # off "canaries_r13 graded in round >= 13") cannot fire
-    real_ledger = registry.driver_latest_grade_round
-    monkeypatch.setattr(
-        registry,
-        "driver_latest_grade_round",
-        lambda max_round=None: real_ledger(max_round=12),
-    )
-    snapshot = dict(registry.QUERIES)
-    monkeypatch.setattr(q, "_LOADED", False)
-    try:
-        q.load()
-        names = list(registry.QUERIES)
-        canaries = _hand_authored("canaries_r13")
-        assert names[: len(canaries)] == canaries
-    finally:
-        registry.QUERIES.clear()
-        registry.QUERIES.update(snapshot)
-        monkeypatch.setattr(q, "_LOADED", True)
-
-
-def test_flip_expectation_survives_future_records(loaded, monkeypatch):
-    """META-TEST (r9 verdict #1): the condition the driver creates
-    every round — a NEW all-green CORRECTNESS record appended to the
-    real set — must ADVANCE the derived window expectation, never
-    redden it.  Simulates three future driver rounds: at each step the
-    live-derivation logic (the same green-set arithmetic load() uses)
-    must agree with load()'s actual window, then the window's first 50
-    are graded green and the next step re-checks.  Any frozen
-    expectation in the derivation chain fails here immediately instead
-    of one round later."""
-    import iceberg_aws_event_based_table_management_spark.queries as q
-
-    records = _real_records()
-    real_fn = registry.driver_green_names
-    for step in range(3):
-        frozen = [dict(r) for r in records]
-        monkeypatch.setattr(
-            registry,
-            "driver_green_names",
-            lambda recs=None, r=frozen: real_fn(records=r),
-        )
-        green = real_fn(records=frozen)
-        expected = _expected_window(green)
-        snapshot = dict(registry.QUERIES)
-        monkeypatch.setattr(q, "_LOADED", False)
-        try:
-            q.load()
-            names = list(registry.QUERIES)
-            assert (
-                names[: min(50, len(expected))] == expected[:50]
-            ), f"window diverged from derivation at simulated round {10 + step}"
-        finally:
-            registry.QUERIES.clear()
-            registry.QUERIES.update(snapshot)
-            monkeypatch.setattr(q, "_LOADED", True)
-        synthetic = {
-            n: {
-                "rows_match": True,
-                "schema_match": True,
-                "hash_match": True,
-                "err": None,
-            }
-            for n in expected[:50]
-        }
-        records = records + [synthetic]
-
-
-def test_r8_flip_warns_on_unexpected_backlog_name(loaded, monkeypatch):
-    """A never-green query missing from the hand-authored tail must be
-    appended to the window (not silently evicted) with a warning
-    (round-7 ADVICE, low)."""
-    import iceberg_aws_event_based_table_management_spark.queries as q
-
-    # Green everything EXCEPT one non-tail query (simulating a
-    # rename/addition after tail_r8 was authored) and 8 of the 9 tail
-    # names, so the backlog is exactly 9 and the flip fires with a
-    # composition that diverges from the literal tail_r8.
-    straggler = "scalar_math_suite"
-    # staged_new_r8 / r9 / r10 must stay ungreen too, else a later
-    # regime (round-10: every r8-staged green; round-11: every
-    # r9-staged green; round-12: every r10-staged green) fires instead
-    # of the r8 flip under test.
-    ungreen = {
-        straggler,
-        *TAIL_R8[:8],
-        *_hand_authored("staged_new_r8"),
-        *_hand_authored("staged_new_r9"),
-        *_hand_authored("staged_new_r10"),
-    }
-    synthetic = {
-        n: {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
-        for n in registry.QUERIES
-        if n not in ungreen
-    }
-    real_fn = registry.driver_green_names
-    monkeypatch.setattr(
-        registry, "driver_green_names", lambda recs=None: real_fn(records=[synthetic])
-    )
-    real_ledger = registry.driver_latest_grade_round
-    monkeypatch.setattr(
-        registry,
-        "driver_latest_grade_round",
-        lambda max_round=None: real_ledger(max_round=7),
-    )
-    snapshot = dict(registry.QUERIES)
-    monkeypatch.setattr(q, "_LOADED", False)
-    try:
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            q.load()
-        assert any("outside the hand-authored window" in str(w.message) for w in caught)
-        names = list(registry.QUERIES)
-        assert straggler in names[:50], "computed backlog name evicted from window"
-        # The un-greened tail names and the straggler must all LEAD the
-        # window (backlog-first contract).  Set-based, not an exact
-        # prefix pin: the residual registry order feeding `ordered`
-        # comes from the FIRST (real-records) load(), so an exact
-        # prefix changes whenever the driver lands a new round's
-        # CORRECTNESS file or the staged window is revised — the r14
-        # verdict's "suite must stay green when driver files for round
-        # N+1 appear" lesson, which the old `names[:9] ==` pin violated
-        # (it reddened when CORRECTNESS_r15.json landed).
-        lead9 = set(TAIL_R8[:8]) | {straggler}
-        positions = [names.index(n) for n in lead9]
-        assert max(positions) < 50, "backlog name evicted from the graded window"
-    finally:
-        registry.QUERIES.clear()
-        registry.QUERIES.update(snapshot)
-        monkeypatch.setattr(q, "_LOADED", True)
-
-
-def test_unparseable_correctness_record_warns(tmp_path, monkeypatch, loaded):
-    """A corrupted CORRECTNESS file must not silently vanish from
-    window arithmetic (round-7 ADVICE, low)."""
-    import glob as glob_mod
-
+def test_unparseable_correctness_record_warns(tmp_path, monkeypatch):
+    """A corrupted CORRECTNESS file must not silently vanish from the
+    ledger; the readable files still count."""
     bad = tmp_path / "CORRECTNESS_r99.json"
     bad.write_text("{truncated")
+    good = tmp_path / "CORRECTNESS_r98.json"
+    good.write_text(json.dumps({"scan_parquet": {"hash_match": True, "err": None}}))
     monkeypatch.setattr(
-        glob_mod, "glob", lambda pattern: [str(bad)] if "CORRECTNESS" in pattern else []
+        glob, "glob", lambda pattern: [str(good), str(bad)] if "CORRECTNESS" in pattern else []
     )
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        green = registry.driver_green_names()
-    assert green == set()
+        ledger = registry.grading_ledger()
+    assert ledger == {"scan_parquet": (98, 98)}
     assert any("unparseable" in str(w.message) for w in caught)
 
 
-def test_demote_unknown_name_warns_not_crashes(loaded):
-    """A renamed query referenced by a hand-authored window list must
-    degrade to a warning — a KeyError here would crash load() and take
-    the whole driver contract down."""
-    snapshot = dict(registry.QUERIES)
-    try:
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            registry.demote("no_such_query_name", next(iter(registry.QUERIES)))
-        assert any("unknown query name" in str(w.message) for w in caught)
-        assert len(registry.QUERIES) == len(snapshot)
-    finally:
-        registry.QUERIES.clear()
-        registry.QUERIES.update(snapshot)
-
-
-def test_canaries_r14_all_registered_and_fresh(loaded):
-    """The round-14 canary sample must be registered, duplicate-free,
-    exactly window-sized (no staged generation remains), driver-green
-    already, and — its whole reason to exist (r13 verdict #4) — the
-    50 STALEST grades on the cumulative ledger as of r13, including
-    the three r2-era grades every prior rotation missed."""
-    canaries_r14 = _hand_authored("canaries_r14")
-    assert len(canaries_r14) == 50
-    assert len(set(canaries_r14)) == 50
-    green = registry.driver_green_names()
-    for n in canaries_r14:
-        assert n in registry.QUERIES, f"unregistered r14 canary {n}"
-        assert n in green, f"r14 canary {n} has no driver-green record"
-    for must in (
-        "agg_conditional",
-        "composite_large_volume_customers",
-        "sort_compaction_order",
-    ):
-        assert must in canaries_r14, f"r2-era grade {must} missing from r14 window"
-    # the sample IS the ledger's stale frontier: every grade from
-    # r2-r4 is in, and the remaining slots hold r5 grades (the
-    # specific 12-of-19 is a hand-made family-diversity choice, so
-    # only the round boundary is pinned).  Pinned to the r13 view so
-    # CORRECTNESS_r14 landing (which refreshes these exact grades)
-    # advances the ledger without reddening this check.
-    ledger = registry.driver_latest_grade_round(max_round=13)
-    through_r4 = {n for n, r in ledger.items() if r <= 4}
-    missing = through_r4 - set(canaries_r14)
-    assert not missing, f"pre-r5 grades left out of the r14 window: {sorted(missing)}"
-    extras = set(canaries_r14) - through_r4
-    assert all(ledger.get(n) == 5 for n in extras), (
-        "r14 filler canaries must come from the r5 cohort: "
-        f"{sorted(n for n in extras if ledger.get(n) != 5)}"
-    )
-
-
-def test_r14_flip_after_r13_window_graded(loaded, monkeypatch):
-    """Pin the ROUND-14 regime against the r13 record view: with the
-    r13 canary sample graded in round 13 (a ledger fact), the seventh
-    fresh canary sample IS the window.  Records and ledger both capped
-    at 13 so future driver rounds cannot redden this reconstruction."""
-    import iceberg_aws_event_based_table_management_spark.queries as q
-
-    records = _real_records(max_round=13)
-    real_fn = registry.driver_green_names
-    monkeypatch.setattr(
-        registry, "driver_green_names", lambda recs=None: real_fn(records=records)
-    )
-    real_ledger = registry.driver_latest_grade_round
-    monkeypatch.setattr(
-        registry,
-        "driver_latest_grade_round",
-        lambda max_round=None: real_ledger(max_round=13),
-    )
-    snapshot = dict(registry.QUERIES)
-    monkeypatch.setattr(q, "_LOADED", False)
-    try:
-        q.load()
-        names = list(registry.QUERIES)
-        canaries = _hand_authored("canaries_r14")
-        assert names[:50] == canaries
-    finally:
-        registry.QUERIES.clear()
-        registry.QUERIES.update(snapshot)
-        monkeypatch.setattr(q, "_LOADED", True)
-
-
-def test_canaries_r15_staged_and_fresh(loaded):
-    """The round-15 sample (authored in round 14, staging discipline):
-    registered, duplicate-free, window-sized, driver-green, equal to
-    the post-r14 stale frontier (ledger capped at r13 plus the r14
-    window simulated green: everything left at r5-r7 is in, fillers
-    come from the r8 cohort)."""
-    canaries_r15 = _hand_authored("canaries_r15")
-    canaries_r14 = _hand_authored("canaries_r14")
-    assert len(canaries_r15) == 50
-    assert len(set(canaries_r15)) == 50
-    assert not set(canaries_r15) & set(canaries_r14)
-    green = registry.driver_green_names()
-    for n in canaries_r15:
-        assert n in registry.QUERIES, f"unregistered r15 canary {n}"
-        assert n in green, f"r15 canary {n} has no driver-green record"
-    ledger = registry.driver_latest_grade_round(max_round=13)
-    for n in canaries_r14:
-        ledger[n] = 14  # the state the r14 grading run creates
-    through_r7 = {n for n, r in ledger.items() if r <= 7}
-    missing = through_r7 - set(canaries_r15)
-    assert not missing, f"r5-r7 grades left out of the r15 window: {sorted(missing)}"
-    extras = set(canaries_r15) - through_r7
-    assert all(ledger.get(n) == 8 for n in extras), (
-        "r15 filler canaries must come from the r8 cohort: "
-        f"{sorted(n for n in extras if ledger.get(n) != 8)}"
-    )
-    # The live window must match whatever regime TODAY's records imply
-    # — derived via _expected_window, never a literal round's sample.
-    # (The r14 verdict's What's-wrong #1: this assertion used to pin
-    # 'still canaries_r14', which reddened the moment the driver
-    # landed CORRECTNESS_r14.json.  The suite must stay green when
-    # the driver files for round N+1 appear.)
-    assert list(registry.QUERIES)[:50] == _expected_window(green)
-
-
-def test_canaries_r16_staged_and_fresh(loaded):
-    """The round-16 sample (authored in round 15, REVISED in round 16
-    per the r15 VERDICT "Next round #2"): registered, duplicate-free,
-    window-sized, driver-green, equal to the post-r15 stale frontier
-    MINUS the eight never-rewritten r9 trivial scans that ceded their
-    slots, PLUS the re-grade-on-new-plan cohort — the nine r14/r15
-    device fillers and the eight r15-optimization rewrites that appear
-    in no graded window.  No literal live-window pin: the live window
-    belongs to _expected_window."""
-    canaries_r16 = _hand_authored("canaries_r16")
-    canaries_r15 = _hand_authored("canaries_r15")
-    assert len(canaries_r16) == 50
-    assert len(set(canaries_r16)) == 50
-    assert not set(canaries_r16) & set(canaries_r15)
-    green = registry.driver_green_names()
-    for n in canaries_r16:
-        assert n in registry.QUERIES, f"unregistered r16 canary {n}"
-        assert n in green, f"r16 canary {n} has no driver-green record"
-    ledger = registry.driver_latest_grade_round(max_round=14)
-    for n in canaries_r15:
-        ledger[n] = 15  # the state the r15 grading run creates
-    through_r9 = {n for n, r in ledger.items() if r <= 9}
-    # the 8 slots ceded to rewritten plans (r15 VERDICT "Next round
-    # #2"): never-rewritten r9 trivial scans, untouched since their
-    # r9 green — the lowest-regression-risk grades to leave stale
-    ceded = {
-        "agg_count_distinct",
-        "case_when_bucket",
-        "filter_predicates",
-        "join_broadcast_nation_region",
-        "project_arithmetic",
-        "scan_parquet",
-        "scan_projection",
-        "scan_pushdown_filter",
+def test_ledger_separates_grade_from_green(tmp_path, monkeypatch):
+    files = {
+        14: {"q": {"hash_match": True, "err": None}},
+        15: {"q": {"hash_match": False, "err": None}},
+        16: {"q": {"hash_match": True, "err": "timeout"}},
     }
-    missing = through_r9 - set(canaries_r16)
-    assert missing == ceded, (
-        f"r8/r9 grades left out of the r16 window beyond the documented "
-        f"ceded set: {sorted(missing ^ ceded)}"
-    )
-    # the fillers: every plan rewritten (or made exact) after its
-    # latest grade — r14 device rewrites graded r10-r12, the 9 staged
-    # r15 fillers, plus the 8 r15-optimization rewrites the r15
-    # verdict found ungraded (What's wrong #2)
-    regraded = {
-        "abc_xyz_inventory",
-        "lift_curve_deciles",
-        "matched_pairs_by_decile",
-        "pack_sequences_token_budget",
-        "rfm_customer_segments",
-        "sessionization_gap_stats",
-        "shard_assignment_balanced",
-        "sort_compaction_zorder_quantile",
-        "udtf_binpack_per_table",
-        "dedup_cross_source_matrix",
-        "dedup_degree_profile",
-        "dedup_pair_span_align",
-        "dq_expectations_report",
-        "minhash_jaccard_regression",
-        "survival_km_repurchase",
-        "text_contamination_eval_overlap",
-        "text_interdoc_ngram_coverage",
-    }
-    assert set(canaries_r16) - through_r9 == regraded
+    for rnd, rec in files.items():
+        (tmp_path / f"CORRECTNESS_r{rnd}.json").write_text(json.dumps(rec))
+    paths = sorted(str(p) for p in tmp_path.iterdir())
+    monkeypatch.setattr(glob, "glob", lambda pattern: paths)
+    assert registry.grading_ledger() == {"q": (16, 14)}
 
 
-def _simulated_ledgers(real_any, real_green, names: list[str], rnd: int,
-                       red: set[str] = frozenset()):
-    """Ledger factories reconstructing 'round `rnd` graded `names`':
-    both ledgers capped at rnd-1, every name granted an any-grade row
-    at rnd, and every name NOT in `red` granted a green row at rnd."""
-    cap = rnd - 1
-
-    def sim_any(max_round=None):
-        led = real_any(max_round=cap if max_round is None else min(max_round, cap))
-        for n in names:
-            led[n] = max(led.get(n, 0), rnd)
-        return led
-
-    def sim_green(max_round=None):
-        led = real_green(max_round=cap if max_round is None else min(max_round, cap))
-        for n in names:
-            if n not in red:
-                led[n] = max(led.get(n, 0), rnd)
-        return led
-
-    return sim_any, sim_green
+def test_regrade_names_all_registered():
+    engine.load_all_queries()
+    missing = [n for n in queries.REGRADE if n not in registry.QUERIES]
+    assert not missing, f"REGRADE names a query that is not registered: {missing}"
 
 
-def test_r16_flip_after_r15_window_graded(loaded, monkeypatch):
-    """The general round-N+1 guard the r14 verdict asked for: simulate
-    the NEXT driver grading run landing (every r15 canary graded green
-    in round 15) and assert load() advances the window to the staged
-    r16 sample — the suite must stay green when driver files for round
-    N+1 exist, by construction rather than by literal pins."""
-    import iceberg_aws_event_based_table_management_spark.queries as q
-
-    canaries_r15 = _hand_authored("canaries_r15")
-    sim_any, sim_green = _simulated_ledgers(
-        registry.driver_latest_grade_round,
-        registry.driver_latest_green_round,
-        canaries_r15,
-        15,
-    )
-    monkeypatch.setattr(registry, "driver_latest_grade_round", sim_any)
-    monkeypatch.setattr(registry, "driver_latest_green_round", sim_green)
-    snapshot = dict(registry.QUERIES)
-    monkeypatch.setattr(q, "_LOADED", False)
-    try:
-        q.load()
-        assert list(registry.QUERIES)[:50] == _hand_authored("canaries_r16")
-    finally:
-        registry.QUERIES.clear()
-        registry.QUERIES.update(snapshot)
-        monkeypatch.setattr(q, "_LOADED", True)
+def test_red_latest_grade_leads(order_for):
+    names = sorted(registry.QUERIES)
+    red, stale = names[-1], names[0]
+    ledger = _all_green(16)
+    ledger[red] = (16, 15)
+    ledger[stale] = (9, 9)  # an older green must not outrank a red grade
+    assert order_for(ledger)[:2] == [red, stale]
 
 
-def test_red_canary_holds_the_flip(loaded, monkeypatch):
-    """r14 ADVICE (low): a canary that grades RED must hold the regime
-    flip — the prior window (which contains the regressed query) stays
-    live so the query re-grades next round, instead of advancing the
-    window and silently dropping the regression from future grading."""
-    import iceberg_aws_event_based_table_management_spark.queries as q
+def test_never_graded_leads(order_for):
+    names = sorted(registry.QUERIES)
+    new, red, stale = names[-1], names[-2], names[-3]
+    ledger = _all_green(16)
+    del ledger[new]
+    ledger[red] = (16, 15)
+    ledger[stale] = (9, 9)
+    assert order_for(ledger)[:3] == [new, red, stale]
 
-    canaries_r15 = _hand_authored("canaries_r15")
-    red_name = canaries_r15[0]
-    sim_any, sim_green = _simulated_ledgers(
-        registry.driver_latest_grade_round,
-        registry.driver_latest_green_round,
-        canaries_r15,
-        15,
-        red={red_name},
-    )
-    monkeypatch.setattr(registry, "driver_latest_grade_round", sim_any)
-    monkeypatch.setattr(registry, "driver_latest_green_round", sim_green)
-    snapshot = dict(registry.QUERIES)
-    monkeypatch.setattr(q, "_LOADED", False)
-    try:
-        with pytest.warns(RuntimeWarning, match="flip held"):
-            q.load()
-        names = list(registry.QUERIES)
-        assert names[:50] == canaries_r15
-        assert red_name in names[:50]
-    finally:
-        registry.QUERIES.clear()
-        registry.QUERIES.update(snapshot)
-        monkeypatch.setattr(q, "_LOADED", True)
+
+def test_rewritten_plan_leads_until_graded(order_for):
+    name, rnd = next(iter(queries.REGRADE.items()))
+    stale = next(n for n in sorted(registry.QUERIES) if n not in queries.REGRADE)
+    ledger = _all_green(rnd)
+    ledger[stale] = (rnd - 8, rnd - 8)
+    ledger[name] = (rnd - 1, rnd - 1)
+    assert order_for(ledger)[:2] == [name, stale]
+    ledger[name] = (rnd, rnd)  # the rewritten plan has been graded
+    assert order_for(ledger)[0] == stale
+
+
+def test_replay_regrades_every_query_within_seven_rounds(order_for):
+    """Replay 24 grading rounds from the real ledger, each grading the
+    computed window green.  Three rounds pay off debt inherited from
+    the hand-written windows (the r9/r10 cohorts were last graded 8
+    rounds before round 17); from then on no registered query is ever
+    more than 7 rounds past its latest grade."""
+    ledger = registry.grading_ledger()
+    start = max(graded for graded, _ in ledger.values()) + 1
+    worst: dict[int, int] = {}
+    for rnd in range(start, start + 24):
+        names = order_for(dict(ledger))
+        worst[rnd] = max(rnd - ledger.get(n, (0, 0))[0] for n in names)
+        for n in names[:WINDOW]:
+            ledger[n] = (rnd, rnd)
+    late = {rnd: gap for rnd, gap in worst.items() if rnd >= start + 3 and gap > 7}
+    assert not late, f"queries left ungraded for more than 7 rounds: {late}"
