@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import glob
 import json
+import os
+import re
 import warnings
 
 import pytest
@@ -20,6 +22,7 @@ import iceberg_aws_event_based_table_management_spark as engine
 from iceberg_aws_event_based_table_management_spark import queries, registry
 
 WINDOW = 50
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture()
@@ -73,10 +76,10 @@ def test_ledger_separates_grade_from_green(tmp_path, monkeypatch):
     assert registry.grading_ledger() == {"q": (16, 14)}
 
 
-def test_regrade_names_all_registered():
+@pytest.mark.parametrize("name", sorted(queries.REGRADE))
+def test_regrade_names_all_registered(name):
     engine.load_all_queries()
-    missing = [n for n in queries.REGRADE if n not in registry.QUERIES]
-    assert not missing, f"REGRADE names a query that is not registered: {missing}"
+    assert name in registry.QUERIES, f"REGRADE names an unregistered query: {name}"
 
 
 def test_red_latest_grade_leads(order_for):
@@ -107,6 +110,23 @@ def test_rewritten_plan_leads_until_graded(order_for):
     assert order_for(ledger)[:2] == [name, stale]
     ledger[name] = (rnd, rnd)  # the rewritten plan has been graded
     assert order_for(ledger)[0] == stale
+
+
+@pytest.mark.parametrize("rnd", range(1, 17))
+def test_next_window_skips_the_rounds_greens(rnd, order_for, monkeypatch):
+    """With the real ledger as it stood after round `rnd`, the next
+    window re-grades nothing that round graded green unless REGRADE
+    dates a rewrite after it.  (The hand-written windows this key
+    replaced failed here after round 16: round 17 re-graded its set.)"""
+    paths = glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))
+    kept = [p for p in paths if int(re.search(r"_r(\d+)\.json$", p).group(1)) <= rnd]
+    with monkeypatch.context() as m:
+        m.setattr(glob, "glob", lambda pattern: kept)
+        ledger = registry.grading_ledger()
+    assert any(graded == rnd for graded, _ in ledger.values())
+    again = [n for n in order_for(ledger)[:WINDOW]
+             if ledger.get(n, (0, 0))[1] == rnd and queries.REGRADE.get(n, 0) <= rnd]
+    assert not again, f"round {rnd + 1} re-grades round-{rnd} greens: {again}"
 
 
 def test_replay_regrades_every_query_within_seven_rounds(order_for):
