@@ -455,6 +455,37 @@ def corpus_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ranges so the single-corpus LSH/Jaccard machinery applies unchanged
 # and a pair is cross-set iff exactly one side is >= the offset.
 _INC_OFFSET = 1_000_000
+# The batch is moved out of the corpus (doc_id % 5 == 3, a fifth of it);
+# edited re-ingests are added on top (doc_id % 10 == 1, a tenth).  The
+# oracle's inc_base / inc_batch spell out the same split.
+_INC_BATCH_MOD, _INC_BATCH_REM = 5, 3
+_INC_REINGEST_MOD, _INC_REINGEST_REM = 10, 1
+
+
+def _inc_split(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(base, batch) of dedup_incremental_neardup; batch ids are offset."""
+    in_batch = F.col("doc_id") % _INC_BATCH_MOD == _INC_BATCH_REM
+    batch = (
+        docs.filter(in_batch)
+        .withColumn("doc_id", F.col("doc_id") + _INC_OFFSET)
+        .unionByName(
+            docs.filter(F.col("doc_id") % _INC_REINGEST_MOD == _INC_REINGEST_REM).select(
+                (F.col("doc_id") + 2 * _INC_OFFSET).alias("doc_id"),
+                F.concat("text", F.lit(" zz9")).alias("text"),
+            )
+        )
+    )
+    return docs.filter(~in_batch), batch
+
+
+def _inc_max_corpus_docs(sf_dir: str) -> int | None:
+    """Footer bound on base + batch: base and batch split the corpus,
+    the re-ingests add 1/_INC_REINGEST_MOD of it, and as much again is
+    margin, so the bound stays an upper bound on any bucket's
+    membership."""
+    n = io.parquet_num_rows(sf_dir, "documents")
+    return None if n is None else int(n * (1 + 2 / _INC_REINGEST_MOD))
+
 
 _INC_GRAMS = r"""
   inc_base AS (
@@ -541,17 +572,7 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification touches candidates only; the final best-match pick is
     a per-batch-doc min(struct) agg."""
     docs = io.table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = docs.filter(F.col("doc_id") % 5 != 3)
-    batch = (
-        docs.filter(F.col("doc_id") % 5 == 3)
-        .withColumn("doc_id", F.col("doc_id") + _INC_OFFSET)
-        .unionByName(
-            docs.filter(F.col("doc_id") % 10 == 1).select(
-                (F.col("doc_id") + 2 * _INC_OFFSET).alias("doc_id"),
-                F.concat("text", F.lit(" zz9")).alias("text"),
-            )
-        )
-    )
+    base, batch = _inc_split(docs)
     combined = base.unionByName(batch)
     # sh feeds signatures AND verification — materialize once
     # (executor-local).
@@ -571,14 +592,10 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12 dropped them before the size joins, r15 drops them before
     # the pair explode + distinct (identical output, candidate work
     # ∝ cross candidates only).
-    # combined = base (0.8n) + offset batch (0.2n) + edited re-ingests
-    # (0.1n) = 1.1n docs; 1.2x margin keeps the footer bound an upper
-    # bound on any bucket's membership.
-    _n_docs = io.parquet_num_rows(sf_dir, "documents")
     cross_cands = D.lsh_candidate_pairs(
         prof.select("doc_id", "signature"), bands=8, rows_per_band=4,
         cross_at=_INC_OFFSET,
-        max_corpus_docs=None if _n_docs is None else int(_n_docs * 1.2),
+        max_corpus_docs=_inc_max_corpus_docs(sf_dir),
     )
     # sh is checkpointed (unprobeable) — footer-gate the size-join
     # strategy like dedup_near_verified above (r12 ADVICE).  cross_at

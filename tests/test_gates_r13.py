@@ -7,6 +7,8 @@ agg_approx_distinct (r12 verdict #4)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -295,3 +297,26 @@ def test_quantile_sketch_fused_branch_matches_three_pass(spark, sf_dir, monkeypa
     assert _analyzed(fused).count("LogicalRDD") > _analyzed(three_pass).count("LogicalRDD")
     assert fused.columns == three_pass.columns
     assert sorted(fused.collect()) == sorted(three_pass.collect())
+
+
+# ---------------------------------------------------------------------------
+# dedup_incremental_neardup: the footer bound on its combined corpus
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("sf", ["0.001", "0.01", "0.1"])
+def test_incremental_neardup_bound_unchanged(sf, sf_dir):
+    """The bound decides the LSH hot-bucket split gate; it must stay
+    int(n * 1.2) at the graded SFs so no gate flips."""
+    from iceberg_aws_event_based_table_management_spark.queries import dedup as Q
+
+    sf_dir = os.path.join(os.path.dirname(sf_dir), f"sf{sf}")
+    n = eio.parquet_num_rows(sf_dir, "documents")
+    assert Q._inc_max_corpus_docs(sf_dir) == int(n * 1.2)
+
+
+def test_incremental_neardup_bound_covers_combined(spark, sf_dir):
+    from iceberg_aws_event_based_table_management_spark.queries import dedup as Q
+
+    base, batch = Q._inc_split(eio.table(spark, sf_dir, "documents").select("doc_id", "text"))
+    assert Q._inc_max_corpus_docs(sf_dir) >= base.unionByName(batch).count()

@@ -23,11 +23,16 @@ plans depend on, scale only cardinality:
 - events keep their 30-day ts span (densification, not elongation:
   windows per hour grow x10, window COUNT stays — matching how a
   busier catalog commits more per hour).
-- documents get the disjoint-vocabulary word suffix and embeddings a
-  per-copy random rotation, reusing tools/scale_probe.build_scaled's
-  construction so duplicate/near-dup densities stay fixture-true.
+- documents get a disjoint-vocabulary word suffix and embeddings a
+  per-copy random rotation (build_scaled), so duplicate/near-dup
+  densities stay fixture-true.
 
 Usage: python tools/build_sf1.py [--out /tmp/sf1] [--mult 10]
+
+A scale sweep builds one directory per multiple and measures each:
+
+    python tools/build_sf1.py --mult 3 --out /tmp/x3
+    SPARK_GRAFT_SF_DIR=/tmp/x3 python tools/measure.py dedup_ngram_jaccard
 """
 
 from __future__ import annotations
@@ -35,13 +40,14 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+from functools import reduce
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from iceberg_aws_event_based_table_management_spark.session import get_spark
-from tools.scale_probe import build_scaled
 
 BASE = "/root/testdata/sf0.1"
 STRIDE = 10_000_000
@@ -57,6 +63,62 @@ OFFSET_COLS = {
     "events": ["event_id", "user_id"],
 }
 COPY_AS_IS = ["region", "nation"]
+
+
+def build_scaled(spark, mult: int, out: str) -> None:
+    """Write documents and embeddings at ``mult`` x sf0.1 into ``out``.
+
+    Copy k of the documents gets every word suffixed with the copy tag,
+    so copies share no shingle/token vocabulary: within-copy duplicate
+    structure is replicated exactly, cross-copy similarity is zero, and
+    the true output (duplicate pairs, clusters) scales x k.  Identical
+    copies would inflate every duplicate cluster k-fold and make pair
+    counts grow k^2 by construction, measuring the fixture, not the
+    engine."""
+    docs = spark.read.parquet(f"{BASE}/documents.parquet")
+    parts = []
+    for k in range(mult):
+        c = docs.withColumn("doc_id", F.col("doc_id") + F.lit(k * STRIDE))
+        if k > 0:
+            c = c.withColumn(
+                "text", F.regexp_replace("text", r"(\S+)", f"$1x{k}")
+            ).withColumn("n_chars", F.length("text"))
+        parts.append(c)
+    scaled = reduce(DataFrame.unionByName, parts).repartition(max(4, 4 * mult))
+    scaled.write.mode("overwrite").parquet(os.path.join(out, "documents.parquet"))
+
+    # Embeddings: copy k applies a per-copy random rotation (an
+    # isometry): every within-copy inner product, and so every
+    # within-copy near-dup / kNN / centroid structure, is preserved
+    # exactly, while cross-copy cosines collapse to ~1/sqrt(d).  A
+    # sign-flip pattern is not enough: the fixture's vectors put ~60% of
+    # their mass in 2 of 64 dims, and flips that spared those dims
+    # leaked cross-copy pairs.
+    import numpy as np
+
+    emb = spark.read.parquet(f"{BASE}/embeddings.parquet")
+    dim = len(emb.select("embedding").first()[0])
+
+    def rotate(k: int):
+        q, _ = np.linalg.qr(np.random.RandomState(1000 + k).randn(dim, dim))
+        rot = q.astype(np.float64)
+
+        def fn(batches):
+            for pdf in batches:
+                mat = np.vstack(pdf["embedding"].map(np.asarray).to_numpy())
+                pdf = pdf.copy()
+                pdf["embedding"] = list((mat @ rot.T).astype(np.float32))
+                pdf["vec_id"] = pdf["vec_id"] + k * STRIDE
+                # label is the blocking key of the near-dup operators:
+                # shared labels would put rotated strangers in one block
+                pdf["label"] = pdf["label"] + k * 1000
+                yield pdf
+
+        return fn
+
+    eparts = [emb] + [emb.mapInPandas(rotate(k), schema=emb.schema) for k in range(1, mult)]
+    scaled = reduce(DataFrame.unionByName, eparts).repartition(max(4, 4 * mult))
+    scaled.write.mode("overwrite").parquet(os.path.join(out, "embeddings.parquet"))
 
 
 def main() -> int:
@@ -93,22 +155,12 @@ def main() -> int:
             for col in keys:
                 c = c.withColumn(col, F.col(col) + F.lit(k * STRIDE))
             parts.append(c)
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        u.repartition(4 * args.mult).write.mode("overwrite").parquet(
-            f"{args.out}/{t}.parquet"
-        )
+        scaled = reduce(DataFrame.unionByName, parts).repartition(4 * args.mult)
+        scaled.write.mode("overwrite").parquet(f"{args.out}/{t}.parquet")
         print(f"{t}: x{args.mult}", flush=True)
 
-    # documents + embeddings via the probe construction (disjoint
-    # vocabulary / rotated copies), then move into place
-    staged = build_scaled(spark, args.mult, args.out + "-docs")
-    for t in ("documents", "embeddings"):
-        spark.read.parquet(f"{staged}/{t}.parquet").write.mode("overwrite").parquet(
-            f"{args.out}/{t}.parquet"
-        )
-        print(f"{t}: x{args.mult} (probe construction)", flush=True)
+    build_scaled(spark, args.mult, args.out)
+    print(f"documents, embeddings: x{args.mult}", flush=True)
     return 0
 
 
