@@ -37,29 +37,64 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 ORACLE_SF_DIR = "/root/testdata/sf0.01"
 
 
-def parquet_num_rows(sf_dir: str, name: str) -> int | None:
-    """Exact row count of a fixture table from parquet FOOTER metadata —
-    pure driver-side file metadata, no Spark job, so query construction
-    stays lazy (the _pf_estimated_shingles discipline).  None when the
-    footer is unreadable (remote path, not-yet-written table); callers
-    must fall back to a scale-safe default, never force a plan off an
-    unknown size."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
+def _footers(sf_dir: str, name: str) -> list | None:
+    """Parquet FOOTER metadata of every file of a fixture table (a single
+    file or a directory of nested part files) — pure driver-side file
+    metadata, no Spark job, so query construction stays lazy.  None when
+    any footer is unreadable (remote path, not-yet-written table); the
+    caller's gate decides which plan an unknown size takes
+    (operators/gates.py)."""
     try:
+        import pyarrow as pa
         import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            files = [
-                os.path.join(root, f)
-                for root, _, fs in os.walk(path)
-                for f in fs
-                if f.endswith(".parquet")
-            ]
-        else:
-            files = [path]
-        return sum(pq.read_metadata(f).num_rows for f in files)
-    except Exception:
+    except ImportError:
         return None
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if os.path.isdir(path):
+        files = [
+            os.path.join(root, f)
+            for root, _, fs in os.walk(path)
+            for f in fs
+            if f.endswith(".parquet")
+        ]
+    else:
+        files = [path]
+    try:
+        return [pq.read_metadata(f) for f in files]
+    except (OSError, pa.ArrowException):
+        return None
+
+
+def parquet_num_rows(sf_dir: str, name: str) -> int | None:
+    """Exact row count of a fixture table from its footers; None when
+    a footer is unreadable."""
+    mds = _footers(sf_dir, name)
+    return None if mds is None else sum(md.num_rows for md in mds)
+
+
+def parquet_column_bytes(sf_dir: str, name: str, column: str) -> int | None:
+    """Σ total_UNCOMPRESSED_size of `column`'s chunks over every row
+    group of a fixture table, from its footers; None when a footer is
+    unreadable or no chunk of `column` exists.  Uncompressed size keeps
+    the compression codec out of the measure: zstd on a repetitive
+    corpus can beat any assumed ratio, so a compressed-byte measure
+    could under-count and pick the broadcast past its payload cap.
+    Residual caveat: a corpus of mass EXACT-duplicate values whose
+    dictionary encoding sticks stores each distinct value once and can
+    still under-count; on unique-value columns the writer falls back
+    to PLAIN and this tracks logical bytes within ~3% (measured on the
+    sf0.001-0.1 fixtures)."""
+    mds = _footers(sf_dir, name)
+    if mds is None:
+        return None
+    chunks = [
+        md.row_group(rg).column(ci)
+        for md in mds
+        for rg in range(md.num_row_groups)
+        for ci in range(md.row_group(rg).num_columns)
+    ]
+    sizes = [c.total_uncompressed_size for c in chunks if c.path_in_schema == column]
+    return sum(sizes) if sizes else None
 
 
 #: Per-session memo of the fixture-table DataFrame HANDLES (lazy plans,

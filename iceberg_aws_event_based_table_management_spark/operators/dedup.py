@@ -38,27 +38,6 @@ def exact_dedup(documents: DataFrame, keep: str = "min") -> DataFrame:
     )
 
 
-def _stat_input_bytes(d: DataFrame) -> int | None:
-    """Total statted size of a file-backed frame's input files; None
-    for in-memory/checkpointed frames or non-local URIs."""
-    import os
-    from urllib.parse import urlparse
-
-    files = d.inputFiles()
-    if not files:
-        return None
-    total = 0
-    for f in files:
-        p = urlparse(f)
-        if p.scheme not in ("", "file"):
-            return None
-        try:
-            total += os.path.getsize(p.path or f)
-        except OSError:
-            return None
-    return total
-
-
 def _parse_spark_bytes(raw: str) -> int | None:
     """Spark size-string -> bytes, per JavaUtils.byteStringAsBytes:
     bare digits are bytes; otherwise an integer with a case-insensitive
@@ -440,20 +419,12 @@ def lsh_candidate_pairs(
     return cold_pairs.unionByName(hot_pairs).distinct()
 
 
-#: input-bytes ceiling under which the per-doc sizes table may be
-#: broadcast: at ~32 MB of compressed corpus (~300k docs) the sizes
-#: hash relation plus the shingle stages' execution memory coexist
-#: comfortably; past it the r12 sf10 smoke showed broadcast builds
-#: dying under GC pressure in a 16 GB heap.
-_SIZES_BROADCAST_SAFE_BYTES = 32 * 1024 * 1024
-
-
 def jaccard_pairs(
     sh: DataFrame,
     block: DataFrame | None = None,
     threshold: float = 0.5,
     df_cap: int | None = 1000,
-    broadcast_sizes: bool | None = None,
+    broadcast_sizes: bool = False,
     input_cached: bool = False,
     cross_at: int | None = None,
     sizes: DataFrame | None = None,
@@ -493,17 +464,10 @@ def jaccard_pairs(
     Catalyst's post-agg estimate reliably undershoots it, so at big
     corpora a static BroadcastExchange of ~doc_count rows races the
     shingle stages for one heap and dies (r12 sf10 smoke; the E116
-    lesson again).  None = self-probe the shingle input's statted
-    bytes; UNPROBEABLE inputs (checkpointed/in-memory frames always
-    return no inputFiles) take the shuffle_hash plan — broadcast is
-    only an optimization and the unknown-size fallback must never
-    pick the direction that OOMs (r12 ADVICE; operators/gates.py is
-    the same rule centralized).  Callers with a corpus handle pass
-    the footer-derived answer (gates.corpus_exceeds) to keep the
+    lesson again).  The default False pins shuffle_hash, the safe
+    direction for an input of unknown size; callers with a corpus
+    handle pass `not gates.corpus_exceeds(sf_dir)` to keep the
     small-corpus broadcast fast path."""
-    if broadcast_sizes is None:
-        nbytes = _stat_input_bytes(sh)
-        broadcast_sizes = nbytes is not None and nbytes <= _SIZES_BROADCAST_SAFE_BYTES
     from pyspark.sql.types import LongType
 
     if not isinstance(sh.schema["shingle"].dataType, LongType):

@@ -13,26 +13,28 @@ strategy from a size signal Catalyst does not have: the parquet
 FOOTER row count of the source table (driver-side file metadata, no
 Spark job, so query construction stays lazy — io.parquet_num_rows).
 
-This module is that pattern, extracted once (r12 verdict #5) so new
-call sites cannot re-introduce the bug by hand-rolling it:
+This module is that pattern, extracted once (r12 verdict #5), and the
+only place a table size becomes a plan branch:
 
-- ``corpus_exceeds(sf_dir)``      — the footer gate, safe direction =
-                                    "too big" on unknown size
+- ``corpus_exceeds(sf_dir, ...)`` — the footer gate: row count, or
+                                    one column's uncompressed bytes
 - ``pin_join_side(df, small)``    — broadcast | shuffle_hash pin
 
 ``shuffle_hash`` (not sort-merge) is the big-corpus pin: the hash
 build stays per-partition (no driver relation), and it skips the sort
-a merge join would pay on the corpus-sized side.  Broadcast is ONLY
-an optimization — every gated plan is correct under either strategy,
-so the gate's unknown-size fallback must always choose the shuffle
-plan (an oversized broadcast is an OOM; an unnecessary shuffle is a
-few seconds).
+a merge join would pay on the corpus-sized side.
 
-pipeline_ext6 (E116) keeps its finer-grained byte-level gate
-(``_pf_estimated_shingles`` — footer UNCOMPRESSED text bytes, needed
-there because the broadcast payload is the shingle-set table, whose
-size tracks text volume, not doc count); its fallback direction
-matches this module's.
+Which way an UNKNOWN size falls (unreadable footer, absent column) is
+the caller's ``unknown=``, and it has exactly two answers:
+
+- ``unknown=True`` (default) for branches that change only the PLAN —
+  broadcast vs shuffle, checkpoint vs recompute, one scan vs three.
+  Every such plan is correct either way, and the unsafe
+  direction is the one that OOMs (an oversized broadcast), while the
+  big plan costs a few seconds; so unknown means big.
+- ``unknown=False`` for branches that change the emitted VALUES
+  (a sampled audit slice, sketch quantiles).  There an unknown size
+  must keep the exact answer; so unknown means small.
 """
 
 from __future__ import annotations
@@ -54,16 +56,19 @@ def corpus_exceeds(
     sf_dir: str,
     table: str = "documents",
     cutoff: int = CORPUS_BROADCAST_MAX_DOCS,
+    *,
+    column: str | None = None,
+    unknown: bool = True,
 ) -> bool:
-    """True when `table`'s footer row count exceeds `cutoff` — or when
-    the footer is unreadable (remote path, not-yet-written table).
-    Unknown size MUST gate to the shuffle plan: broadcast is only an
-    optimization, and the unsafe direction is the one that OOMs
-    (r12 ADVICE — checkpointed/in-memory inputs are unprobeable and
-    were silently taking the broadcast fast path at any corpus size).
-    """
-    n = io.parquet_num_rows(sf_dir, table)
-    return n is None or n > cutoff
+    """True when `table`'s footer row count — or, given `column`, that
+    column's summed uncompressed bytes — exceeds `cutoff`; `unknown`
+    when the footer is unreadable or the column absent (see the module
+    docstring for which direction a caller picks)."""
+    if column is None:
+        n = io.parquet_num_rows(sf_dir, table)
+    else:
+        n = io.parquet_column_bytes(sf_dir, table, column)
+    return unknown if n is None else n > cutoff
 
 
 def pin_join_side(df: DataFrame, small: bool) -> DataFrame:

@@ -170,11 +170,13 @@ def write_table(spark: SparkSession, df: DataFrame, table_dir: str, n_files: int
     append_snapshot(spark, table_dir, "append")
 
 
-def file_inventory(spark: SparkSession, table_dir: str) -> DataFrame:
-    """The `<table>.files` metadata analog, from the real filesystem."""
+def file_inventory(spark: SparkSession, table_dir: str) -> tuple[DataFrame, int]:
+    """The `<table>.files` metadata analog, from the real filesystem,
+    and its exact file count (the listing's length — no Spark job)."""
     paths = _list_data_files(table_dir)
     rows = [(os.path.basename(table_dir), p, os.path.getsize(p)) for p in paths]
-    return spark.createDataFrame(rows, "table_name string, file_path string, file_size_bytes long")
+    inv = spark.createDataFrame(rows, "table_name string, file_path string, file_size_bytes long")
+    return inv, len(rows)
 
 
 def compact_table(
@@ -194,8 +196,8 @@ def compact_table(
     files, and commits one REPLACE snapshot per group (partial
     progress) or one for the whole run.
     """
-    inv = file_inventory(spark, table_dir)
-    planned = plan_binpack_groups(inv, max_group_size_bytes)
+    inv, n_files = file_inventory(spark, table_dir)
+    planned = plan_binpack_groups(inv, max_group_size_bytes, n_files=n_files)
     groups = (
         planned.groupBy("group_id")
         .agg(

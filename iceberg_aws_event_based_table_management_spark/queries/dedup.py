@@ -150,7 +150,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hashes them immediately anyway) — skip materializing the gram
     # strings (r15, §2.3 narrower types at the hottest row count).
     sh = D.shingles(docs, 3, hashed=True)
-    pairs = D.jaccard_pairs(sh, threshold=0.5)
+    pairs = D.jaccard_pairs(sh, threshold=0.5, broadcast_sizes=not gates.corpus_exceeds(sf_dir))
     return pairs.select(
         "doc_id_a",
         "doc_id_b",
@@ -260,9 +260,7 @@ def dedup_near_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         prof.select("doc_id", "signature"), bands=8, rows_per_band=4,
         max_corpus_docs=io.parquet_num_rows(sf_dir, "documents"),
     )
-    # The checkpointed shingle table is unprobeable (no inputFiles), so
-    # jaccard_pairs' self-probe would pin the shuffle plan at every sf;
-    # the FOOTER gate keeps the small-corpus broadcast fast path and
+    # The FOOTER gate keeps the small-corpus broadcast fast path and
     # flips to shuffle_hash only past the doc cutoff (r12 ADVICE).
     verified = D.jaccard_pairs(
         sh, block=cands, threshold=0.5,
@@ -326,7 +324,11 @@ def dedup_near_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     harness canonicalizes results with pandas sort_values, which cannot
     sort rows on list-valued cells (r4 driver TypeError)."""
     docs = io.table(spark, sf_dir, "documents").select("doc_id", "text")
-    pairs = D.jaccard_pairs(D.shingles(docs, 3, hashed=True), threshold=0.5)
+    pairs = D.jaccard_pairs(
+        D.shingles(docs, 3, hashed=True),
+        threshold=0.5,
+        broadcast_sizes=not gates.corpus_exceeds(sf_dir),
+    )
     comp = D.connected_components(pairs)
     return comp.groupBy("component_id").agg(
         F.count("*").alias("n_docs"),
@@ -597,14 +599,13 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         cross_at=_INC_OFFSET,
         max_corpus_docs=_inc_max_corpus_docs(sf_dir),
     )
-    # sh is checkpointed (unprobeable) — footer-gate the size-join
-    # strategy like dedup_near_verified above (r12 ADVICE).  cross_at
-    # pushes the cross-set restriction into the verify emitter too
-    # (r15): base x base co-occurring pairs — the bulk of the corpus's
-    # pair volume — are never emitted or shuffled into the
-    # intersection count; the block semi-join that used to drop them
-    # post-shuffle now only prunes cross pairs outside the LSH
-    # candidate set.
+    # Footer-gate the size-join strategy like dedup_near_verified
+    # above (r12 ADVICE).  cross_at pushes the cross-set restriction
+    # into the verify emitter too (r15): base x base co-occurring
+    # pairs — the bulk of the corpus's pair volume — are never emitted
+    # or shuffled into the intersection count; the block semi-join
+    # that used to drop them post-shuffle now only prunes cross pairs
+    # outside the LSH candidate set.
     cross = D.jaccard_pairs(
         sh, block=cross_cands, threshold=0.5,
         broadcast_sizes=not gates.corpus_exceeds(sf_dir),
@@ -830,7 +831,11 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_join(F.slice(w, 1, n_keep), " ").alias("text"),
     )
     aug = docs.unionByName(trunc)
-    pairs = D.jaccard_pairs(D.shingles(aug, 3, hashed=True), threshold=0.0)
+    pairs = D.jaccard_pairs(
+        D.shingles(aug, 3, hashed=True),
+        threshold=0.0,
+        broadcast_sizes=not gates.corpus_exceeds(sf_dir),
+    )
     containment = F.col("n_common").cast("double") / F.least("n_a", "n_b")
     return (
         pairs.filter(containment >= 0.8)

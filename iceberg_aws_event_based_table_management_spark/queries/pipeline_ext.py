@@ -494,7 +494,11 @@ def dedup_cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle.  Quality ranks on ROUND(q,6) with doc_id tiebreak —
     engine-identical ordering."""
     docs = io.table(spark, sf_dir, "documents").select("doc_id", "text")
-    pairs = D.jaccard_pairs(D.shingles(docs, 3, hashed=True), threshold=0.5)
+    pairs = D.jaccard_pairs(
+        D.shingles(docs, 3, hashed=True),
+        threshold=0.5,
+        broadcast_sizes=not gates.corpus_exceeds(sf_dir),
+    )
     comp = D.connected_components(pairs)
     scored = docs.select("doc_id", TXo.quality_score_col().alias("q"))
     labeled = scored.join(comp, "doc_id", "left").withColumn(

@@ -342,11 +342,14 @@ def dedup_degree_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     count-sized, never corpus-sized); the profile is ≤max-degree
     rows."""
     from ..operators import dedup as D
+    from ..operators import gates
 
     docs = io.table(spark, sf_dir, "documents").select("doc_id", "text")
-    pairs = D.jaccard_pairs(D.shingles(docs, 3, hashed=True), threshold=0.5).select(
-        "doc_id_a", "doc_id_b"
-    )
+    pairs = D.jaccard_pairs(
+        D.shingles(docs, 3, hashed=True),
+        threshold=0.5,
+        broadcast_sizes=not gates.corpus_exceeds(sf_dir),
+    ).select("doc_id_a", "doc_id_b")
     ends = pairs.select(F.col("doc_id_a").alias("doc_id")).unionAll(
         pairs.select(F.col("doc_id_b").alias("doc_id"))
     )

@@ -1261,9 +1261,8 @@ def pagerank_integer_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unrolled iterations — interleaved A/B at sf1: 13.5 s vs 9.5 s
     # (bench_runs/ab_pagerank_sf1_r13.json) — so the safe plan engages
     # only past 20M lineitem rows (sf10 = 60M flips; graded sfs and
-    # sf1 keep the fast deserialized plan).  Unreadable footer takes
-    # the safe plan: its cost is seconds, the fast plan's is an OOM —
-    # same direction rule as operators/gates.py.
+    # sf1 keep the fast deserialized plan).  Unknown footer => safe
+    # plan (plan-only branch; operators/gates.py).
     from pyspark.storagelevel import StorageLevel
 
     from ..operators import gates

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from .. import config, io
 from ..operators import dedup as D
+from ..operators import gates
 from ..operators import similarity as S
 from ..operators.dedup import neutral_word_hash
 from ..registry import register
@@ -142,7 +143,9 @@ def split_cluster_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     like E79's sampler)."""
     docs = io.table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
     pairs = D.jaccard_pairs(
-        D.shingles(docs.select("doc_id", "text"), 3, hashed=True), threshold=0.5
+        D.shingles(docs.select("doc_id", "text"), 3, hashed=True),
+        threshold=0.5,
+        broadcast_sizes=not gates.corpus_exceeds(sf_dir),
     )
     comp = D.connected_components(pairs)
     assign = docs.join(comp, "doc_id", "left").select(

@@ -20,13 +20,12 @@ perturbing the rotation order of earlier registrations.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import io
 from ..operators import dedup as D
+from ..operators import gates
 from ..registry import register
 from .dedup import _JACCARD_ORACLE
 
@@ -308,94 +307,14 @@ def basket_part_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Broadcast the per-doc shingle-set table only while its measured hash
-# payload stays under ~64 MB (8 bytes/shingle); beyond that the
-# verification joins shuffle on doc_id.  Module-level so tests can pin
-# it to 0 and lock the no-forced-broadcast plan shape.
+# Broadcast the per-doc shingle-set table only while its hash payload
+# stays under ~64 MB (8 bytes/shingle); beyond that the verification
+# joins shuffle on doc_id.  The measure is documents.text's footer
+# UNCOMPRESSED bytes: a doc's word-3-shingle count is <= its word count
+# <= its byte length, so text bytes over-estimate shingles (the
+# scale-safe direction).  Module-level so tests can pin it to 0 and
+# lock the no-forced-broadcast plan shape.
 _PF_BCAST_MAX_SHINGLES = 8_000_000
-
-# Do NOT checkpoint the shingle table in the small-corpus regime (the
-# r10 "re-derive, don't materialize" posture, RE-CONFIRMED r15 on a
-# quiet machine): an early-r15 session measured the checkpoint 0.78×
-# under heavy CPU steal and flipped this True, but with steal at 0%
-# the interleaved ABBA reverses hard — checkpoint-on 1.62× SLOWER than
-# the re-derive plan (4.0 s vs 2.1/2.5 s medians, 16 runs/variant,
-# bench_runs/ab_pf_third.json + ab_pf_ckptoff_vs_base.json): the
-# materialization barrier serializes the three shingle consumers that
-# otherwise run as independent parallel subtrees.  The big-corpus
-# branch (`not small_corpus`) keeps its checkpoint — there the shingle
-# table is shuffle-sized and the three re-extractions dominate.
-# Module-level so the A/B can flip it.
-_PF_SMALL_CKPT_SH = False
-# Same question for the PREFIX table (self-joined — 2 consumers):
-# False = re-derive per side (the r10 posture, still the measured
-# winner on the small branch: the df-join + double window re-run from
-# the checkpointed sh is cheaper than a second materialization
-# barrier).  Module-level so the A/B can flip it.
-_PF_SMALL_CKPT_PREF = False
-
-
-def _pf_estimated_shingles(sf_dir: str) -> int:
-    """Conservative shingle-count upper bound from documents.parquet's
-    FOOTER metadata — pure driver-side file metadata, no Spark job, so
-    building the E116 DataFrame stays LAZY (round-7 ADVICE: the
-    previous measured `sh.count()` ran full shingle extraction over
-    the corpus as a plan-construction side effect — explain/plan
-    tests/bench each paid a corpus scan, and at 100 TB plan build
-    alone would be a multi-minute job).
-
-    The bound reads the text column's total_UNCOMPRESSED_size from
-    each row group's column-chunk metadata: a doc's word-3-shingle
-    count is ≤ its word count ≤ its byte length, so Σ uncompressed
-    text bytes over-estimates shingles INDEPENDENT of the compression
-    codec's ratio.  (round-8 ADVICE: the previous compressed-byte
-    heuristic assumed ≤2-4× parquet compression — zstd on repetitive
-    corpora can exceed that, flipping the 'conservative' direction
-    and force-broadcasting a set table past the ~64 MB payload cap.
-    Footer uncompressed size removes the codec from the equation
-    entirely.)  Residual caveat, stated rather than hidden: a corpus
-    of mass EXACT-duplicate documents whose dictionary encoding
-    sticks can still under-count (the dict page stores each distinct
-    doc once) — but whole-doc exact dedup (D1) runs upstream of
-    near-dup in the pipeline, on realistic unique-doc corpora the
-    writer falls back to PLAIN and footer-uncompressed tracks logical
-    bytes within ~3% (measured on the sf0.001-0.1 testdata), and the
-    gate's failure mode is an oversized broadcast (perf), never a
-    wrong answer.  Over-estimating only pushes toward the doc_id
-    shuffle join, which is the scale-safe path anyway (the broadcast
-    is a small-corpus fast path, never a correctness dependency)."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            files = [
-                os.path.join(root, f)
-                for root, _, fs in os.walk(path)
-                for f in fs
-                if f.endswith(".parquet")
-            ]
-        else:
-            files = [path]
-        total = 0
-        for f in files:
-            md = pq.read_metadata(f)
-            for rg in range(md.num_row_groups):
-                row_group = md.row_group(rg)
-                for ci in range(row_group.num_columns):
-                    col = row_group.column(ci)
-                    if col.path_in_schema == "text":
-                        total += col.total_uncompressed_size
-        if total == 0:
-            # No text column found in any footer: metadata layout we
-            # don't understand — never force the broadcast.
-            return _PF_BCAST_MAX_SHINGLES + 1
-        return total
-    except Exception:
-        # Unknown size (remote/object-store path, unreadable footer):
-        # never force the broadcast — fall back to the shuffle join
-        # and let AQE decide.
-        return _PF_BCAST_MAX_SHINGLES + 1
 
 
 @register(
@@ -435,7 +354,13 @@ def dedup_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2.3s at sf0.1); big corpus -> checkpoint both multi-consumer
     # tables (the r10 x30 cliff fix: without materialization the
     # ranking chain executes once per alias and the x30 probe paid 5x).
-    small_corpus = _pf_estimated_shingles(sf_dir) <= _PF_BCAST_MAX_SHINGLES
+    # The small-branch no-checkpoint posture was re-confirmed r15 on a
+    # quiet machine: checkpoint-on ran 1.62x SLOWER (ABBA, 16 runs per
+    # variant, bench_runs/ab_pf_third.json + ab_pf_ckptoff_vs_base.json)
+    # because the barrier serializes the three shingle consumers.
+    small_corpus = not gates.corpus_exceeds(
+        sf_dir, cutoff=_PF_BCAST_MAX_SHINGLES, column="text"
+    )
     # hashed=True (r15): every downstream use is key-equality or the
     # (df, shingle) total order — the prefix-filtering theorem needs
     # only SOME consistent global total order with df ascending, so
@@ -447,7 +372,7 @@ def dedup_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # carry 8-byte longs (the verification already hashed — its
     # ~2^-64 collision note covers the whole pipeline now).
     sh = D.shingles(docs, 3, hashed=True)
-    if not small_corpus or _PF_SMALL_CKPT_SH:
+    if not small_corpus:
         sh = sh.localCheckpoint(eager=False)
     # Only non-singleton shingles need a df row: absent means df=1
     # (the vast majority), so the join side shrinks from ~|shingles|
@@ -480,7 +405,7 @@ def dedup_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= F.floor(F.col("n") / 2) + 1)
         .select("doc_id", "shingle", "n", "rn")
     )
-    if not small_corpus or _PF_SMALL_CKPT_PREF:
+    if not small_corpus:
         pref = pref.localCheckpoint(eager=False)
     # Length filter (lossless for J >= 0.5): n_common <= min(a,b) and
     # J >= 1/2 force 2*min(a,b) >= max(a,b), so size-incompatible
@@ -498,12 +423,10 @@ def dedup_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus -> shuffle equi-join on shingle, the PPJoin-correct 100 TB
     # plan (work tracks prefix postings; shuffle_hash keeps the hash
     # build per-partition and skips the sort a merge join would pay).
-    pb = pref.alias("pb")
-    pb = F.broadcast(pb) if small_corpus else pb.hint("shuffle_hash")
     cands = (
         pref.alias("pa")
         .join(
-            pb,
+            gates.pin_join_side(pref.alias("pb"), small_corpus),
             (F.col("pa.shingle") == F.col("pb.shingle"))
             & (F.col("pa.doc_id") < F.col("pb.doc_id"))
             & (F.col("pa.n") <= 2 * F.col("pb.n"))
@@ -554,28 +477,20 @@ def dedup_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is exact up to a ~|A|·|B|/2⁶⁴ per-pair collision (the same
     # trade dedup_ngram_jaccard's hashed join keys make).  The set
     # table is |docs| rows with an 8·|shingles|-byte payload, so the
-    # broadcast decision is gated on the source parquet's ON-DISK
-    # size (cheap driver metadata — construction stays lazy, no
-    # corpus-scanning count job at plan-build time), conservatively
-    # converted to a shingle estimate and compared against
+    # same text-bytes footer gate pins its join: broadcast under
     # _PF_BCAST_MAX_SHINGLES (~64 MB of hash payload); above it the
-    # sets shuffle-join on doc_id — the 100 TB path, work still
-    # ∝ Σ_cand(|A|+|B|) — instead of OOMing the driver.
-    arrs = sh.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("shingle")).alias("sset"),
-        F.count("*").alias("n"),
+    # sets shuffle_hash-join on doc_id — the 100 TB path, work still
+    # ∝ Σ_cand(|A|+|B|) — instead of OOMing the driver.  The pin is
+    # explicit both ways: Catalyst's estimate of a collect_list
+    # aggregate is unreliable (at x30 it chose BuildRight broadcast
+    # over the gate's intent).
+    arrs = gates.pin_join_side(
+        sh.groupBy("doc_id").agg(
+            F.sort_array(F.collect_list("shingle")).alias("sset"),
+            F.count("*").alias("n"),
+        ),
+        small_corpus,
     )
-    if small_corpus:
-        arrs = F.broadcast(arrs)
-    else:
-        # The footer gate said the set table is too big to broadcast —
-        # but Catalyst's own estimate of a collect_list aggregate
-        # output is unreliable (measured: it still chose BuildRight
-        # broadcast at x30, overriding the gate's intent).  Pin the
-        # scale-safe plan: shuffle hash join on doc_id, per-partition
-        # hash build, no driver-side relation, no sort of the array
-        # payload.
-        arrs = arrs.hint("shuffle_hash")
     inter = (
         cands.join(
             arrs.select(
@@ -619,11 +534,10 @@ _ZQ_FRACS = [k / 16 for k in range(1, 16)]
 # Above this row count the boundary stats pass swaps exact
 # `percentile` (whose aggregation buffer holds every distinct value
 # with counts — the stats pass was the E117 smoke's whole cost, exp
-# 1.12) for `approx_percentile` (bounded GK sketch).  Same gate
-# DIRECTION as agg_approx_distinct's sampled anchor: the swap changes
-# emitted boundary VALUES, so an unreadable footer keeps the exact
-# path (answer-preserving), and graded sfs sit far below the cutoff —
-# the oracle is byte-identical there.
+# 1.12) for `approx_percentile` (bounded GK sketch).  The swap changes
+# emitted boundary VALUES, so the gate is unknown=False (operators/
+# gates.py); graded sfs sit far below the cutoff — the oracle is
+# byte-identical there.
 _ZQ_EXACT_PCTL_MAX_ROWS = 20_000_000
 
 
@@ -683,12 +597,10 @@ def sort_compaction_zorder_quantile(spark: SparkSession, sf_dir: str) -> DataFra
     byte-identical."""
     li = io.table(spark, sf_dir, "lineitem")
     fr = ", ".join(repr(f) for f in _ZQ_FRACS)
-    n_rows = io.parquet_num_rows(sf_dir, "lineitem")
-    pctl = (
-        "approx_percentile"
-        if n_rows is not None and n_rows > _ZQ_EXACT_PCTL_MAX_ROWS
-        else "percentile"
+    approx = gates.corpus_exceeds(
+        sf_dir, "lineitem", _ZQ_EXACT_PCTL_MAX_ROWS, unknown=False
     )
+    pctl = "approx_percentile" if approx else "percentile"
     st = li.agg(
         F.expr(f"{pctl}(l_partkey, array({fr}))").alias("bp"),
         F.expr(f"{pctl}(l_suppkey, array({fr}))").alias("bs"),

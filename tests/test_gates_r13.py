@@ -72,29 +72,50 @@ def test_jaccard_unprobeable_input_pins_shuffle(spark):
     assert plan.count("strategy=shuffle_hash") >= 2
 
 
-def test_jaccard_small_file_backed_input_keeps_broadcast_path(spark, sf_dir):
-    """File-backed small corpora keep the broadcast fast path via the
-    statted-bytes probe (no shuffle_hash pin in the plan)."""
-    docs = eio.table(spark, sf_dir, "documents").select("doc_id", "text")
-    plan = _analyzed(D.jaccard_pairs(D.shingles(docs, 3)))
-    assert "strategy=shuffle_hash" not in plan
+#: Every registered query whose jaccard_pairs size joins are gated on
+#: the documents footer.
+_FOOTER_GATED_JACCARD = (
+    "dedup_near_verified",
+    "dedup_incremental_neardup",
+    "dedup_ngram_jaccard",
+    "dedup_near_clusters",
+    "dedup_cluster_survivors",
+    "dedup_containment_pairs",
+    "dedup_degree_profile",
+    "split_cluster_holdout",
+)
 
 
 def test_near_verified_footer_gate(spark, sf_dir, monkeypatch):
-    """The two checkpointed call sites (dedup_near_verified,
-    dedup_incremental_neardup) footer-gate broadcast_sizes: big corpus
-    -> shuffle_hash pins; small fixture -> broadcast path."""
+    """The jaccard_pairs callers footer-gate broadcast_sizes: big
+    corpus -> shuffle_hash pins; small fixture -> broadcast path.  The
+    plan asserted is jaccard_pairs' own output: the connected-component
+    callers collect their pairs at build time, so the final plan no
+    longer contains them."""
     import iceberg_aws_event_based_table_management_spark as engine
 
     engine.load_all_queries()
     qmap = engine.query_map()
-    for name in ("dedup_near_verified", "dedup_incremental_neardup"):
-        small_plan = _analyzed(qmap[name](spark, sf_dir))
-        assert "strategy=shuffle_hash" not in small_plan, name
+    real = D.jaccard_pairs
+    built = []
+
+    def spy(*a, **k):
+        built.append(real(*a, **k))
+        return built[-1]
+
+    monkeypatch.setattr(D, "jaccard_pairs", spy)
+
+    def pairs_plan(name):
+        built.clear()
+        qmap[name](spark, sf_dir)
+        assert len(built) == 1, name
+        return _analyzed(built[0])
+
+    for name in _FOOTER_GATED_JACCARD:
+        assert "strategy=shuffle_hash" not in pairs_plan(name), name
     monkeypatch.setattr(eio, "parquet_num_rows", lambda *a, **k: 10**9)
-    for name in ("dedup_near_verified", "dedup_incremental_neardup"):
-        big_plan = _analyzed(qmap[name](spark, sf_dir))
-        assert big_plan.count("strategy=shuffle_hash") >= 2, name
+    for name in _FOOTER_GATED_JACCARD:
+        assert pairs_plan(name).count("strategy=shuffle_hash") >= 2, name
 
 
 def test_tfidf_vocab_join_footer_gated(spark, sf_dir, monkeypatch):
@@ -112,6 +133,35 @@ def test_tfidf_vocab_join_footer_gated(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(eio, "parquet_num_rows", lambda *a, **k: 10**9)
     big_plan = _analyzed(q(spark, sf_dir))
     assert "strategy=shuffle_hash" in big_plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "tfidf_top_terms",
+        "dedup_near_verified",
+        "dedup_incremental_neardup",
+        "dedup_pair_span_align",
+        "dedup_minhash_estimate_audit",
+        "minhash_jaccard_regression",
+        "dedup_band_tuning_audit",
+        "pagerank_integer_bipartite",
+        "dedup_ngram_jaccard",
+    ],
+)
+def test_forced_big_branch_keeps_rows(spark, sf_dir, monkeypatch, name):
+    """Every plan-only gate branch is correct either way (operators/
+    gates.py), so forcing the big-corpus branch at a small SF must
+    return exactly the rows of the small branch the fixture takes."""
+    import iceberg_aws_event_based_table_management_spark as engine
+
+    engine.load_all_queries()
+    fn = engine.query_map()[name]
+    small = fn(spark, sf_dir).collect()
+    monkeypatch.setattr(gates, "corpus_exceeds", lambda *a, **k: True)
+    big = fn(spark, sf_dir).collect()
+    assert small, name
+    assert sorted(big, key=repr) == sorted(small, key=repr), name
 
 
 # ---------------------------------------------------------------------------

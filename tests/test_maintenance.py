@@ -45,6 +45,24 @@ def test_binpack_reduces_files_preserves_data(spark, small_table):
     assert res.rows_after == res.rows_before
 
 
+def test_compaction_plans_flat_window_for_small_table(spark, small_table, monkeypatch):
+    """compact_table passes the inventory's exact file count, so a
+    40-file table takes the flat cumsum window (no _bkt bucket column,
+    no offsets shuffle or broadcast join) rather than the two-level
+    plan kept for unknown or >2M-file inventories."""
+    real = maintenance.plan_binpack_groups
+    planned = []
+
+    def spy(*a, **k):
+        planned.append(real(*a, **k))
+        return planned[-1]
+
+    monkeypatch.setattr(maintenance, "plan_binpack_groups", spy)
+    maintenance.compact_table(spark, small_table, max_group_size_bytes=10_000_000)
+    assert len(planned) == 1
+    assert "_bkt" not in planned[0]._jdf.queryExecution().analyzed().toString()
+
+
 def test_partial_progress_one_replace_per_group(spark, small_table):
     res = maintenance.compact_table(
         spark,

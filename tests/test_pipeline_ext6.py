@@ -142,21 +142,31 @@ def test_cdc_apply_respects_tombstones(spark, sf_dir, qmap):
 
 
 def test_pf_shingle_estimate_metadata_branches(tmp_path):
-    """The E116 broadcast gate's size estimate must stay pure driver
+    """The E116 broadcast gate's size measure (io.parquet_column_bytes
+    behind gates.corpus_exceeds(column="text")) must stay pure driver
     metadata (parquet FOOTER, no Spark job) across all path shapes: a
     single parquet file, a directory-of-part-files sink (the
     production layout), and a missing/unreadable path — which must
-    fall back to never-broadcast, the scale-safe direction.  The
-    estimate is the text column's UNCOMPRESSED size, so heavy on-disk
+    gate to "big", never-broadcast, the scale-safe direction.  The
+    measure is the text column's UNCOMPRESSED size, so heavy on-disk
     compression (round-8 ADVICE: dictionary/zstd on repetitive
     corpora) cannot flip the bound's conservative direction."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from iceberg_aws_event_based_table_management_spark import io as eio
+    from iceberg_aws_event_based_table_management_spark.operators import gates
     from iceberg_aws_event_based_table_management_spark.queries.pipeline_ext6 import (
         _PF_BCAST_MAX_SHINGLES,
-        _pf_estimated_shingles,
     )
+
+    def text_bytes(sf):
+        return eio.parquet_column_bytes(str(sf), "documents", "text")
+
+    def big(sf, **kw):
+        return gates.corpus_exceeds(
+            str(sf), cutoff=_PF_BCAST_MAX_SHINGLES, column="text", **kw
+        )
 
     def write(path, texts):
         tbl = pa.table(
@@ -173,7 +183,7 @@ def test_pf_shingle_estimate_metadata_branches(tmp_path):
             if md.row_group(rg).column(ci).path_in_schema == "text"
         )
 
-    # single file: estimate == footer uncompressed text size, and for
+    # single file: measure == footer uncompressed text size, and for
     # a unique-doc corpus (the shape the gate serves — exact dedup D1
     # runs upstream) that bounds logical chars ≥ words ≥ shingles,
     # independent of how hard zstd squeezes the file on disk
@@ -185,34 +195,42 @@ def test_pf_shingle_estimate_metadata_branches(tmp_path):
     ]
     f = tmp_path / "documents.parquet"
     write(f, texts)
-    est = _pf_estimated_shingles(str(tmp_path))
+    est = text_bytes(tmp_path)
     assert est == uncompressed_text_bytes(f)
     assert est >= sum(len(t) for t in texts)  # ≥ chars ≥ words ≥ shingles
     assert est > f.stat().st_size  # compressed size would under-count
+    assert not big(tmp_path)
+    assert gates.corpus_exceeds(
+        str(tmp_path), cutoff=est - 1, column="text"
+    ), "the gate compares the column bytes, not the row count"
 
     # directory of part files (sum across nested parts)
     d = tmp_path / "dircase" / "documents.parquet"
     (d / "sub").mkdir(parents=True)
     write(d / "part-0.parquet", ["alpha beta gamma"] * 10)
     write(d / "sub" / "part-1.parquet", ["delta epsilon"] * 5)
-    est_dir = _pf_estimated_shingles(str(tmp_path / "dircase"))
-    assert est_dir == uncompressed_text_bytes(d / "part-0.parquet") + (
-        uncompressed_text_bytes(d / "sub" / "part-1.parquet")
-    )
+    assert text_bytes(tmp_path / "dircase") == uncompressed_text_bytes(
+        d / "part-0.parquet"
+    ) + uncompressed_text_bytes(d / "sub" / "part-1.parquet")
 
-    # missing path: estimate must exceed the cap so the gate never
-    # force-broadcasts on unknown size
-    assert _pf_estimated_shingles(str(tmp_path / "nope")) > _PF_BCAST_MAX_SHINGLES
+    # missing path: the gate says "big", never force-broadcasting on
+    # unknown size
+    assert text_bytes(tmp_path / "nope") is None
+    assert big(tmp_path / "nope")
 
     # unreadable footer (not real parquet): same never-broadcast fallback
     bad = tmp_path / "badcase" / "documents.parquet"
     bad.parent.mkdir()
     bad.write_bytes(b"x" * 1234)
-    assert _pf_estimated_shingles(str(tmp_path / "badcase")) > _PF_BCAST_MAX_SHINGLES
+    assert big(tmp_path / "badcase")
+    # ...unless the branch changes emitted values: unknown=False keeps
+    # the exact (small) side
+    assert big(tmp_path / "badcase", unknown=False) is False
 
     # parquet without a text column: metadata we don't understand —
     # never force the broadcast
     nocol = tmp_path / "nocol" / "documents.parquet"
     nocol.parent.mkdir()
     pq.write_table(pa.table({"doc_id": [1, 2]}), nocol)
-    assert _pf_estimated_shingles(str(tmp_path / "nocol")) > _PF_BCAST_MAX_SHINGLES
+    assert text_bytes(tmp_path / "nocol") is None
+    assert big(tmp_path / "nocol")
