@@ -217,7 +217,13 @@ def snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     (AwsTableManagementMetricsEvaluator.java:74): table identity from
     user_id, snapshot id from event_id, operation from event_type.
     """
-    return table(spark, sf_dir, "events").select(
+    return snapshots_from(table(spark, sf_dir, "events"))
+
+
+def snapshots_from(events: DataFrame) -> DataFrame:
+    """The events -> snapshot-lineage projection over any events frame:
+    the fixture table, a replayed stream, or one of its micro-batches."""
+    return events.select(
         F.concat(F.lit("t"), F.col("user_id").cast("string")).alias("table_name"),
         F.col("event_id").alias("snapshot_id"),
         F.col("ts"),
@@ -225,7 +231,7 @@ def snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Exact oracle equivalent of snapshots() — keep in lockstep.
+# Exact oracle equivalent of snapshots_from() — keep in lockstep.
 SNAPSHOTS_CTE = """
   SELECT 't' || CAST(user_id AS VARCHAR) AS table_name,
          event_id AS snapshot_id,

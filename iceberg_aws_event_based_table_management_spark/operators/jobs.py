@@ -230,10 +230,7 @@ class LocalCompactionExecutor:
     def execute(self) -> None:
         """A19: fire-and-forget submit; A17/A18: persist the rendered
         job script first, like every EMR backend does."""
-        sql = (
-            f"CALL {config.CATALOG_NAME}.system.rewrite_data_files("
-            f"table => '{os.path.basename(self.table_dir)}')"
-        )
+        sql = render_optimize_sql(os.path.basename(self.table_dir), self.properties)
         self.script_path = write_job_script(
             os.path.join(self.table_dir, "_jobs"), render_python_job(sql), "py"
         )

@@ -223,9 +223,13 @@ def compact_table(
             df = df.repartition(n_out)
         staged = os.path.join(table_dir, f"_staged-{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(staged)
-        # swap: move staged files in, drop originals (per-group commit)
+        # swap: move staged files in, drop originals and their checksum
+        # sidecars (per-group commit)
         for p in g["paths"]:
             os.remove(p)
+            crc = os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
         for f_ in os.listdir(staged):
             if f_.endswith(".parquet"):
                 os.rename(

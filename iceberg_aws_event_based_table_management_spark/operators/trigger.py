@@ -19,7 +19,7 @@ cheap; partitioning by table_name keeps the window bounded per table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import config
@@ -32,23 +32,46 @@ def rank_lineage(snapshots: DataFrame) -> DataFrame:
     return snapshots.withColumn("lineage_rank", F.row_number().over(w))
 
 
-def pending_since_replace(snapshots: DataFrame, replace_op: str = config.REPLACE_OPERATION) -> DataFrame:
-    """A7: snapshots strictly newer than the newest REPLACE commit.
+def _flag_pending(snapshots: DataFrame, replace_op: str) -> DataFrame:
+    """The ranked lineage with ``is_pending``: strictly newer than the
+    table's newest REPLACE commit (the whole lineage when it has none).
 
-    Tables with no REPLACE keep their whole lineage.  Implemented as a
-    per-table window min over the REPLACE ranks — no join needed, one
-    pass over the ranked lineage.
+    A per-table window min over the REPLACE ranks — no join needed, one
+    pass over the ranked lineage, and both windows share one exchange.
+    The min is its own column so the window computes it once.
     """
-    ranked = rank_lineage(snapshots)
-    w = Window.partitionBy("table_name")
     replace_rank = F.min(
         F.when(F.col("operation") == F.lit(replace_op), F.col("lineage_rank"))
-    ).over(w)
+    ).over(Window.partitionBy("table_name"))
+    rr = F.col("replace_rank")
     return (
-        ranked.withColumn("replace_rank", replace_rank)
-        .filter(F.col("replace_rank").isNull() | (F.col("lineage_rank") < F.col("replace_rank")))
+        rank_lineage(snapshots)
+        .withColumn("replace_rank", replace_rank)
+        .withColumn("is_pending", rr.isNull() | (F.col("lineage_rank") < rr))
         .drop("replace_rank")
     )
+
+
+def pending_since_replace(snapshots: DataFrame, replace_op: str = config.REPLACE_OPERATION) -> DataFrame:
+    """A7: snapshots strictly newer than the newest REPLACE commit."""
+    return _flag_pending(snapshots, replace_op).filter(F.col("is_pending")).drop("is_pending")
+
+
+def decision_columns(
+    n: Column, age: Column, commit_threshold: int, time_threshold_ms: int
+) -> list[Column]:
+    """The time-OR-count rule (:119-135) over a pending count ``n`` and
+    an oldest-pending age ``age`` (-1 when nothing is pending): the
+    five decision columns every trigger form emits."""
+    time_trigger = age >= F.lit(time_threshold_ms)
+    commit_trigger = n >= F.lit(commit_threshold)
+    return [
+        n.alias("n_commits_since_replace"),
+        age.alias("max_pending_age_ms"),
+        time_trigger.alias("time_trigger"),
+        commit_trigger.alias("commit_trigger"),
+        (time_trigger | commit_trigger).alias("should_optimize"),
+    ]
 
 
 def decide_optimize(
@@ -69,33 +92,15 @@ def decide_optimize(
     decision is reproducible (and oracle-checkable).
     """
     now_ms = F.unix_millis(F.lit(now).cast("timestamp"))
-    # One-pass formulation: flag pending rows inside the ranked lineage
-    # and aggregate conditionally — the groupBy naturally covers tables
-    # with zero pending commits, so no distinct + left join is needed
-    # (one shuffle on table_name total; both window functions share the
-    # same exchange).
-    ranked = rank_lineage(snapshots)
-    w = Window.partitionBy("table_name")
-    replace_rank = F.min(
-        F.when(F.col("operation") == F.lit(replace_op), F.col("lineage_rank"))
-    ).over(w)
-    flagged = ranked.withColumn(
-        "is_pending",
-        replace_rank.isNull() | (F.col("lineage_rank") < replace_rank),
-    )
-    agg = flagged.groupBy("table_name").agg(
+    # Aggregating over the flagged lineage covers tables with zero
+    # pending commits, so no distinct + left join is needed (one
+    # shuffle on table_name total).
+    agg = _flag_pending(snapshots, replace_op).groupBy("table_name").agg(
         F.count(F.when(F.col("is_pending"), 1)).alias("n_pending"),
-        F.max(
-            F.when(F.col("is_pending"), now_ms - epoch_ms("ts"))
-        ).alias("max_age"),
+        F.max(F.when(F.col("is_pending"), now_ms - epoch_ms("ts"))).alias("max_age"),
     )
     n = F.coalesce(F.col("n_pending"), F.lit(0))
     age = F.coalesce(F.col("max_age"), F.lit(-1)).cast("long")
     return agg.select(
-        F.col("table_name"),
-        n.alias("n_commits_since_replace"),
-        age.alias("max_pending_age_ms"),
-        (age >= F.lit(time_threshold_ms)).alias("time_trigger"),
-        (n >= F.lit(commit_threshold)).alias("commit_trigger"),
-        ((age >= F.lit(time_threshold_ms)) | (n >= F.lit(commit_threshold))).alias("should_optimize"),
+        F.col("table_name"), *decision_columns(n, age, commit_threshold, time_threshold_ms)
     )

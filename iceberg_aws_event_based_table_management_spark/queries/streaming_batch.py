@@ -312,8 +312,8 @@ def stream_stateful_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluator as an applyInPandasWithState operator — per-table
     (count, oldest-pending-ts) state in Spark's state store, decision
     emitted in update mode per micro-batch.  The state transition is
-    arrival-order-insensitive (REPLACE watermark + pending-set filter,
-    replay.py:141), so the final emission per table (max
+    arrival-order-insensitive (REPLACE watermark + pending-set filter in
+    replay.stateful_trigger_stream), so the final emission per table (max
     n_commits_seen) equals the batch A10 decision regardless of
     micro-batch order — the A10 decision CTE is therefore an exact
     oracle (also asserted in tests/test_streaming.py)."""
@@ -341,13 +341,13 @@ def stream_stateful_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"WITH {_DECISION_CTE} SELECT * FROM decision",
 )
 def stream_should_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C44 (real streaming, SQL oracle): the trigger evaluator run
-    incrementally via foreachBatch over the replayed commit stream —
-    the A10 decision recomputed per micro-batch against accumulated
-    snapshot state.  The state table accumulates ALL events before the
-    final evaluation, so the result equals the batch decision
-    independent of batch order — A10's decision CTE is an exact
-    oracle (also asserted in tests/test_streaming.py)."""
+    """C44 (real streaming, SQL oracle): the trigger evaluator over a
+    lineage accumulated via foreachBatch from the replayed commit
+    stream — each micro-batch appends to the snapshot state, and the
+    A10 decision runs once over it after the replay ends.  The state
+    table holds ALL events by then, so the result equals the batch
+    decision independent of batch order — A10's decision CTE is an
+    exact oracle (also asserted in tests/test_streaming.py)."""
     with tempfile.TemporaryDirectory() as tmp:
         path = replay.replay_dir(spark, sf_dir, tmp)
         out = replay.run_stateful_trigger(

@@ -25,13 +25,14 @@ import os
 import shutil
 import tempfile
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
-from .. import io
+from .. import config, io
+from ..operators import trigger
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -60,19 +61,24 @@ def replay_dir(spark: SparkSession, sf_dir: str, workdir: str, n_chunks: int = 8
     ev.withColumn("chunk", chunk).repartitionByRange(n_chunks, "chunk").write.partitionBy(
         "chunk"
     ).mode("overwrite").parquet(out)
-    # Pin strictly increasing mtimes per chunk: the file source orders
-    # micro-batches by (modification time, path), so this makes replay
-    # order — and therefore watermark progression — deterministic and
-    # event-time-ordered, not an accident of writer timing.  Epoch base
-    # is arbitrary; only the per-chunk ordering matters.
-    base = 1_600_000_000
     for k in range(1, n_chunks + 1):
         cdir = os.path.join(out, f"chunk={k}")
-        if not os.path.isdir(cdir):
-            continue
-        for fname in os.listdir(cdir):
-            os.utime(os.path.join(cdir, fname), (base + k, base + k))
+        if os.path.isdir(cdir):
+            _pin_slot(cdir, k)
     return out
+
+
+def _pin_slot(chunk_dir: str, slot: int) -> None:
+    """Pin every file of a chunk directory to replay slot ``slot``.
+
+    The file source orders micro-batches by (modification time, path),
+    so strictly increasing per-slot mtimes make replay order — and
+    therefore watermark progression — deterministic, not an accident of
+    writer timing.  The epoch base is arbitrary; only the order matters.
+    """
+    t = 1_600_000_000 + slot
+    for fname in os.listdir(chunk_dir):
+        os.utime(os.path.join(chunk_dir, fname), (t, t))
 
 
 SENTINEL_USER_ID = -1
@@ -126,16 +132,26 @@ def append_watermark_sentinel(
     never reaches the sink; consumers filter `user_id >= 0` anyway as
     belt and braces.  Unbounded production streams don't need this —
     new data plays the same role."""
+    _write_sentinels(spark, sf_dir, replay_path, [n_chunks + 1])
+
+
+def _write_sentinels(spark: SparkSession, sf_dir: str, replay_path: str, slots) -> None:
+    """Write the far-future sentinel event (10 days past the fixture's
+    max event time) as its own chunk in each replay slot of ``slots``.
+
+    Empty fixture: no max ts, so no sentinel — the stream sees only the
+    (absent) real chunks and emits nothing, as the oracle does."""
     max_ts = events_max_ts(spark, sf_dir)
+    if max_ts is None:
+        return
     sentinel = spark.createDataFrame(
         [(-1, max_ts + datetime.timedelta(days=10), SENTINEL_USER_ID, "sentinel", 0.0, "{}")],
         EVENT_SCHEMA,
     )
-    cdir = os.path.join(replay_path, f"chunk={n_chunks + 1}")
-    sentinel.coalesce(1).write.mode("overwrite").parquet(cdir)
-    base = 1_600_000_000
-    for fname in os.listdir(cdir):
-        os.utime(os.path.join(cdir, fname), (base + n_chunks + 1, base + n_chunks + 1))
+    for slot in slots:
+        cdir = os.path.join(replay_path, f"chunk={slot}")
+        sentinel.coalesce(1).write.mode("overwrite").parquet(cdir)
+        _pin_slot(cdir, slot)
 
 
 def replay_dir_late_chunk(
@@ -169,46 +185,20 @@ def replay_dir_late_chunk(
     source sees zero files and the query emits nothing, which is what
     the oracle returns too."""
     path = replay_dir(spark, sf_dir, workdir, n_chunks)
-    base = 1_600_000_000
-    # sentinels occupy replay slots n_chunks+1 .. n_chunks+n_sentinels
-    max_ts = events_max_ts(spark, sf_dir)
-    if max_ts is not None:
-        sentinel = spark.createDataFrame(
-            [
-                (
-                    -1,
-                    max_ts + datetime.timedelta(days=10),
-                    SENTINEL_USER_ID,
-                    "sentinel",
-                    0.0,
-                    "{}",
-                )
-            ],
-            EVENT_SCHEMA,
-        )
-        for s in range(1, n_sentinels + 1):
-            cdir = os.path.join(path, f"chunk={n_chunks + s}")
-            sentinel.coalesce(1).write.mode("overwrite").parquet(cdir)
-            for fname in os.listdir(cdir):
-                os.utime(
-                    os.path.join(cdir, fname),
-                    (base + n_chunks + s, base + n_chunks + s),
-                )
+    _write_sentinels(spark, sf_dir, path, range(n_chunks + 1, n_chunks + n_sentinels + 1))
     # the late chunk replays LAST: strictly after every sentinel batch
     late_dir = os.path.join(path, f"chunk={late_chunk}")
     if os.path.isdir(late_dir):
-        t = base + n_chunks + n_sentinels + 1
-        for fname in os.listdir(late_dir):
-            os.utime(os.path.join(late_dir, fname), (t, t))
+        _pin_slot(late_dir, n_chunks + n_sentinels + 1)
     return path
 
 
 REPLAY_SHUFFLE_PARTITIONS = 8
 
 
-@contextmanager
-def replay_shuffle_scope(spark: SparkSession, n: int = REPLAY_SHUFFLE_PARTITIONS):
-    """Bound the stateful-shuffle width while a replay query runs.
+def _run_available_now(spark: SparkSession, writer: DataStreamWriter) -> None:
+    """Run a configured stream writer as a bounded availableNow query
+    to completion, at the replay shuffle width.
 
     A streaming query pins its state-partition count to
     ``spark.sql.shuffle.partitions`` at start; the bounded replays
@@ -216,13 +206,13 @@ def replay_shuffle_scope(spark: SparkSession, n: int = REPLAY_SHUFFLE_PARTITIONS
     so the session-wide 32 means 32 state-store commits + Python
     worker rounds *per micro-batch* of near-empty partitions (51s ->
     8s at sf0.01 for the applyInPandasWithState trigger).  Production
-    unbounded streams size this to the cluster instead — the scope
-    restores the caller's setting on exit.
+    unbounded streams size this to the cluster instead — the caller's
+    setting is restored on exit.
     """
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", str(REPLAY_SHUFFLE_PARTITIONS))
     try:
-        yield
+        writer.trigger(availableNow=True).start().awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
@@ -274,16 +264,13 @@ def run_to_parquet(stream_df: DataFrame, out_dir: str) -> DataFrame:
     keeps the empty-output case well-defined."""
     spark = stream_df.sparkSession
     sink = os.path.join(out_dir, "out")
-    with replay_shuffle_scope(spark):
-        q = (
-            stream_df.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", os.path.join(out_dir, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_available_now(
+        spark,
+        stream_df.writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", os.path.join(out_dir, "ckpt"))
+        .outputMode("append"),
+    )
     return spark.read.schema(stream_df.schema).parquet(sink)
 
 
@@ -303,15 +290,9 @@ def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "complete"
     pass output_mode="append".
     """
     spark = stream_df.sparkSession
-    with replay_shuffle_scope(spark):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_available_now(
+        spark, stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    )
     return spark.table(name)
 
 
@@ -388,8 +369,8 @@ def stateful_trigger_stream(
     events: DataFrame,
     *,
     now: str,
-    commit_threshold: int | None = None,
-    time_threshold_ms: int | None = None,
+    commit_threshold: int = config.COMMIT_THRESHOLD,
+    time_threshold_ms: int = config.TIME_THRESHOLD_MS,
 ) -> DataFrame:
     """C44 (managed-state form): ``shouldOptimizeDataFiles``
     (AwsTableManagementMetricsEvaluator.java:108-140) as a custom
@@ -406,15 +387,13 @@ def stateful_trigger_stream(
     — O(commits since last optimize), i.e. ~commit-threshold entries —
     so arrival order across micro-batches doesn't matter: a REPLACE
     arriving after newer commits still evicts exactly the commits the
-    batch evaluator's lineage rank would cut.  Batch equivalence is
-    asserted in tests/test_streaming.py.
+    batch evaluator's lineage rank would cut.  The operator emits the
+    pending count and age; the time-OR-count rule is
+    ``trigger.decision_columns``, applied after it.  Batch equivalence
+    is asserted in tests/test_streaming.py.
     """
     import pandas as pd
 
-    from .. import config
-
-    ct = commit_threshold if commit_threshold is not None else config.COMMIT_THRESHOLD
-    tt = time_threshold_ms if time_threshold_ms is not None else config.TIME_THRESHOLD_MS
     now_ms = int(pd.Timestamp(now, tz="UTC").value // 1_000_000)
     replace_op = config.REPLACE_OPERATION
 
@@ -422,11 +401,8 @@ def stateful_trigger_stream(
         [
             T.StructField("table_name", T.StringType()),
             T.StructField("n_commits_seen", T.LongType()),  # monotonic high-watermark
-            T.StructField("n_commits_since_replace", T.LongType()),
-            T.StructField("max_pending_age_ms", T.LongType()),
-            T.StructField("time_trigger", T.BooleanType()),
-            T.StructField("commit_trigger", T.BooleanType()),
-            T.StructField("should_optimize", T.BooleanType()),
+            T.StructField("n_pending", T.LongType()),
+            T.StructField("max_age", T.LongType()),
         ]
     )
     state_schema = T.StructType(
@@ -461,33 +437,29 @@ def stateful_trigger_stream(
         state.update(
             (seen, r_ts, r_id, [p[0] for p in pending], [p[1] for p in pending])
         )
-        n = len(pending)
         oldest = min((p[0] for p in pending), default=-1)
-        age = (now_ms - oldest) if oldest != -1 else -1
         yield pd.DataFrame(
             {
                 "table_name": [table_name],
                 "n_commits_seen": [seen],
-                "n_commits_since_replace": [n],
-                "max_pending_age_ms": [age],
-                "time_trigger": [age >= tt],
-                "commit_trigger": [n >= ct],
-                "should_optimize": [age >= tt or n >= ct],
+                "n_pending": [len(pending)],
+                "max_age": [(now_ms - oldest) if oldest != -1 else -1],
             }
         )
 
-    snaps = events.select(
-        F.concat(F.lit("t"), F.col("user_id").cast("string")).alias("table_name"),
-        F.col("event_id").alias("snapshot_id"),
-        F.col("ts"),
-        F.col("event_type").alias("operation"),
-    )
-    return snaps.groupBy("table_name").applyInPandasWithState(
+    counts = io.snapshots_from(events).groupBy("table_name").applyInPandasWithState(
         update,
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="update",
         timeoutConf="NoTimeout",
+    )
+    return counts.select(
+        "table_name",
+        "n_commits_seen",
+        *trigger.decision_columns(
+            F.col("n_pending"), F.col("max_age"), commit_threshold, time_threshold_ms
+        ),
     )
 
 
@@ -499,39 +471,31 @@ def run_stateful_trigger(
     now: str,
     files_per_trigger: int = 2,
 ) -> DataFrame:
-    """C44: the reference's evaluator run incrementally — each
-    micro-batch appends to a snapshot-state table and re-evaluates the
-    batch decision (A10) over accumulated state via foreachBatch.
+    """C44: the reference's evaluator over an incrementally built
+    lineage — each micro-batch appends its snapshot rows to a
+    snapshot-state table via foreachBatch, and the batch decision (A10)
+    runs once over the accumulated state after the replay ends.
 
     This is the Spark-native analog of the per-commit `report()`
     callback: state lives in a table, the decision is the same
     declarative query, and the stream just drives incremental
-    accumulation.  Returns the final decision DataFrame.
+    accumulation.  Returns the final decision DataFrame (no rows when
+    the replay carried no events).
     """
-    from ..operators import trigger
-
     os.makedirs(state_dir, exist_ok=True)
     state_path = os.path.join(state_dir, "snapshots_state")
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        snaps = batch_df.select(
-            F.concat(F.lit("t"), F.col("user_id").cast("string")).alias("table_name"),
-            F.col("event_id").alias("snapshot_id"),
-            F.col("ts"),
-            F.col("event_type").alias("operation"),
-        )
-        snaps.write.mode("append").parquet(state_path)
-
-    with replay_shuffle_scope(spark):
-        q = (
-            read_stream(spark, replay_path, files_per_trigger)
-            .writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", os.path.join(state_dir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return trigger.decide_optimize(spark.read.parquet(state_path), now=now)
+    snaps = io.snapshots_from(read_stream(spark, replay_path, files_per_trigger))
+    _run_available_now(
+        spark,
+        snaps.writeStream.foreachBatch(
+            lambda batch_df, _: batch_df.write.mode("append").parquet(state_path)
+        ).option("checkpointLocation", os.path.join(state_dir, "ckpt")),
+    )
+    if os.path.isdir(state_path):
+        state = spark.read.parquet(state_path)
+    else:
+        state = spark.createDataFrame([], snaps.schema)
+    return trigger.decide_optimize(state, now=now)
 
 
 def run_merge_upsert_stream(
@@ -553,17 +517,20 @@ def run_merge_upsert_stream(
     exactly the batch as-of query (latest event per user) regardless
     of batch interleaving; that batch query is the SQL oracle.  State
     is bounded by key cardinality (one row per user),
-    localCheckpoint'ed per batch to truncate lineage.
+    localCheckpoint'ed per batch to truncate lineage.  No events means
+    no batch: the result is then empty, with the state schema.
     """
     from ..operators.lifecycle import merge_upsert
 
+    events = read_stream(spark, replay_path, files_per_trigger).select(
+        "user_id", "event_id", "ts", "event_type", "value"
+    )
     state: dict[str, DataFrame | None] = {"df": None}
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         latest = (
-            batch_df.select("user_id", "event_id", "ts", "event_type", "value")
-            .withColumn("rn", F.row_number().over(w))
+            batch_df.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .drop("rn")
         )
@@ -583,13 +550,12 @@ def run_merge_upsert_stream(
             )
         state["df"] = merged.localCheckpoint(eager=True)
 
-    with replay_shuffle_scope(spark):
-        q = (
-            read_stream(spark, replay_path, files_per_trigger)
-            .writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", os.path.join(ckpt_dir, "merge_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_available_now(
+        spark,
+        events.writeStream.foreachBatch(on_batch).option(
+            "checkpointLocation", os.path.join(ckpt_dir, "merge_ckpt")
+        ),
+    )
+    if state["df"] is None:
+        return spark.createDataFrame([], events.schema)
     return state["df"]

@@ -6,13 +6,15 @@ provably ignores (integer width, timestamp unit, string width)."""
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 
 import pyarrow as pa
 
 
 def _load_check():
-    spec = importlib.util.spec_from_file_location("check", "/root/repo/tools/check.py")
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools", "check.py")
+    spec = importlib.util.spec_from_file_location("check", path)
     mod = importlib.util.module_from_spec(spec)
     sys.modules["check"] = mod
     spec.loader.exec_module(mod)

@@ -54,12 +54,21 @@ SHORT_TEXTS = ["", "one", "two words", None]  # None = keep row 0's text
 def _batch_names() -> list[str]:
     """The round-8 to round-10 operator batches: every query that
     queries/pipeline_ext18 ... pipeline_ext31 register, plus the
-    round-10 out-of-order stream replay registered with the streaming
-    batch."""
+    streaming-batch replays whose empty fixture runs no micro-batch
+    (the out-of-order replay, the sentinel-flushed sessions and both
+    foreachBatch forms)."""
     engine.load_all_queries()
     mods = {f"{engine.__name__}.queries.pipeline_ext{i}" for i in range(18, 32)}
     names = [n for n, q in engine.registry.QUERIES.items() if q.fn.__module__ in mods]
-    return sorted(names + ["stream_latedrop_outoforder"])
+    return sorted(
+        names
+        + [
+            "stream_latedrop_outoforder",
+            "stream_session_real",
+            "stream_should_optimize",
+            "stream_merge_upsert",
+        ]
+    )
 
 
 # every batch runs the sweep — each new operator family earns its

@@ -3,11 +3,13 @@
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 
 
 def _entry_mod():
-    spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("__spark_entry__", path)
     mod = importlib.util.module_from_spec(spec)
     sys.modules["__spark_entry__"] = mod
     spec.loader.exec_module(mod)

@@ -43,6 +43,9 @@ def test_binpack_reduces_files_preserves_data(spark, small_table):
     assert post == pre, "compaction must preserve rows exactly"
     assert res.files_after < res.files_before
     assert res.rows_after == res.rows_before
+    names = set(os.listdir(os.path.join(small_table, "data")))
+    orphans = [n for n in names if n.endswith(".crc") and n[1:-4] not in names]
+    assert not orphans, "each dropped input's .crc sidecar goes with it"
 
 
 def test_compaction_plans_flat_window_for_small_table(spark, small_table, monkeypatch):
@@ -121,7 +124,9 @@ def test_end_to_end_evaluate_and_optimize(spark, small_table):
     assert ex.state == jobs.JobState.SUCCEEDED
     assert ex.result.files_after < ex.result.files_before
     assert "metrics-reporter-impl" not in ex.properties  # recursion guard (A11)
-    assert ex.script_path and open(ex.script_path).read().startswith("from pyspark.sql")
+    script = open(ex.script_path).read()
+    assert script.startswith("from pyspark.sql")
+    assert jobs.render_optimize_sql(os.path.basename(small_table), ex.properties) in script
     # freshly compacted -> no re-trigger within thresholds
     ex2 = jobs.evaluate_and_maybe_optimize(spark, small_table, {})
     assert ex2 is None

@@ -158,26 +158,45 @@ def test_stateful_trigger_equals_batch_decision(spark, sf_dir, replay_path, tmp_
     assert _sorted_rows(stream_decision) == _sorted_rows(batch_decision)
 
 
-def test_applyinpandaswithstate_trigger_equals_batch_decision(spark, sf_dir, replay_path):
-    """The managed-state evaluator (applyInPandasWithState, update
-    mode): the last emission per table must equal the batch A10
-    decision row for that table."""
+def _final_state_decision(spark, replay_path, name, **kw):
+    """Last emission per table of the managed-state evaluator."""
     from pyspark.sql import Window
 
-    now = "2024-01-31 00:00:00"
     sink = replay.run_to_memory(
-        replay.stateful_trigger_stream(replay.read_stream(spark, replay_path, 2), now=now),
-        "t_state_trig",
+        replay.stateful_trigger_stream(replay.read_stream(spark, replay_path, 2), **kw),
+        name,
         output_mode="update",
     )
     w = Window.partitionBy("table_name").orderBy(F.desc("n_commits_seen"))
-    final = (
+    return (
         sink.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn", "n_commits_seen")
     )
+
+
+def test_applyinpandaswithstate_trigger_equals_batch_decision(spark, sf_dir, replay_path):
+    """The managed-state evaluator (applyInPandasWithState, update
+    mode): the last emission per table must equal the batch A10
+    decision row for that table."""
+    now = "2024-01-31 00:00:00"
+    final = _final_state_decision(spark, replay_path, "t_state_trig", now=now)
     batch_decision = trigger.decide_optimize(io.snapshots(spark, sf_dir), now=now)
     assert _sorted_rows(final) == _sorted_rows(batch_decision)
+
+
+def test_stateful_trigger_thresholds_reach_the_decision(spark, sf_dir, replay_path):
+    """Non-default thresholds flow through the managed-state form
+    exactly as through the batch evaluator, and they change the
+    decision (at the defaults every table with a pending commit
+    fires on age alone)."""
+    now = "2024-01-31 00:00:00"
+    thresholds = {"commit_threshold": 5, "time_threshold_ms": 100 * 3_600_000}
+    final = _final_state_decision(spark, replay_path, "t_state_thr", now=now, **thresholds)
+    snaps = io.snapshots(spark, sf_dir)
+    batch_decision = trigger.decide_optimize(snaps, now=now, **thresholds)
+    assert _sorted_rows(final) == _sorted_rows(batch_decision)
+    assert _sorted_rows(final) != _sorted_rows(trigger.decide_optimize(snaps, now=now))
 
 
 def test_events_max_ts_cached_per_sf_dir(spark, sf_dir, monkeypatch):
