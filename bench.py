@@ -5,14 +5,20 @@ Prints two JSON lines, a transparency record and then, LAST, the compact one:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
    "cpus": N, "shuffle_partitions": N}
 
-Each query is forced end-to-end with the noop sink (full computation,
-no driver collect).  Timings include Catalyst planning but exclude
-session startup and JVM/codegen warmup: every headline query runs
+Each query is timed by tools/measure.py: forced end-to-end with the
+noop sink (full computation, no driver collect), wall = build + sink.
+Timings include Catalyst planning but exclude session startup and
+JVM/codegen warmup: every headline query runs
 once to warm, then 3 timed runs and the MEDIAN is reported —
 steady-state throughput, not JIT compile time or Python-worker
 fork noise (mapInPandas warm-up showed +-80% single-run variance
 between rounds 1 and 2 on identical code).  That is the regime that
 matters at 100 TB, where each plan runs for minutes.
+
+A scale decade is ``python tools/build_sf1.py --mult 10 --out D`` (or
+``--mult 100``), then ``SPARK_GRAFT_SF_DIR=D python bench.py``; a
+query's decade exponent is log(t_hi / t_lo) / log(10) from the two
+compact lines.
 """
 
 from __future__ import annotations
@@ -21,12 +27,12 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import iceberg_aws_event_based_table_management_spark as engine
 from iceberg_aws_event_based_table_management_spark.session import get_spark
+from tools.measure import measure, run_once, sf_dir_from_env
 
 # Representative mix: control plane, relational heavy-hitters,
 # maintenance planning, dedup/similarity/text extensions, plus the
@@ -85,51 +91,48 @@ HEADLINE = [
     "survival_km_repurchase",
 ]
 
+# measure() keys the transparency line leaves out: the walls have their
+# own fields, and per-stage / per-operator lists would make the line
+# tens of KB (tools/measure.py prints them).
+LAYERS_DROP = ("query", "cold_s", "runs_s", "exec_sum_s", "per_stage", "operators")
+
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = sf_dir_from_env()
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     engine.load_all_queries()
-    qmap = engine.query_map()
 
     spark = get_spark("ebtm-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm the JVM + IO path once (excluded from timings)
-    qmap["scan_parquet"](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    run_once(spark, engine.query_map()["scan_parquet"], sf_dir)
 
-    timings: dict[str, float] = {}
-    cold: dict[str, float] = {}
-    all_runs: dict[str, list[float]] = {}
-    for name in HEADLINE:
-        t0 = time.perf_counter()
-        qmap[name](spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm codegen
-        cold[name] = round(time.perf_counter() - t0, 3)
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            qmap[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        timings[name] = round(statistics.median(runs), 3)
-        all_runs[name] = [round(r, 3) for r in runs]
+    records = {name: measure(spark, name, sf_dir) for name in HEADLINE}
+    timings = {n: round(statistics.median(r["runs_s"]), 3) for n, r in records.items()}
 
     total = round(sum(timings.values()), 3)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     # queries_cold / queries_runs let a reviewer separate uniform
     # environment inflation (cold and warm move together across
     # rounds) from a plan regression (warm medians move alone) —
-    # the r5 verdict's ask — without re-running anything.  The verbose
-    # record goes on its OWN line FIRST; the driver keeps only a
-    # fixed-size tail of stdout, and in round 6 a single combined line
-    # overflowed that tail and came back `parsed: null`.  The compact
-    # headline line below must always be LAST so it lands inside the
-    # tail window intact.
+    # the r5 verdict's ask — without re-running anything; layers say
+    # which layer moved and whether a work counter moved with it.
+    # The verbose record goes on its OWN line FIRST; the driver keeps
+    # only a fixed-size tail of stdout, and in round 6 a single
+    # combined line overflowed that tail and came back `parsed: null`.
+    # The compact headline line below must always be LAST so it lands
+    # inside the tail window intact.
     print(
         json.dumps(
             {
                 "metric": "headline_queries_transparency",
-                "queries_cold": cold,
-                "queries_runs": all_runs,
+                "queries_cold": {n: round(r["cold_s"], 3) for n, r in records.items()},
+                "queries_runs": {n: [round(w, 3) for w in r["runs_s"]] for n, r in records.items()},
+                "layers": {
+                    n: {k: v for k, v in r.items() if k not in LAYERS_DROP}
+                    for n, r in records.items()
+                },
                 "sf": sf_val,
             }
         )

@@ -631,13 +631,6 @@ def simhash(documents: DataFrame, bits: int = 60) -> DataFrame:
     return fp
 
 
-#: Diagnostics from the LAST connected_components call in this process:
-#: {"path": "driver"|"labelprop"|"star", "rounds": N, "pairs": N}.
-#: Observability only (scale probes record label-prop round counts —
-#: r12 verdict #3); never feeds a plan decision.
-_LAST_CC_INFO: dict = {}
-
-
 def connected_components(
     pairs: DataFrame, max_iters: int = 25, small_cutoff: int = 200_000
 ) -> DataFrame:
@@ -698,10 +691,6 @@ def connected_components(
     # ever collected.
     head = und.limit(small_cutoff + 1).collect()
     small = len(head) <= small_cutoff
-    _LAST_CC_INFO.clear()
-    _LAST_CC_INFO.update(
-        path="driver", rounds=0, pairs=len(head) if small else None
-    )
     if small:
         from pyspark.sql.types import StructField, StructType
 
@@ -751,9 +740,7 @@ def connected_components(
     labels = (
         edges.select(F.col("src").alias("doc_id")).distinct().withColumn("label", F.col("doc_id"))
     )
-    _LAST_CC_INFO["path"] = "labelprop"
     for _ in range(max_iters):
-        _LAST_CC_INFO["rounds"] += 1
         nbr = (
             edges.join(labels, edges.dst == labels.doc_id)
             .groupBy("src")
@@ -789,7 +776,6 @@ def connected_components(
         # already executed — re-deriving it for the star edge build
         # would run the whole pair pipeline a second time (r16, from
         # the r15 VERDICT #3 profile note).
-        _LAST_CC_INFO["path"] = "star"
         return connected_components_star(und, max_rounds=40)
     return labels.select("doc_id", F.col("label").alias("component_id"))
 

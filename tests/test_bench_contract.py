@@ -49,8 +49,9 @@ def test_compact_headline_line_is_last_and_minimal():
         "metric", "value", "unit", "queries", "sf", "cpus", "shuffle_partitions"
     }, last
     assert "queries_runs" not in last and "queries_cold" not in last
-    # the verbose transparency record exists and comes BEFORE it
-    assert any("queries_runs" in p for p in payloads[:-1]), payloads
+    # the verbose transparency record exists and comes BEFORE it, with
+    # each query's layer split and work counters beside its walls
+    assert any({"queries_runs", "layers"} <= set(p) for p in payloads[:-1]), payloads
 
 
 def test_headline_names_are_registered():

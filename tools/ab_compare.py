@@ -7,25 +7,33 @@ alternated in ABBA blocks so slow monotonic machine drift cancels in
 the medians instead of masquerading as a code delta.
 
 Usage:
-  python tools/ab_compare.py --tree-a /root/repo --tree-b /tmp/r11tree \
-      --label-a r13 --label-b r11 --pairs 4 --out bench_runs/ab_x.json \
+  SPARK_GRAFT_SF_DIR=D python tools/ab_compare.py \
+      --tree-a . --tree-b ../parent --label-a new --label-b old \
+      --pairs 4 --out bench_runs/ab_x.json \
       dedup_prefix_filter_pairs sketch_heavy_hitters_cms ...
 
 Each ABBA block contributes 2 runs per variant; --pairs 4 = 8 runs per
-variant per query.  A run = query BUILD + noop-sink execution (the
-bench.py timed window).  Variants are re-imported from their tree per
-run (module purge + sys.path swap — the package is self-contained and
-registry state is module-level); import time is excluded from the
-timed window.
+variant per query.  A run is ``tools/measure.py``'s ``run_once`` and
+its wall is query BUILD + noop-sink execution (the bench.py timed
+window).  Beside the walls each side records its last run's
+status-store counters (jobs, stages, tasks, shuffle bytes, spill,
+exchanges), the work counters that do not move with host steal.
+Variants are re-imported from their tree per run (module purge +
+sys.path swap — the package is self-contained and registry state is
+module-level); import time is excluded from the timed window.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import statistics
 import sys
-import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.measure import TIMES, run_once, sf_dir_from_env, wall  # noqa: E402
 
 PKG = "iceberg_aws_event_based_table_management_spark"
 
@@ -51,9 +59,9 @@ def main() -> None:
     ap.add_argument("--label-a", default="A")
     ap.add_argument("--label-b", default="B")
     ap.add_argument("--pairs", type=int, default=4, help="ABBA blocks (2 runs/variant each)")
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
+    sf_dir = sf_dir_from_env()
 
     # Session comes from tree A's factory.  The shared session is only
     # a fair instrument if both trees would have BUILT the same
@@ -61,8 +69,6 @@ def main() -> None:
     # AQE flags, ...), both variants silently run under A's conf and
     # the A/B attributes a conf delta to code (r13 ADVICE).  Verify
     # byte-identity of the two session factories up front.
-    import os
-
     conf_identical = True
     sess_files = {}
     for label, tree in (("a", args.tree_a), ("b", args.tree_b)):
@@ -84,25 +90,23 @@ def main() -> None:
     spark = get_spark("ebtm-ab")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def run(fn) -> float:
-        t0 = time.perf_counter()
-        fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
     results: dict = {}
     for q in args.queries:
         runs: dict[str, list[float]] = {"a": [], "b": []}
+        counters: dict[str, dict] = {}
         order: list[str] = []
         # one warm run per variant (codegen + python-worker fork), untimed record
         warm = {}
         for side, tree in (("a", args.tree_a), ("b", args.tree_b)):
             qm = load_tree(tree)
-            warm[side] = round(run(qm[q]), 3)
+            warm[side] = round(wall(run_once(spark, qm[q], sf_dir)), 3)
         for block in range(args.pairs):
             seq = ("a", "b", "b", "a") if block % 2 == 0 else ("b", "a", "a", "b")
             for side in seq:
                 qm = load_tree(args.tree_a if side == "a" else args.tree_b)
-                runs[side].append(round(run(qm[q]), 3))
+                run = run_once(spark, qm[q], sf_dir)
+                runs[side].append(round(wall(run), 3))
+                counters[side] = {k: v for k, v in run.items() if k not in TIMES}
                 order.append(side)
         med_a = statistics.median(runs["a"])
         med_b = statistics.median(runs["b"])
@@ -112,12 +116,16 @@ def main() -> None:
             "ratio_a_over_b": round(med_a / med_b, 3) if med_b else None,
             "runs_a": runs["a"],
             "runs_b": runs["b"],
+            "counters_a": counters["a"],
+            "counters_b": counters["b"],
             "warm": warm,
             "order": "".join(order),
         }
         print(
             f"{q}: {args.label_a}={med_a:.3f}s {args.label_b}={med_b:.3f}s "
-            f"ratio={results[q]['ratio_a_over_b']}",
+            f"ratio={results[q]['ratio_a_over_b']} "
+            f"exchanges={counters['a']['exchanges']}/{counters['b']['exchanges']} "
+            f"jobs={counters['a']['jobs']}/{counters['b']['jobs']}",
             flush=True,
         )
 
@@ -127,7 +135,7 @@ def main() -> None:
         "label_b": args.label_b,
         "tree_a": args.tree_a,
         "tree_b": args.tree_b,
-        "sf_dir": args.sf_dir,
+        "sf_dir": sf_dir,
         "conf_identical": conf_identical,
         "session_conf": dict(spark.sparkContext.getConf().getAll()),
         "results": results,

@@ -33,6 +33,15 @@ A scale sweep builds one directory per multiple and measures each:
 
     python tools/build_sf1.py --mult 3 --out /tmp/x3
     SPARK_GRAFT_SF_DIR=/tmp/x3 python tools/measure.py dedup_ngram_jaccard
+
+A scale decade is the headline bench at sf0.1 and at --mult 10 (sf1)
+or --mult 100 (sf10):
+
+    python tools/build_sf1.py --mult 10 --out /tmp/sf1
+    SPARK_GRAFT_SF_DIR=/tmp/sf1 python bench.py
+
+Each query's decade exponent is log(t_hi / t_lo) / log(10), from the
+``queries`` of the two runs' compact lines.
 """
 
 from __future__ import annotations

@@ -3,22 +3,28 @@
     SPARK_GRAFT_SF_DIR=DIR python tools/measure.py [query ...]
 
 Prints one JSON line per query (default: bench.HEADLINE; DIR defaults
-as in bench.py).  Per query: one untimed warm
-pass, then 3 runs of build -> ``executedPlan()`` -> noop sink, the
-perfbench ``query_mix`` protocol.  The record holds the medians of
-``build_s``, ``plan_s`` and ``exec_s`` and, for the last run, what the
-Spark status store kept of it (the UI stays off):
+to /root/testdata/sf0.1).  ``run_once`` is the one timed run of a query
+in this repo; ``bench.py``, ``smoke_all.py`` and ``ab_compare.py`` time
+through it.  It runs build -> ``executedPlan()`` -> noop sink, the
+perfbench ``query_mix`` protocol, and a query's wall is ``build_s +
+exec_s``: build plus the sink, which plans the write again.
 
-- window totals from ``perfbench.probe.SparkCounters`` (jobs, stages,
-  tasks, shuffle bytes, spill, exchanges), marked before the build so
-  work a query does eagerly while it is built counts too;
+``measure`` is one warm run, then 3 timed runs.  Its record holds the
+warm run's wall (``cold_s``), each timed run's wall (``runs_s``), the
+medians of ``build_s``, ``plan_s`` and ``exec_s`` and, for the last
+run, what the Spark status store kept of it (the UI stays off):
+
+- window totals as ``perfbench.probe.SparkCounters.window`` counts
+  them (jobs, stages, tasks, shuffle bytes, spill, exchanges), marked
+  before the build so work a query does eagerly while it is built
+  counts too;
 - ``joins``: join operators per strategy in the executed plans;
-- ``per_stage``: executor run time, tasks and shuffle bytes of each
-  completed stage, and their run-time sum ``exec_sum_s``;
+- ``per_stage``: executor run time, tasks, shuffle bytes and spill of
+  each completed stage, and their run-time sum ``exec_sum_s``;
 - ``operators``: ``number of output rows`` of each plan node.
 
 A scale sweep is ``tools/build_sf1.py --mult K --out D`` followed by
-``SPARK_GRAFT_SF_DIR=D python tools/measure.py ...``.
+``SPARK_GRAFT_SF_DIR=D python tools/measure.py ...`` (or ``bench.py``).
 """
 
 from __future__ import annotations
@@ -33,13 +39,11 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 import iceberg_aws_event_based_table_management_spark as engine  # noqa: E402
-from perfbench.probe import SparkCounters, _seq  # noqa: E402
+from perfbench.probe import SparkCounters, _seq, exchange_count  # noqa: E402
+from py4j.protocol import Py4JJavaError  # noqa: E402
 
 RUNS = 3
-
-
-def _noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+TIMES = ("build_s", "plan_s", "exec_s")
 
 
 def _settle(counters: SparkCounters) -> None:
@@ -48,12 +52,16 @@ def _settle(counters: SparkCounters) -> None:
     counters._jsc.listenerBus().waitUntilEmpty()
 
 
-def _stages(counters: SparkCounters, job_mark: int) -> list[dict]:
+def _stages(counters: SparkCounters, jobs: list) -> list[dict]:
+    """Executor run time, tasks, shuffle bytes and spill of each stage
+    the ``jobs`` completed."""
     store = counters._jsc.statusStore()
-    jobs = counters._jobs_after(job_mark)
     out = []
     for sid in sorted({sid for j in jobs for sid in _seq(j.stageIds())}):
-        st = store.lastStageAttempt(sid)
+        try:
+            st = store.lastStageAttempt(sid)
+        except Py4JJavaError:
+            continue  # dropped: a full store drops skipped stages first
         if st.status().toString() != "COMPLETE":
             continue  # skipped: its shuffle output was reused
         out.append({
@@ -62,7 +70,25 @@ def _stages(counters: SparkCounters, job_mark: int) -> list[dict]:
             "tasks": st.numCompleteTasks(),
             "shuffle_read_bytes": st.shuffleReadBytes(),
             "shuffle_write_bytes": st.shuffleWriteBytes(),
+            "spill_bytes": st.memoryBytesSpilled() + st.diskBytesSpilled(),
         })
+    return out
+
+
+def _window(counters: SparkCounters, mark: tuple[int, int]) -> dict:
+    """``SparkCounters.window``'s totals, summed over ``_stages``:
+    ``window`` raises on a stage the store has dropped, which a long
+    session reaches (a full test run did: "No stage with id N")."""
+    jobs = counters._jobs_after(mark[0])
+    stages = _stages(counters, jobs)
+    out = {"jobs": len(jobs), "stages": len(stages)}
+    for key in ("tasks", "shuffle_write_bytes", "shuffle_read_bytes", "spill_bytes"):
+        out[key] = sum(s[key] for s in stages)
+    out["exchanges"] = sum(
+        exchange_count(e.physicalPlanDescription())
+        for e in _seq(counters._sql.executionsList())
+        if e.executionId() > mark[1]
+    )
     return out
 
 
@@ -88,35 +114,49 @@ def _executions(counters: SparkCounters, exec_mark: int) -> tuple[dict, list[dic
     return joins, operators
 
 
+def sf_dir_from_env() -> str:
+    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def wall(run: dict) -> float:
+    return run["build_s"] + run["exec_s"]
+
+
+def run_once(spark, fn, sf_dir: str) -> dict:
+    """One timed run of query callable ``fn``: seconds to build, plan
+    and noop-sink it, and the status-store totals of the work it did.
+    Settling and counting stay outside the timed windows."""
+    counters = SparkCounters(spark)
+    _settle(counters)
+    mark = counters.mark()  # before the build: eager builds count too
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    t1 = time.perf_counter()
+    df._jdf.queryExecution().executedPlan()
+    t2 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    t3 = time.perf_counter()
+    _settle(counters)
+    return {"build_s": t1 - t0, "plan_s": t2 - t1, "exec_s": t3 - t2, **_window(counters, mark)}
+
+
 def measure(spark, name: str, sf_dir: str) -> dict:
     """Layer timings and status-store counters for one registered query."""
     engine.load_all_queries()
     fn = engine.query_map()[name]
     counters = SparkCounters(spark)
-    _noop(fn(spark, sf_dir))  # warm: JIT, codegen, page cache
-    build, plan, execute = [], [], []
-    for _ in range(RUNS):
-        _settle(counters)
-        mark = counters.mark()
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        t1 = time.perf_counter()
-        df._jdf.queryExecution().executedPlan()
-        t2 = time.perf_counter()
-        _noop(df)
-        t3 = time.perf_counter()
-        build.append(t1 - t0)
-        plan.append(t2 - t1)
-        execute.append(t3 - t2)
-    _settle(counters)
-    stages = _stages(counters, mark[0])
+    cold = run_once(spark, fn, sf_dir)  # warm: JIT, codegen, page cache
+    runs = [run_once(spark, fn, sf_dir) for _ in range(RUNS - 1)]
+    mark = counters.mark()  # the run before settled: this opens the last run's window
+    runs.append(run_once(spark, fn, sf_dir))
+    stages = _stages(counters, counters._jobs_after(mark[0]))
     joins, operators = _executions(counters, mark[1])
     return {
         "query": name,
-        "build_s": round(statistics.median(build), 4),
-        "plan_s": round(statistics.median(plan), 4),
-        "exec_s": round(statistics.median(execute), 4),
-        **counters.window(mark),
+        "cold_s": round(wall(cold), 4),
+        "runs_s": [round(wall(r), 4) for r in runs],
+        **{k: round(statistics.median(r[k] for r in runs), 4) for k in TIMES},
+        **{k: v for k, v in runs[-1].items() if k not in TIMES},
         "joins": joins,
         "exec_sum_s": round(sum(s["run_s"] for s in stages), 3),
         "per_stage": stages,
@@ -128,7 +168,7 @@ def main() -> int:
     from bench import HEADLINE
     from iceberg_aws_event_based_table_management_spark.session import get_spark
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = sf_dir_from_env()
     spark = get_spark("ebtm-measure")
     spark.sparkContext.setLogLevel("ERROR")
     for name in sys.argv[1:] or HEADLINE:

@@ -2,49 +2,43 @@
 regime — it is the only instrument that has ever caught the
 overflow / mis-planned-broadcast class that graded sfs cannot trip).
 
-One pass per registered query at the given sf dir, noop sink, single
-session, alphabetical order.  Per-query wall seconds (or the error
-string) stream to the output JSON after EVERY query, so a crash keeps
-the partial record.  Headliners can be excluded when a three-decade
-bench (tools/bench_decades.py) already covers them.
+One ``tools/measure.py`` run per registered query at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), single session,
+alphabetical order, no warm pass.  Per-query wall seconds (or the
+error string) stream to the output JSON after EVERY query, so a crash
+keeps the partial record.
 
 Usage:
-  python tools/smoke_all.py --sf-dir /tmp/sf1  --out bench_runs/smoke_sf1.json
-  python tools/smoke_all.py --sf-dir /tmp/sf10 --out bench_runs/smoke_sf10.json \
-      --exclude-headliners
+  SPARK_GRAFT_SF_DIR=/tmp/sf1 python tools/smoke_all.py --out bench_runs/smoke_sf1.json
+  python tools/smoke_all.py --out smoke.json --only agg_pricing_summary,tfidf_top_terms
 """
 
 from __future__ import annotations
 
 import argparse
+import gc
 import json
 import os
 import sys
-import time
 import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import iceberg_aws_event_based_table_management_spark as engine
 from iceberg_aws_event_based_table_management_spark.session import get_spark
+from tools.measure import run_once, sf_dir_from_env, wall
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", required=True)
     ap.add_argument("--out", required=True)
-    ap.add_argument("--exclude-headliners", action="store_true")
-    ap.add_argument("--note", default="")
     ap.add_argument("--only", default="", help="comma-separated subset")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
+    sf_dir = sf_dir_from_env()
 
     engine.load_all_queries()
     qmap = engine.query_map()
     names = sorted(qmap)
-    if args.exclude_headliners:
-        import bench
-
-        names = [n for n in names if n not in set(bench.HEADLINE)]
     if args.only:
         only = set(args.only.split(","))
         names = [n for n in names if n in only]
@@ -62,63 +56,39 @@ def main() -> None:
     per: dict = {}
     restarts: list = []
     payload = {
-        "_note": args.note
-        or (
-            f"All-query scale smoke at {args.sf_dir}: one pass per registered "
-            "query, noop sink, single session, alphabetical.  Purpose: surface "
-            "overflow fail-stops and mis-planned broadcasts that graded sfs "
-            "cannot trip (standing regime per r12 verdict #2)."
-        ),
-        "sf_dir": args.sf_dir,
-        "exclude_headliners": args.exclude_headliners,
+        "sf_dir": sf_dir,
         "per_query_sec_or_err": per,
         "n_done": 0,
+        "session_restarts": restarts,
     }
     for i, name in enumerate(names, 1):
         # Periodic hygiene: 165 queries into the r13 sf10 leg the
         # single JVM OOMed its heap on accumulated session state; drop
         # lingering py4j refs and cached blocks every 25 queries.
         if i % 25 == 0:
-            import gc
-
             gc.collect()
             try:
                 spark.catalog.clearCache()
             except Exception:
                 pass
-        t0 = time.perf_counter()
-        try:
-            qmap[name](spark, args.sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            per[name] = round(time.perf_counter() - t0, 3)
-        except Exception as exc:  # noqa: BLE001 — record and continue
-            per[name] = f"ERR {type(exc).__name__}: {str(exc)[:300]}"
-            traceback.print_exc(limit=3)
-            if not _alive():
-                # The SparkContext died (heap OOM kills the whole
-                # local JVM): restart it and retry this query ONCE in
-                # the fresh session, so one session death cannot
-                # invalidate the rest of the smoke and the retried
-                # cell distinguishes "query kills a fresh 16GB heap"
-                # (real defect) from "session had accumulated 165
-                # queries of state" (harness artifact).
+        # A dead SparkContext (heap OOM kills the whole local JVM) is
+        # restarted and the query retried ONCE in the fresh session, so
+        # one session death cannot invalidate the rest of the smoke and
+        # the retried cell tells "query kills a fresh heap" (real defect)
+        # from "session had accumulated 165 queries of state" (harness
+        # artifact).
+        for attempt in ("ERR", "ERR(after restart)"):
+            try:
+                per[name] = round(wall(run_once(spark, qmap[name], sf_dir)), 3)
+                break
+            except Exception as exc:  # noqa: BLE001 — record and continue
+                per[name] = f"{attempt} {type(exc).__name__}: {str(exc)[:300]}"
+                traceback.print_exc(limit=3)
+                if attempt != "ERR" or _alive():
+                    break
                 restarts.append(name)
-                payload["session_restarts"] = restarts
                 spark = get_spark("ebtm-smoke-r%d" % len(restarts))
                 spark.sparkContext.setLogLevel("ERROR")
-                t0 = time.perf_counter()
-                try:
-                    qmap[name](spark, args.sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    per[name] = round(time.perf_counter() - t0, 3)
-                except Exception as exc2:  # noqa: BLE001
-                    per[name] = (
-                        f"ERR(after restart) {type(exc2).__name__}: "
-                        f"{str(exc2)[:300]}"
-                    )
-                    traceback.print_exc(limit=3)
         payload["n_done"] = i
         with open(args.out, "w") as fh:
             json.dump(payload, fh, indent=1)
