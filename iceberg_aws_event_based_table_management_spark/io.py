@@ -8,11 +8,19 @@ Iceberg-metadata analogs (FIXTURES.md):
 
 Both are plain DataFrame projections, so the DuckDB oracle rebuilds
 them as CTEs (see ``SNAPSHOTS_CTE`` / ``FILES_CTE``).
+
+It is also the only module that touches parquet files without Spark:
+footer reads (row counts, column bytes) and the managed tables'
+``_snapshots`` lineage log, whose one-row commit records are written
+with pyarrow (``append_lineage_row``) and read back under one fixed
+schema (``LINEAGE_DDL``, maintenance.read_snapshots) — the analog of Iceberg's snapshot log, which
+a commit extends without running an engine job.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,39 +45,53 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 ORACLE_SF_DIR = "/root/testdata/sf0.01"
 
 
-def _footers(sf_dir: str, name: str) -> list | None:
-    """Parquet FOOTER metadata of every file of a fixture table (a single
-    file or a directory of nested part files) — pure driver-side file
-    metadata, no Spark job, so query construction stays lazy.  None when
-    any footer is unreadable (remote path, not-yet-written table); the
-    caller's gate decides which plan an unknown size takes
-    (operators/gates.py)."""
+def parquet_footers(paths: list[str]) -> list | None:
+    """Parquet FOOTER metadata of each file in ``paths`` — pure
+    driver-side file metadata, no Spark job, so query construction
+    stays lazy.  None when any footer is unreadable (remote path,
+    not-yet-written table); the caller decides what an unknown size
+    means (operators/gates.py)."""
     try:
         import pyarrow as pa
         import pyarrow.parquet as pq
     except ImportError:
         return None
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        files = [
-            os.path.join(root, f)
-            for root, _, fs in os.walk(path)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-    else:
-        files = [path]
     try:
-        return [pq.read_metadata(f) for f in files]
+        return [pq.read_metadata(f) for f in paths]
     except (OSError, pa.ArrowException):
         return None
+
+
+def parquet_rows(paths: list[str]) -> int | None:
+    """Exact row count of the parquet files ``paths`` from their
+    footers; None when a footer is unreadable."""
+    mds = parquet_footers(paths)
+    return None if mds is None else sum(md.num_rows for md in mds)
+
+
+def _fixture_files(sf_dir: str, name: str) -> list[str]:
+    """The parquet files of a fixture table: a single file or a
+    directory of nested part files."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if not os.path.isdir(path):
+        return [path]
+    return [
+        os.path.join(root, f)
+        for root, _, fs in os.walk(path)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+
+
+def _footers(sf_dir: str, name: str) -> list | None:
+    """``parquet_footers`` of every file of a fixture table."""
+    return parquet_footers(_fixture_files(sf_dir, name))
 
 
 def parquet_num_rows(sf_dir: str, name: str) -> int | None:
     """Exact row count of a fixture table from its footers; None when
     a footer is unreadable."""
-    mds = _footers(sf_dir, name)
-    return None if mds is None else sum(md.num_rows for md in mds)
+    return parquet_rows(_fixture_files(sf_dir, name))
 
 
 def parquet_column_bytes(sf_dir: str, name: str, column: str) -> int | None:
@@ -239,6 +261,39 @@ SNAPSHOTS_CTE = """
          event_type AS operation
   FROM events
 """
+
+
+#: The one schema of a managed table's ``_snapshots`` lineage log: the
+#: ``snapshots_from`` columns, with ``ts`` an instant (UTC micros).
+#: Files from an earlier Spark writer store ``ts`` as INT96 and files
+#: from ``append_lineage_row`` as TIMESTAMP(MICROS, UTC); both read
+#: back as TimestampType under this schema, and no read of the log
+#: runs a schema-inference job.
+LINEAGE_DDL = "table_name string, snapshot_id long, ts timestamp, operation string"
+
+
+def append_lineage_row(snapshots_dir: str, table_name: str, snapshot_id: int, operation: str) -> None:
+    """Write one lineage row — ``ts`` is ``snapshot_id // 1000`` micros
+    — as a new parquet file in ``snapshots_dir``, with pyarrow and no
+    Spark job.  The file is written under a hidden name and renamed
+    into place, so a concurrent reader never lists a half-written file
+    (Spark and pyarrow both skip names starting with '.')."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    row = pa.table(
+        {
+            "table_name": pa.array([table_name], pa.string()),
+            "snapshot_id": pa.array([snapshot_id], pa.int64()),
+            "ts": pa.array([snapshot_id // 1000], pa.timestamp("us", tz="UTC")),
+            "operation": pa.array([operation], pa.string()),
+        }
+    )
+    os.makedirs(snapshots_dir, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    hidden = os.path.join(snapshots_dir, f".{name}")
+    pq.write_table(row, hidden)
+    os.rename(hidden, os.path.join(snapshots_dir, name))
 
 
 def files(spark: SparkSession, sf_dir: str, n_tables: int = config.FILES_TABLE_COUNT) -> DataFrame:

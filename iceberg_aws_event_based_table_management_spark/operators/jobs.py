@@ -390,10 +390,12 @@ class CommitReporter:
     def reported_append(
         self, df, table_dir: str, n_files: int = 1
     ) -> "LocalCompactionExecutor | None":
-        """The reporting write path: append data files + an 'append'
-        snapshot row, then push the commit event through report() —
-        write and evaluation in one call, exactly the loop the
-        reference closes via the catalog callback."""
+        """The reporting write path: append data files (the one Spark
+        write) + an 'append' lineage row (a pyarrow file write, no
+        Spark job; maintenance.append_snapshot), then push the commit
+        event through report() — write and evaluation in one call,
+        exactly the loop the reference closes via the catalog
+        callback."""
         df.repartition(n_files).write.mode("append").parquet(os.path.join(table_dir, "data"))
         maintenance.append_snapshot(self.spark, table_dir, "append")
         return self.report(table_dir, "append")

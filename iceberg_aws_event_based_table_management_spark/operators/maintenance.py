@@ -32,7 +32,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import config
+from .. import config, io
 
 
 _BINPACK_BUCKET_BYTES = 2_000_000
@@ -127,8 +127,10 @@ class CompactionResult:
     n_groups: int
     files_before: int
     files_after: int
-    rows_before: int
-    rows_after: int
+    # footer row counts of the data files (no Spark job); None when a
+    # footer is unreadable
+    rows_before: int | None
+    rows_after: int | None
     replace_snapshot_ids: list[int]
 
 
@@ -142,7 +144,10 @@ def _list_data_files(table_dir: str) -> list[str]:
 
 
 def append_snapshot(spark: SparkSession, table_dir: str, operation: str, snapshot_id: int | None = None) -> int:
-    """Append one row to the table's `_snapshots` lineage log (B4).
+    """Append one row to the table's `_snapshots` lineage log (B4): one
+    small parquet file from `io.append_lineage_row`, no Spark job — a
+    commit extends the log the way an Iceberg commit extends its
+    snapshot log.  `spark` is unused; callers keep passing it.
 
     The REPLACE row written by compaction is exactly what
     `pending_since_replace` (A7) later treats as the optimize
@@ -150,18 +155,16 @@ def append_snapshot(spark: SparkSession, table_dir: str, operation: str, snapsho
     """
     if snapshot_id is None:
         snapshot_id = time.time_ns()
-    row = [(os.path.basename(table_dir), snapshot_id, operation)]
-    df = (
-        spark.createDataFrame(row, "table_name string, snapshot_id long, operation string")
-        .withColumn("ts", F.timestamp_micros(F.lit(snapshot_id // 1000)))
-        .select("table_name", "snapshot_id", "ts", "operation")
+    io.append_lineage_row(
+        os.path.join(table_dir, "_snapshots"), os.path.basename(table_dir), snapshot_id, operation
     )
-    df.coalesce(1).write.mode("append").parquet(os.path.join(table_dir, "_snapshots"))
     return snapshot_id
 
 
 def read_snapshots(spark: SparkSession, table_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(table_dir, "_snapshots"))
+    """The table's lineage log under `io.LINEAGE_DDL`; building it runs
+    no Spark job."""
+    return spark.read.schema(io.LINEAGE_DDL).parquet(os.path.join(table_dir, "_snapshots"))
 
 
 def write_table(spark: SparkSession, df: DataFrame, table_dir: str, n_files: int) -> None:
@@ -208,7 +211,7 @@ def compact_table(
         .collect()  # bounded: one row per file group (metadata-size)
     )
     files_before = sum(len(g["paths"]) for g in groups)
-    rows_before = spark.read.parquet(os.path.join(table_dir, "data")).count()
+    rows_before = io.parquet_rows(_list_data_files(table_dir))
 
     replace_ids: list[int] = []
     data_dir = os.path.join(table_dir, "data")
@@ -244,8 +247,9 @@ def compact_table(
     if not partial_progress:
         replace_ids.append(append_snapshot(spark, table_dir, "replace"))
 
-    files_after = len(_list_data_files(table_dir))
-    rows_after = spark.read.parquet(os.path.join(table_dir, "data")).count()
+    after = _list_data_files(table_dir)
+    files_after = len(after)
+    rows_after = io.parquet_rows(after)
     return CompactionResult(
         table_dir=table_dir,
         n_groups=len(groups),

@@ -52,6 +52,46 @@ def _settle(counters: SparkCounters) -> None:
     counters._jsc.listenerBus().waitUntilEmpty()
 
 
+def _mark(counters: SparkCounters) -> tuple[int, int]:
+    """(highest job id, highest SQL execution id) so far.  Read from the
+    list ends — ``jobsList(None)`` is newest-first, ``executionsList()``
+    oldest-first — so a read costs a few py4j calls however many jobs
+    and executions the session has retained."""
+    jobs = counters._jsc.statusStore().jobsList(None)
+    execs = counters._sql.executionsList()
+    n = execs.size()
+    return (
+        jobs.head().jobId() if jobs.nonEmpty() else -1,
+        execs.apply(n - 1).executionId() if n else -1,
+    )
+
+
+def _jobs_after(counters: SparkCounters, job_mark: int) -> list:
+    """The jobs after ``job_mark``, walking the newest-first list only
+    down to the mark."""
+    jobs = counters._jsc.statusStore().jobsList(None)
+    out = []
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        if j.jobId() <= job_mark:
+            break
+        out.append(j)
+    return out
+
+
+def _executions_after(counters: SparkCounters, exec_mark: int) -> list:
+    """The SQL executions after ``exec_mark``, oldest first, walking the
+    oldest-first list back from its end only down to the mark."""
+    execs = counters._sql.executionsList()
+    out = []
+    for i in range(execs.size() - 1, -1, -1):
+        e = execs.apply(i)
+        if e.executionId() <= exec_mark:
+            break
+        out.append(e)
+    return out[::-1]
+
+
 def _stages(counters: SparkCounters, jobs: list) -> list[dict]:
     """Executor run time, tasks, shuffle bytes and spill of each stage
     the ``jobs`` completed."""
@@ -79,15 +119,13 @@ def _window(counters: SparkCounters, mark: tuple[int, int]) -> dict:
     """``SparkCounters.window``'s totals, summed over ``_stages``:
     ``window`` raises on a stage the store has dropped, which a long
     session reaches (a full test run did: "No stage with id N")."""
-    jobs = counters._jobs_after(mark[0])
+    jobs = _jobs_after(counters, mark[0])
     stages = _stages(counters, jobs)
     out = {"jobs": len(jobs), "stages": len(stages)}
     for key in ("tasks", "shuffle_write_bytes", "shuffle_read_bytes", "spill_bytes"):
         out[key] = sum(s[key] for s in stages)
     out["exchanges"] = sum(
-        exchange_count(e.physicalPlanDescription())
-        for e in _seq(counters._sql.executionsList())
-        if e.executionId() > mark[1]
+        exchange_count(e.physicalPlanDescription()) for e in _executions_after(counters, mark[1])
     )
     return out
 
@@ -98,10 +136,8 @@ def _executions(counters: SparkCounters, exec_mark: int) -> tuple[dict, list[dic
     sql = counters._sql
     joins: dict[str, int] = {}
     operators = []
-    for e in _seq(sql.executionsList()):
+    for e in _executions_after(counters, exec_mark):
         eid = e.executionId()
-        if eid <= exec_mark:
-            continue
         values = sql.executionMetrics(eid)
         for node in _seq(sql.planGraph(eid).allNodes()):
             op = node.name().strip()
@@ -128,7 +164,7 @@ def run_once(spark, fn, sf_dir: str) -> dict:
     Settling and counting stay outside the timed windows."""
     counters = SparkCounters(spark)
     _settle(counters)
-    mark = counters.mark()  # before the build: eager builds count too
+    mark = _mark(counters)  # before the build: eager builds count too
     t0 = time.perf_counter()
     df = fn(spark, sf_dir)
     t1 = time.perf_counter()
@@ -147,9 +183,9 @@ def measure(spark, name: str, sf_dir: str) -> dict:
     counters = SparkCounters(spark)
     cold = run_once(spark, fn, sf_dir)  # warm: JIT, codegen, page cache
     runs = [run_once(spark, fn, sf_dir) for _ in range(RUNS - 1)]
-    mark = counters.mark()  # the run before settled: this opens the last run's window
+    mark = _mark(counters)  # the run before settled: this opens the last run's window
     runs.append(run_once(spark, fn, sf_dir))
-    stages = _stages(counters, counters._jobs_after(mark[0]))
+    stages = _stages(counters, _jobs_after(counters, mark[0]))
     joins, operators = _executions(counters, mark[1])
     return {
         "query": name,
