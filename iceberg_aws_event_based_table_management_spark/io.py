@@ -10,7 +10,7 @@ Both are plain DataFrame projections, so the DuckDB oracle rebuilds
 them as CTEs (see ``SNAPSHOTS_CTE`` / ``FILES_CTE``).
 
 It is also the only module that touches parquet files without Spark:
-footer reads (row counts, column bytes) and the managed tables'
+footer reads (row counts, column bytes, row groups) and the managed tables'
 ``_snapshots`` lineage log, whose one-row commit records are written
 with pyarrow (``append_lineage_row``) and read back under one fixed
 schema (``LINEAGE_DDL``, maintenance.read_snapshots) — the analog of Iceberg's snapshot log, which
@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import os
 import uuid
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,6 +68,19 @@ def parquet_rows(paths: list[str]) -> int | None:
     footers; None when a footer is unreadable."""
     mds = parquet_footers(paths)
     return None if mds is None else sum(md.num_rows for md in mds)
+
+
+def input_row_groups(df: DataFrame) -> int | None:
+    """Σ row groups over the parquet files a frame scans
+    (``inputFiles()``), from their footers.  A row group is the unit a
+    scan split cannot divide, so this bounds the scan's useful
+    parallelism without parsing ``maxPartitionBytes``.  None for
+    in-memory frames, non-local URIs and unreadable footers."""
+    uris = [urlparse(f) for f in df.inputFiles()]
+    if not uris or any(u.scheme not in ("", "file") for u in uris):
+        return None
+    mds = parquet_footers([u.path for u in uris])
+    return None if mds is None else sum(md.num_row_groups for md in mds)
 
 
 def _fixture_files(sf_dir: str, name: str) -> list[str]:

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import io
+
 
 def exact_dedup(documents: DataFrame, keep: str = "min") -> DataFrame:
     """D1: exact dedup by sha256(text); deterministic survivor = min
@@ -36,56 +38,6 @@ def exact_dedup(documents: DataFrame, keep: str = "min") -> DataFrame:
         .filter(F.col("rank_in_group") == 1)
         .drop("rank_in_group")
     )
-
-
-def _parse_spark_bytes(raw: str) -> int | None:
-    """Spark size-string -> bytes, per JavaUtils.byteStringAsBytes:
-    bare digits are bytes; otherwise an integer with a case-insensitive
-    k/m/g/t/p suffix, optional trailing 'b' ("64m", "128MB", "1g").
-    None for anything else — the r12 parser only accepted digits or a
-    bare 'b' suffix, so common forms like "128m" silently fell back to
-    the 128 MB default and skewed the split estimate (r12 ADVICE)."""
-    import re
-
-    m = re.fullmatch(r"\s*(\d+)\s*([kmgtp]?)b?\s*", raw.lower())
-    if not m:
-        return None
-    mult = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}
-    return int(m.group(1)) * mult[m.group(2)]
-
-
-def _estimate_input_splits(d: DataFrame) -> int | None:
-    """Lower-bound the scan partition count of a file-backed frame
-    from its file index: sum over files of ceil(size /
-    maxPartitionBytes), statted driver-side.  Returns None (caller
-    falls back to the exact RDD probe) for in-memory frames or URIs
-    the local filesystem cannot stat (e.g. object stores)."""
-    import os
-    from urllib.parse import urlparse
-
-    files = d.inputFiles()
-    if not files:
-        return None
-    max_pb = 128 * 1024 * 1024  # spark.sql.files.maxPartitionBytes default
-    try:
-        parsed = _parse_spark_bytes(
-            d.sparkSession.conf.get("spark.sql.files.maxPartitionBytes")
-        )
-        if parsed is not None:
-            max_pb = parsed
-    except Exception:
-        pass
-    n = 0
-    for f in files:
-        p = urlparse(f)
-        if p.scheme not in ("", "file"):
-            return None
-        try:
-            size = os.path.getsize(p.path or f)
-        except OSError:
-            return None
-        n += max(1, -(-size // max_pb))
-    return n
 
 
 def shingles(documents: DataFrame, n: int = 3, hashed: bool = False) -> DataFrame:
@@ -113,25 +65,17 @@ def shingles(documents: DataFrame, n: int = 3, hashed: bool = False) -> DataFram
         raise NotImplementedError("shingles() is specialized for n=3")
     # Extraction is narrow — no shuffle on a real corpus, where input
     # splits already provide parallelism.  The local fixture is ONE
-    # parquet row group (file splits cannot divide a row group, so
-    # spark.sql.files.maxPartitionBytes cannot help); only in that
-    # degenerate case spread the CPU-bound transform chain.  The guard
-    # keeps the 100 TB path shuffle-free: thousands of input splits ->
-    # no repartition, corpus text never moves.
+    # parquet row group (file splits cannot divide a row group, so no
+    # split-size setting can help); only in that degenerate case
+    # spread the CPU-bound transform chain.  The guard keeps the 100 TB
+    # path shuffle-free: thousands of row groups -> no repartition,
+    # corpus text never moves.  File-backed frames are sized from
+    # their footers (io.input_row_groups, no RDD conversion); in-memory
+    # frames and non-local URIs keep the exact .rdd.getNumPartitions()
+    # probe (~0.2 s per fresh plan, r12).
     d = documents
     spread = d.sparkSession.sparkContext.defaultParallelism
-    # Partition-count probe: .rdd.getNumPartitions() converts the
-    # whole plan to an RDD on the driver — ~0.2 s per FRESH plan
-    # (profiled r12), paid once per query build.  For file-backed
-    # frames estimate the split count from the plan's file index
-    # instead (no RDD conversion): splits >= ceil(size /
-    # maxPartitionBytes) per file, so the "too few partitions"
-    # decision matches the RDD signal for both the degenerate
-    # single-row-group fixture (1 small file -> repartition) and the
-    # few-large-files corpus (many splits -> no shuffle, text never
-    # moves).  Non-statable URIs and in-memory frames (unit tests)
-    # keep the exact RDD probe.
-    n_in = _estimate_input_splits(d)
+    n_in = io.input_row_groups(d)
     if n_in is None:
         n_in = d.rdd.getNumPartitions()
     if n_in < min(4, spread):
@@ -270,8 +214,10 @@ def _cross_pair_structs(lo: "F.Column", hi: "F.Column") -> "F.Column":
 #: it — thousands of near-identical docs sharing one band hash,
 #: exactly what a 100 TB web crawl contains (r15 VERDICT #1) — are
 #: split into bounded chunk pairs and spread across the cluster
-#: instead of exploding O(m^2) pairs in ONE task.
-_LSH_BUCKET_CAP = 8192
+#: instead of exploding O(m^2) pairs in ONE task.  Callers gate the
+#: split on it: a corpus of at most this many docs cannot fill a hot
+#: bucket.
+LSH_BUCKET_CAP = 8192
 
 
 def lsh_candidate_pairs(
@@ -279,8 +225,8 @@ def lsh_candidate_pairs(
     bands: int = 8,
     rows_per_band: int = 4,
     cross_at: int | None = None,
-    bucket_cap: int = _LSH_BUCKET_CAP,
-    max_corpus_docs: int | None = None,
+    bucket_cap: int = LSH_BUCKET_CAP,
+    split_hot: bool = True,
 ) -> DataFrame:
     """LSH banding: hash each band of the signature; docs sharing any
     (band_id, band_hash) bucket become candidate pairs.  The bucket
@@ -323,18 +269,15 @@ def lsh_candidate_pairs(
     splitting the AGGREGATION itself would cost every normal corpus a
     second full pass over the band table, the wrong trade).
 
-    `max_corpus_docs` is the caller's UPPER BOUND on the signature
-    row count (footer-derived, the gates.corpus_exceeds pattern — no
-    Spark job).  A bucket can never hold more members than the corpus
-    has docs, so a bound at or under `bucket_cap` PROVES every bucket
-    cold and the identical pre-r16 single-chain plan is built — the
-    split machinery (its posting-list checkpoint, dead hot subtree and
-    empty exchange cost a measured ~5-10% on the LSH queries) engages
-    only where the hazard exists.  None = unknown = split (the safe
-    direction, like every gate in this package: the unsafe direction
-    is an unbounded single-task O(m^2) straggler, the safe one a few
-    extra empty stages)."""
-    split_hot = max_corpus_docs is None or max_corpus_docs > bucket_cap
+    `split_hot=False` builds the single-chain plan with no split:
+    callers pass `gates.corpus_exceeds(sf_dir, cutoff=LSH_BUCKET_CAP)`,
+    since a bucket can never hold more members than the corpus has
+    docs, so a corpus at or under the cap PROVES every bucket cold.
+    The split machinery (its posting-list checkpoint, dead hot subtree
+    and empty exchange cost a measured ~5-10% on the LSH queries)
+    engages only where the hazard exists.  An unknown size splits (the safe direction, like every gate in
+    this package: the unsafe direction is an unbounded single-task
+    O(m^2) straggler, the safe one a few extra empty stages)."""
     banded = band_table(signatures, bands, rows_per_band)
     groups = (
         banded.groupBy("band_id", "band_hash")

@@ -18,8 +18,8 @@ inventory* (metadata, rows ~ file count — tiny even at 100 TB of
 data); the rewrite itself is one `spark.read(group).repartition(n)`
 job per group, where n = ceil(group_bytes / target_file_bytes), so no
 single task ever sees more than one output file's worth of data.
-Nothing is collected to the driver except the group list (bounded by
-file count / cap).
+Nothing is collected to the driver except the planned inventory, one
+row per data file: the driver listed those files to build it.
 """
 
 from __future__ import annotations
@@ -36,16 +36,15 @@ from .. import config, io
 
 
 _BINPACK_BUCKET_BYTES = 2_000_000
-# Flat-window threshold: below this many inventory rows the single
-# per-table cumsum window is cheaper than the two-level's extra
-# shuffle + broadcast join (measured ~0.9 s overhead at sf0.1's 600k
-# rows vs a 2.3x win at sf10's 60M).  Callers pass the footer-counted
-# inventory size; None (unknown) takes the scale-safe two-level path.
-_BINPACK_FLAT_MAX_FILES = 2_000_000
+#: Flat-window threshold: at or below this many inventory rows the
+#: single per-table cumsum window is cheaper than the two-level's extra
+#: shuffle + broadcast join (measured ~0.9 s overhead at sf0.1's 600k
+#: rows vs a 2.3x win at sf10's 60M).  Callers gate `two_level` on it.
+BINPACK_FLAT_MAX_FILES = 2_000_000
 
 
 def plan_binpack_groups(
-    files: DataFrame, cap_bytes: int, n_files: int | None = None
+    files: DataFrame, cap_bytes: int, two_level: bool = True
 ) -> DataFrame:
     """Assign each data file to a rewrite group of <= cap_bytes (B1/B3).
 
@@ -69,13 +68,14 @@ def plan_binpack_groups(
     offsets table is tables × buckets rows — broadcast; no stats pass
     or driver action, the bucket boundaries are constants.
 
-    Small inventories (n_files <= _BINPACK_FLAT_MAX_FILES = 2M, footer-
-    counted by the caller) keep the flat window — the two-level's
-    extra shuffle costs more than it saves there; unknown sizes take
-    the two-level path (its failure mode is a small constant, the
-    flat window's is a single-task spill).
+    `two_level=False` keeps the flat window for small inventories (at
+    most BINPACK_FLAT_MAX_FILES = 2M rows: `gates.corpus_exceeds` on a
+    footer, or an exact listing length) — the two-level's extra
+    shuffle costs more than it saves there.  An unknown size takes the
+    two-level path (its failure mode is a small constant, the flat
+    window's is a single-task spill).
     """
-    if n_files is not None and n_files <= _BINPACK_FLAT_MAX_FILES:
+    if not two_level:
         w = (
             Window.partitionBy("table_name")
             .orderBy(F.desc("file_size_bytes"), "file_path")
@@ -200,24 +200,22 @@ def compact_table(
     progress) or one for the whole run.
     """
     inv, n_files = file_inventory(spark, table_dir)
-    planned = plan_binpack_groups(inv, max_group_size_bytes, n_files=n_files)
-    groups = (
-        planned.groupBy("group_id")
-        .agg(
-            F.collect_list("file_path").alias("paths"),
-            F.sum("file_size_bytes").alias("bytes"),
-        )
-        .orderBy("group_id")
-        .collect()  # bounded: one row per file group (metadata-size)
-    )
-    files_before = sum(len(g["paths"]) for g in groups)
+    planned = plan_binpack_groups(
+        inv, max_group_size_bytes, two_level=n_files > BINPACK_FLAT_MAX_FILES
+    ).collect()  # bounded: one row per data file (metadata-size)
+    groups: dict[int, list] = {}
+    for r in planned:
+        groups.setdefault(r["group_id"], []).append(r)
+    files_before = len(planned)
     rows_before = io.parquet_rows(_list_data_files(table_dir))
 
     replace_ids: list[int] = []
     data_dir = os.path.join(table_dir, "data")
-    for g in groups:
-        n_out = max(1, -(-int(g["bytes"]) // target_file_size_bytes))  # ceil
-        df = spark.read.parquet(*sorted(g["paths"]))
+    for gid in sorted(groups):
+        paths = sorted(r["file_path"] for r in groups[gid])
+        n_bytes = sum(r["file_size_bytes"] for r in groups[gid])
+        n_out = max(1, -(-n_bytes // target_file_size_bytes))  # ceil
+        df = spark.read.parquet(*paths)
         if strategy == config.STRATEGY_SORT:
             if not sort_order:
                 raise ValueError("sort strategy requires sort_order")
@@ -228,7 +226,7 @@ def compact_table(
         df.write.mode("overwrite").parquet(staged)
         # swap: move staged files in, drop originals and their checksum
         # sidecars (per-group commit)
-        for p in g["paths"]:
+        for p in paths:
             os.remove(p)
             crc = os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc")
             if os.path.exists(crc):

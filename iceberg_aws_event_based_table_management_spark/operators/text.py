@@ -1,6 +1,5 @@
 """Text-analysis operators for training-data pipelines (SURVEY.md SS2-D
-D5 + BASELINE.json: language-ID, quality scoring, token counting,
-document fingerprinting).
+D5 + BASELINE.json: language-ID, quality scoring, token counting).
 
 Everything is built-in-function composition (split/regexp/aggregate) —
 zero Python UDFs in the hot path; all per-document, so the operators
@@ -105,24 +104,6 @@ def quality_score(documents: DataFrame) -> DataFrame:
         F.round(stop_score, 6).alias("stop_score"),
         F.round(punct_penalty, 6).alias("punct_penalty"),
     )
-
-
-def rolling_fingerprint(documents: DataFrame, mod: int = 1_000_000_007, base: int = 31) -> Column | DataFrame:
-    """Polynomial rolling hash over the document's characters —
-    deterministic content fingerprint (cheap exact-dup key that
-    streams; unlike sha2 it is incrementally updatable, cited in
-    SURVEY SS2-D as 'document fingerprinting (rolling hash)').
-
-    h = (sum_i c_i * base^(n-i)) mod p, folded left-to-right:
-    h_{i+1} = (h_i * base + c_i) mod p.
-    """
-    chars = F.split(F.col("text"), "")
-    fp = F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, ch: (acc * base + F.ascii(ch)) % mod,
-    )
-    return documents.select("doc_id", fp.alias("fingerprint"))
 
 
 def lang_id_ngram(documents: DataFrame, profile_size: int = 20) -> DataFrame:

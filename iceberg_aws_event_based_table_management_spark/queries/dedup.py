@@ -99,12 +99,12 @@ def dedup_near_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = io.table(spark, sf_dir, "documents").select("doc_id", "text")
     sh = D.shingles(docs, 3)
     sig = D.minhash_signatures(sh, num_hashes=32)
-    # footer row count bounds every bucket's membership (no Spark job)
-    # — the hot-bucket split engages only when a bucket COULD exceed
-    # the cap (r16, from the r15 VERDICT #1).
+    # the doc count bounds every bucket's membership — the hot-bucket
+    # split engages only when a bucket COULD exceed the cap (r16, from
+    # the r15 VERDICT #1).
     return D.lsh_candidate_pairs(
         sig, bands=8, rows_per_band=4,
-        max_corpus_docs=io.parquet_num_rows(sf_dir, "documents"),
+        split_hot=gates.corpus_exceeds(sf_dir, cutoff=D.LSH_BUCKET_CAP),
     )
 
 
@@ -258,7 +258,7 @@ def dedup_near_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cands = D.lsh_candidate_pairs(
         prof.select("doc_id", "signature"), bands=8, rows_per_band=4,
-        max_corpus_docs=io.parquet_num_rows(sf_dir, "documents"),
+        split_hot=gates.corpus_exceeds(sf_dir, cutoff=D.LSH_BUCKET_CAP),
     )
     # The FOOTER gate keeps the small-corpus broadcast fast path and
     # flips to shuffle_hash only past the doc cutoff (r12 ADVICE).
@@ -480,13 +480,12 @@ def _inc_split(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     return docs.filter(~in_batch), batch
 
 
-def _inc_max_corpus_docs(sf_dir: str) -> int | None:
-    """Footer bound on base + batch: base and batch split the corpus,
-    the re-ingests add 1/_INC_REINGEST_MOD of it, and as much again is
-    margin, so the bound stays an upper bound on any bucket's
-    membership."""
-    n = io.parquet_num_rows(sf_dir, "documents")
-    return None if n is None else int(n * (1 + 2 / _INC_REINGEST_MOD))
+#: Corpus size past which base + batch could fill an LSH hot bucket:
+#: base and batch split the corpus, the re-ingests add
+#: 1/_INC_REINGEST_MOD of it, and as much again is margin, so a corpus
+#: at or under it keeps base + batch under the bucket cap.  Floored, so
+#: it can only err toward splitting.
+_INC_SPLIT_CUTOFF = D.LSH_BUCKET_CAP * _INC_REINGEST_MOD // (_INC_REINGEST_MOD + 2)
 
 
 _INC_GRAMS = r"""
@@ -597,7 +596,7 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross_cands = D.lsh_candidate_pairs(
         prof.select("doc_id", "signature"), bands=8, rows_per_band=4,
         cross_at=_INC_OFFSET,
-        max_corpus_docs=_inc_max_corpus_docs(sf_dir),
+        split_hot=gates.corpus_exceeds(sf_dir, cutoff=_INC_SPLIT_CUTOFF),
     )
     # Footer-gate the size-join strategy like dedup_near_verified
     # above (r12 ADVICE).  cross_at pushes the cross-set restriction

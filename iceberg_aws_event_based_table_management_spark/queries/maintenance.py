@@ -12,7 +12,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import config, io
-from ..operators.maintenance import plan_binpack_groups
+from ..operators import gates
+from ..operators.maintenance import BINPACK_FLAT_MAX_FILES, plan_binpack_groups
 from ..registry import register
 
 CAP = config.FIXTURE_GROUP_CAP_BYTES
@@ -42,8 +43,11 @@ def binpack_group_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     via per-table running cumsum (the window formulation of the
     rewrite's file-group sizing, AwsManageProperties.java:48-50).  Each
     group is an independent partial-progress commit."""
+    # io.files has one row per lineitem row: its footer sizes the window
     return plan_binpack_groups(
-        io.files(spark, sf_dir), CAP, n_files=io.parquet_num_rows(sf_dir, "lineitem")
+        io.files(spark, sf_dir),
+        CAP,
+        two_level=gates.corpus_exceeds(sf_dir, "lineitem", BINPACK_FLAT_MAX_FILES),
     ).select(
         "table_name", "file_path", "file_size_bytes", "group_id"
     )
@@ -79,7 +83,9 @@ def compaction_rowcount_invariant(spark: SparkSession, sf_dir: str) -> DataFrame
     group).  Mirrors what the reference trusts Iceberg to guarantee
     (SURVEY SS5.4)."""
     planned = plan_binpack_groups(
-        io.files(spark, sf_dir), CAP, n_files=io.parquet_num_rows(sf_dir, "lineitem")
+        io.files(spark, sf_dir),
+        CAP,
+        two_level=gates.corpus_exceeds(sf_dir, "lineitem", BINPACK_FLAT_MAX_FILES),
     )
     post = planned.groupBy("table_name", "group_id").agg(
         F.count("*").alias("files_in_group"),

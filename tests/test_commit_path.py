@@ -110,4 +110,4 @@ def test_commit_path_spark_job_counts(spark, committed_table):
     assert n_read == 0
     res, n_compact = _jobs(spark, lambda: maintenance.compact_table(spark, table_dir))
     assert res.n_groups == 1 and res.rows_before == res.rows_after == 600
-    assert n_compact == 6
+    assert n_compact == 5

@@ -619,9 +619,9 @@ def test_lsh_hot_bucket_split_preserves_exact_pairs(spark):
     assert hot <= ref and small <= ref
     for cap in (8, 10, 57, 56):
         assert _lsh_pairs_set(sig, bands=8, rows_per_band=4, bucket_cap=cap) == ref, cap
-    # provably-cold gate (doc-count bound <= cap): builds the
-    # pre-split single-chain plan, identical pair set
-    assert _lsh_pairs_set(sig, bands=8, rows_per_band=4, max_corpus_docs=80) == ref
+    # provably-cold gate (doc count <= cap): builds the pre-split
+    # single-chain plan, identical pair set
+    assert _lsh_pairs_set(sig, bands=8, rows_per_band=4, split_hot=False) == ref
 
 
 def test_lsh_hot_bucket_split_preserves_cross_at(spark):

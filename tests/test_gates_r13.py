@@ -1,7 +1,7 @@
 """Round-13 hardenings: the centralized broadcast-size gate
 (operators/gates.py — r12 verdict #5), the safe-direction flip of
-jaccard_pairs' unprobeable-input fallback (r12 ADVICE), Spark
-size-string parsing in the split estimator, the knn_join single-chunk
+jaccard_pairs' unprobeable-input fallback (r12 ADVICE), the footer
+row-group reader behind shingles' spread, the knn_join single-chunk
 memory-bound recheck, and the sampled-anchor mode of
 agg_approx_distinct (r12 verdict #4)."""
 
@@ -147,6 +147,9 @@ def test_tfidf_vocab_join_footer_gated(spark, sf_dir, monkeypatch):
         "dedup_band_tuning_audit",
         "pagerank_integer_bipartite",
         "dedup_ngram_jaccard",
+        "dedup_near_candidates",
+        "binpack_group_assignment",
+        "compaction_rowcount_invariant",
     ],
 )
 def test_forced_big_branch_keeps_rows(spark, sf_dir, monkeypatch, name):
@@ -164,44 +167,35 @@ def test_forced_big_branch_keeps_rows(spark, sf_dir, monkeypatch, name):
     assert sorted(big, key=repr) == sorted(small, key=repr), name
 
 
+def test_forced_big_plans_lsh_split_and_two_level_window(spark, sf_dir, monkeypatch):
+    """Forcing the one gate reaches the LSH hot-bucket split (posting
+    lists checkpointed, cold and hot branches unioned) and binpack's
+    two-level window (the _bkt size bucket)."""
+    import iceberg_aws_event_based_table_management_spark as engine
+
+    engine.load_all_queries()
+    qmap = engine.query_map()
+    small = _analyzed(qmap["dedup_near_candidates"](spark, sf_dir))
+    flat = _analyzed(qmap["binpack_group_assignment"](spark, sf_dir))
+    monkeypatch.setattr(gates, "corpus_exceeds", lambda *a, **k: True)
+    split = _analyzed(qmap["dedup_near_candidates"](spark, sf_dir))
+    two = _analyzed(qmap["binpack_group_assignment"](spark, sf_dir))
+    assert "Union" not in small and "LogicalRDD" not in small
+    assert "Union" in split and "LogicalRDD" in split
+    assert "_bkt" not in flat and "_bkt" in two
+
+
 # ---------------------------------------------------------------------------
-# Spark size-string parsing (r12 ADVICE, low)
+# io.input_row_groups: the size read behind shingles' spread
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.parametrize(
-    "raw,expected",
-    [
-        ("134217728", 134217728),
-        ("134217728b", 134217728),
-        ("64m", 64 * 1024 * 1024),
-        ("128MB", 128 * 1024 * 1024),
-        ("1g", 1 << 30),
-        ("2K", 2048),
-        (" 16 m ", 16 * 1024 * 1024),
-        ("garbage", None),
-        ("12.5m", None),
-        ("", None),
-    ],
-)
-def test_parse_spark_bytes(raw, expected):
-    assert D._parse_spark_bytes(raw) == expected
-
-
-def test_split_estimator_honors_suffixed_conf(spark, sf_dir):
-    """'64m' must parse (the r12 parser silently fell back to 128MB)."""
-    docs = eio.table(spark, sf_dir, "documents")
-    old = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
-        fine = D._estimate_input_splits(docs)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "1g")
-        coarse = D._estimate_input_splits(docs)
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
-    # sf0.001 documents.parquet is tens of KB: at 1k max bytes the
-    # estimate must exceed the single-split answer a 1g ceiling gives.
-    assert coarse is not None and fine is not None and fine > coarse
+def test_input_row_groups(spark, sf_dir):
+    """A fixture frame is one file with one row group; an in-memory
+    frame has no footer, so shingles keeps the exact RDD probe."""
+    assert eio.input_row_groups(eio.table(spark, sf_dir, "documents")) == 1
+    mem = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    assert eio.input_row_groups(mem) is None
 
 
 # ---------------------------------------------------------------------------
@@ -350,23 +344,28 @@ def test_quantile_sketch_fused_branch_matches_three_pass(spark, sf_dir, monkeypa
 
 
 # ---------------------------------------------------------------------------
-# dedup_incremental_neardup: the footer bound on its combined corpus
+# dedup_incremental_neardup: the split cutoff on its combined corpus
 # ---------------------------------------------------------------------------
 
 
 @pytest.mark.parametrize("sf", ["0.001", "0.01", "0.1"])
 def test_incremental_neardup_bound_unchanged(sf, sf_dir):
-    """The bound decides the LSH hot-bucket split gate; it must stay
-    int(n * 1.2) at the graded SFs so no gate flips."""
+    """The cutoff decides the LSH hot-bucket split gate; at the graded
+    SFs it must agree with the former bound int(n * 1.2) > bucket cap,
+    so no gate flips."""
     from iceberg_aws_event_based_table_management_spark.queries import dedup as Q
 
     sf_dir = os.path.join(os.path.dirname(sf_dir), f"sf{sf}")
     n = eio.parquet_num_rows(sf_dir, "documents")
-    assert Q._inc_max_corpus_docs(sf_dir) == int(n * 1.2)
+    assert (n > Q._INC_SPLIT_CUTOFF) == (int(n * 1.2) > D.LSH_BUCKET_CAP)
 
 
 def test_incremental_neardup_bound_covers_combined(spark, sf_dir):
+    """A corpus at the cutoff keeps base + batch under the bucket cap:
+    scale the measured combined/corpus ratio up to the cutoff."""
     from iceberg_aws_event_based_table_management_spark.queries import dedup as Q
 
-    base, batch = Q._inc_split(eio.table(spark, sf_dir, "documents").select("doc_id", "text"))
-    assert Q._inc_max_corpus_docs(sf_dir) >= base.unionByName(batch).count()
+    docs = eio.table(spark, sf_dir, "documents").select("doc_id", "text")
+    base, batch = Q._inc_split(docs)
+    ratio = base.unionByName(batch).count() / docs.count()
+    assert Q._INC_SPLIT_CUTOFF * ratio <= D.LSH_BUCKET_CAP

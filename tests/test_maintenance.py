@@ -49,7 +49,7 @@ def test_binpack_reduces_files_preserves_data(spark, small_table):
 
 
 def test_compaction_plans_flat_window_for_small_table(spark, small_table, monkeypatch):
-    """compact_table passes the inventory's exact file count, so a
+    """compact_table gates on the inventory's exact file count, so a
     40-file table takes the flat cumsum window (no _bkt bucket column,
     no offsets shuffle or broadcast join) rather than the two-level
     plan kept for unknown or >2M-file inventories."""
@@ -368,6 +368,6 @@ def test_binpack_two_level_cumsum_equals_flat(spark, sf_dir):
             for r in plan.collect()
         )
 
-    flat = rows(plan_binpack_groups(inv, cap, n_files=1))
-    two = rows(plan_binpack_groups(inv, cap, n_files=None))
+    flat = rows(plan_binpack_groups(inv, cap, two_level=False))
+    two = rows(plan_binpack_groups(inv, cap, two_level=True))
     assert flat == two and len(flat) > 0
