@@ -643,6 +643,21 @@ def test_lsh_hot_bucket_split_preserves_cross_at(spark):
         assert got == ref, cap
 
 
+def test_lsh_unsplit_chain_preserves_cross_at(spark):
+    """The provably-cold gate (split_hot=False) emits the same
+    boundary-straddling pairs as the split chain."""
+    from pyspark.sql import Row
+
+    rows = [Row(doc_id=i, signature=[5] * 32) for i in range(12)] + [
+        Row(doc_id=100 + i, signature=[17 * i + j for j in range(32)]) for i in range(4)
+    ]
+    sig = spark.createDataFrame(rows)
+    ref = {(a, b) for a in range(6) for b in range(6, 12)}
+    kw = dict(bands=8, rows_per_band=4, cross_at=6)
+    assert _lsh_pairs_set(sig, split_hot=False, **kw) == ref
+    assert _lsh_pairs_set(sig, bucket_cap=5, **kw) == ref
+
+
 def test_minhash_signatures_rejects_hashed_shingles(spark):
     """shingles(hashed=True) input must be rejected loudly: seeding
     xxhash64 over the long grams would silently change every

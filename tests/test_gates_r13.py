@@ -198,6 +198,42 @@ def test_input_row_groups(spark, sf_dir):
     assert eio.input_row_groups(mem) is None
 
 
+@pytest.mark.parametrize("sf", ["0.01", "0.1"])
+def test_input_row_groups_graded_fixtures(spark, sf_dir, sf):
+    """The larger graded documents fixtures are one row group too, so
+    shingles spreads them as it does sf0.001."""
+    sf_dir = os.path.join(os.path.dirname(sf_dir), f"sf{sf}")
+    assert eio.input_row_groups(eio.table(spark, sf_dir, "documents")) == 1
+
+
+def test_input_row_groups_sums_every_file(spark, tmp_path):
+    """A directory frame counts the row groups of each of its files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "t"
+    d.mkdir()
+    pq.write_table(pa.table({"x": list(range(30))}), str(d / "a.parquet"), row_group_size=10)
+    pq.write_table(pa.table({"x": list(range(20))}), str(d / "b.parquet"), row_group_size=10)
+    assert eio.input_row_groups(spark.read.parquet(str(d))) == 5
+
+
+def test_shingles_spread_follows_footer_row_groups(spark, sf_dir, tmp_path):
+    """shingles repartitions a frame of fewer than min(4, parallelism)
+    footer row groups and leaves a frame of four row groups on its
+    scan splits."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "docs.parquet")
+    texts = [f"w{i} x y z" for i in range(40)]
+    pq.write_table(pa.table({"doc_id": list(range(40)), "text": texts}), path, row_group_size=10)
+    spread = spark.sparkContext.defaultParallelism
+    for df, n in ((eio.table(spark, sf_dir, "documents"), 1), (spark.read.parquet(path), 4)):
+        assert eio.input_row_groups(df) == n
+        assert ("Repartition" in _analyzed(D.shingles(df))) == (n < min(4, spread)), n
+
+
 # ---------------------------------------------------------------------------
 # knn_join single-chunk memory-bound recheck (r12 ADVICE, low)
 # ---------------------------------------------------------------------------

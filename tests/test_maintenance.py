@@ -66,6 +66,24 @@ def test_compaction_plans_flat_window_for_small_table(spark, small_table, monkey
     assert "_bkt" not in planned[0]._jdf.queryExecution().analyzed().toString()
 
 
+def test_compaction_plans_two_level_window_past_flat_max(spark, small_table, monkeypatch):
+    """A listing longer than BINPACK_FLAT_MAX_FILES takes the two-level
+    window (the _bkt bucket column) and still keeps every row."""
+    real = maintenance.plan_binpack_groups
+    planned = []
+
+    def spy(*a, **k):
+        planned.append(real(*a, **k))
+        return planned[-1]
+
+    monkeypatch.setattr(maintenance, "plan_binpack_groups", spy)
+    monkeypatch.setattr(maintenance, "BINPACK_FLAT_MAX_FILES", 39)
+    res = maintenance.compact_table(spark, small_table, max_group_size_bytes=10_000_000)
+    assert len(planned) == 1
+    assert "_bkt" in planned[0]._jdf.queryExecution().analyzed().toString()
+    assert res.files_before == 40 and res.rows_after == res.rows_before
+
+
 def test_partial_progress_one_replace_per_group(spark, small_table):
     res = maintenance.compact_table(
         spark,
@@ -78,6 +96,20 @@ def test_partial_progress_one_replace_per_group(spark, small_table):
     snaps = maintenance.read_snapshots(spark, small_table)
     n_replace = snaps.filter(F.col("operation") == "replace").count()
     assert n_replace == res.n_groups == len(res.replace_snapshot_ids)
+
+
+def test_compaction_groups_match_plan(spark, small_table):
+    """compact_table groups the planned rows on the driver: one rewrite
+    per distinct group_id of plan_binpack_groups, every file in one."""
+    cap = 200_000
+    inv, _ = maintenance.file_inventory(spark, small_table)
+    plan = maintenance.plan_binpack_groups(inv, cap, two_level=False).collect()
+    res = maintenance.compact_table(
+        spark, small_table, max_group_size_bytes=cap, target_file_size_bytes=1_000_000
+    )
+    assert res.files_before == len(plan) == 40
+    assert res.n_groups == len({r["group_id"] for r in plan}) > 1
+    assert res.rows_after == res.rows_before
 
 
 def test_sort_strategy_orders_rows(spark, small_table):
