@@ -226,6 +226,17 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """Exact row count of a fixture table, for arithmetic that must
+    equal the oracle's ``COUNT(*)`` (plan branches go through
+    ``gates.corpus_exceeds`` instead).  The footers answer without a
+    Spark job; an unreadable footer falls back to an engine-side count
+    (one job) rather than a guess, so the count is the same either
+    way."""
+    n = parquet_num_rows(sf_dir, name)
+    return table(spark, sf_dir, name).count() if n is None else n
+
+
 def epoch_ms(col) -> F.Column:
     """NTZ-safe epoch milliseconds.
 

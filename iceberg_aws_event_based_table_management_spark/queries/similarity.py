@@ -592,22 +592,16 @@ def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     float64-GEMM/ROUND(_,6) pairing the r3-green similarity_threshold_
     pairs proved out.  Scale: k grows with the corpus so E[cluster
     size] stays ~{_SEMDEDUP_TARGET} (k = max(8, ceil(n/target)), n
-    from the parquet footer — no plan-build job; the oracle derives
-    the same k from COUNT(*)): pairwise work is n·target, linear in
-    the corpus, not the fixed-k n²/k the r11 sf10 audit caught (377 s
-    at ×100).  At 100 TB cluster_id is a partition key and each
-    cluster GEMMs independently."""
-    emb = io.table(spark, sf_dir, "embeddings")
-    n = io.parquet_num_rows(sf_dir, "embeddings")
-    if n is None:
-        # Unreadable footer: fall back to an engine-side count (one
-        # plan-build job) rather than 0 — a silent k=8 would diverge
-        # from the oracle's COUNT(*)-derived k on any corpus over
-        # 8*target rows AND re-enter the fixed-k quadratic regime the
-        # corpus-scaled k exists to kill.
-        n = emb.count()
-    k = max(8, -(-n // _SEMDEDUP_TARGET))
-    return S.semdedup_flags(emb, k=k, tau=_SEMDEDUP_TAU)
+    from ``io.table_rows`` — the footers, so no plan-build job; the
+    oracle derives the same k from COUNT(*)): pairwise work is
+    n·target, linear in the corpus, not the fixed-k n²/k the r11 sf10
+    audit caught (377 s at ×100).  At 100 TB cluster_id is a partition
+    key and each cluster GEMMs independently."""
+    # Exact even on an unreadable footer: a guessed k would diverge
+    # from the oracle's COUNT(*)-derived k and a small one re-enters
+    # the fixed-k quadratic regime.
+    k = max(8, -(-io.table_rows(spark, sf_dir, "embeddings") // _SEMDEDUP_TARGET))
+    return S.semdedup_flags(io.table(spark, sf_dir, "embeddings"), k=k, tau=_SEMDEDUP_TAU)
 
 
 @register(

@@ -193,7 +193,7 @@ def replay_dir_late_chunk(
     return path
 
 
-REPLAY_SHUFFLE_PARTITIONS = 8
+REPLAY_SHUFFLE_PARTITIONS = 1
 
 
 def _run_available_now(spark: SparkSession, writer: DataStreamWriter) -> None:
@@ -201,11 +201,26 @@ def _run_available_now(spark: SparkSession, writer: DataStreamWriter) -> None:
     to completion, at the replay shuffle width.
 
     A streaming query pins its state-partition count to
-    ``spark.sql.shuffle.partitions`` at start; the bounded replays
-    here process a handful of micro-batches over a few hundred keys,
-    so the session-wide 32 means 32 state-store commits + Python
-    worker rounds *per micro-batch* of near-empty partitions (51s ->
-    8s at sf0.01 for the applyInPandasWithState trigger).  Production
+    ``spark.sql.shuffle.partitions`` at start, and every micro-batch
+    then pays one state-store commit and one task (for a pandas state
+    function, one Python worker round) per partition, however little
+    state each holds.  The bounded replays here keep a few hundred
+    keys (the trigger's state is about 150 table rows at sf0.01), so
+    the width is 1, measured over 1/2/4/8 on a 4-core box
+    (bench_runs/replay_width_sweep.json):
+
+    - perfbench ``trigger_replay``: ``cpu_per_op_s`` 1.22 s at width 1,
+      1.49 at 2, 2.07 at 4, 3.31 at 8; state commits 0.16 s against
+      2.42 s at 8 in a traced run;
+    - executor time summed over the ten replay queries: 18.8 s at
+      width 1 against 72.8 s at 8 (sf0.01), 38 s against 85-92 s
+      (sf0.1); their summed wall at sf0.01 is 32.9 s against 42.4 s.
+
+    The trade is the applyInPandasWithState trigger at sf0.1: its
+    ~1,500 keys of per-key worker time run on one core, 17-18.5 s of
+    wall against 8.3-9.7 s at width 8, so width 1 only ties width 8
+    on the ten queries' summed wall there (48-49.5 s against
+    46.4-48.4 s) while widths 2 and 4 reach 36-40 s.  Production
     unbounded streams size this to the cluster instead — the caller's
     setting is restored on exit.
     """

@@ -218,6 +218,18 @@ def test_input_row_groups_sums_every_file(spark, tmp_path):
     assert eio.input_row_groups(spark.read.parquet(str(d))) == 5
 
 
+@pytest.mark.parametrize("sf", ["0.001", "0.01", "0.1"])
+def test_table_rows_is_count_with_or_without_footers(spark, sf_dir, sf, monkeypatch):
+    """semdedup's k comes from ``table_rows``: the footer sum, or the
+    engine count when a footer is unreadable — the oracle's COUNT(*)
+    either way, so k is the same at every SF."""
+    sf_dir = os.path.join(os.path.dirname(sf_dir), f"sf{sf}")
+    exact = eio.table(spark, sf_dir, "embeddings").count()
+    assert eio.table_rows(spark, sf_dir, "embeddings") == exact
+    monkeypatch.setattr(eio, "parquet_num_rows", lambda *a, **k: None)
+    assert eio.table_rows(spark, sf_dir, "embeddings") == exact
+
+
 def test_shingles_spread_follows_footer_row_groups(spark, sf_dir, tmp_path):
     """shingles repartitions a frame of fewer than min(4, parallelism)
     footer row groups and leaves a frame of four row groups on its

@@ -5,9 +5,12 @@ compare against the batch DataFrame result."""
 from __future__ import annotations
 
 import os
+import threading
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from iceberg_aws_event_based_table_management_spark import io
 from iceberg_aws_event_based_table_management_spark.operators import trigger
@@ -158,12 +161,14 @@ def test_stateful_trigger_equals_batch_decision(spark, sf_dir, replay_path, tmp_
     assert _sorted_rows(stream_decision) == _sorted_rows(batch_decision)
 
 
-def _final_state_decision(spark, replay_path, name, **kw):
+def _final_state_decision(spark, replay_path, name, files_per_trigger=2, **kw):
     """Last emission per table of the managed-state evaluator."""
     from pyspark.sql import Window
 
     sink = replay.run_to_memory(
-        replay.stateful_trigger_stream(replay.read_stream(spark, replay_path, 2), **kw),
+        replay.stateful_trigger_stream(
+            replay.read_stream(spark, replay_path, files_per_trigger), **kw
+        ),
         name,
         output_mode="update",
     )
@@ -197,6 +202,89 @@ def test_stateful_trigger_thresholds_reach_the_decision(spark, sf_dir, replay_pa
     batch_decision = trigger.decide_optimize(snaps, now=now, **thresholds)
     assert _sorted_rows(final) == _sorted_rows(batch_decision)
     assert _sorted_rows(final) != _sorted_rows(trigger.decide_optimize(snaps, now=now))
+
+
+class _StateWidths(StreamingQueryListener):
+    """numShufflePartitions of the first state operator, per progress."""
+
+    def __init__(self) -> None:
+        self.widths: list[int] = []
+        self.ended = threading.Event()
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        ops = event.progress.stateOperators
+        if ops:
+            self.widths.append(ops[0].numShufflePartitions)
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        self.ended.set()
+
+
+def test_replay_runs_at_the_replay_width(spark, replay_path):
+    """Every micro-batch of the state form holds its state in
+    REPLAY_SHUFFLE_PARTITIONS partitions, whatever the caller's
+    shuffle width, and the caller's width is back afterwards."""
+    listener = _StateWidths()
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.streams.addListener(listener)
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        _final_state_decision(spark, replay_path, "t_width", now="2024-01-31 00:00:00")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+        # the listener bus delivers the end after awaitTermination returns
+        assert listener.ended.wait(30)
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert listener.widths and set(listener.widths) == {replay.REPLAY_SHUFFLE_PARTITIONS}
+
+
+def test_replay_width_restored_when_a_batch_raises(spark, replay_path, tmp_path):
+    def fail(batch_df, batch_id):
+        raise RuntimeError("batch failed")
+
+    writer = (
+        replay.read_stream(spark, replay_path)
+        .writeStream.foreachBatch(fail)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+    )
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        with pytest.raises(StreamingQueryException):
+            replay._run_available_now(spark, writer)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+@pytest.fixture(scope="module")
+def four_chunk_path(spark, sf_dir, tmp_path_factory):
+    return replay.replay_dir(spark, sf_dir, str(tmp_path_factory.mktemp("order")), n_chunks=4)
+
+
+@pytest.mark.parametrize("order", [(4, 3, 2, 1), (2, 4, 1, 3)], ids=["reversed", "interleaved"])
+def test_trigger_forms_ignore_chunk_order(spark, sf_dir, four_chunk_path, order, tmp_path):
+    """Both trigger forms equal the batch decision when the chunks
+    arrive out of time order, one chunk per micro-batch: a REPLACE may
+    land after the commits it cuts, or before them."""
+    for slot, chunk in enumerate(order, start=1):
+        replay._pin_slot(os.path.join(four_chunk_path, f"chunk={chunk}"), slot)
+    now = "2024-01-31 00:00:00"
+    batch = _sorted_rows(trigger.decide_optimize(io.snapshots(spark, sf_dir), now=now))
+    name = "t_order_" + "".join(map(str, order))
+    state = _final_state_decision(spark, four_chunk_path, name, files_per_trigger=1, now=now)
+    table = replay.run_stateful_trigger(
+        spark, four_chunk_path, str(tmp_path / "state"), now=now, files_per_trigger=1
+    )
+    assert _sorted_rows(state) == batch
+    assert _sorted_rows(table) == batch
 
 
 def test_events_max_ts_cached_per_sf_dir(spark, sf_dir, monkeypatch):
