@@ -12,9 +12,11 @@ them as CTEs (see ``SNAPSHOTS_CTE`` / ``FILES_CTE``).
 It is also the only module that touches parquet files without Spark:
 footer reads (row counts, column bytes, row groups) and the managed tables'
 ``_snapshots`` lineage log, whose one-row commit records are written
-with pyarrow (``append_lineage_row``) and read back under one fixed
-schema (``LINEAGE_DDL``, maintenance.read_snapshots) — the analog of Iceberg's snapshot log, which
-a commit extends without running an engine job.
+with pyarrow (``append_lineage_row``).  The log is read back two ways:
+with pyarrow (``read_lineage``) by the commit path's trigger decision,
+and by Spark under one fixed schema (``LINEAGE_DDL``,
+maintenance.read_snapshots) — the analog of Iceberg's snapshot log,
+which a commit extends and reads without running an engine job.
 """
 
 from __future__ import annotations
@@ -319,6 +321,40 @@ def append_lineage_row(snapshots_dir: str, table_name: str, snapshot_id: int, op
     hidden = os.path.join(snapshots_dir, f".{name}")
     pq.write_table(row, hidden)
     os.rename(hidden, os.path.join(snapshots_dir, name))
+
+
+def read_lineage(snapshots_dir: str):
+    """The lineage log in ``snapshots_dir`` as one pyarrow Table
+    (table_name, snapshot_id, ts as int64 epoch micros, operation),
+    read with pyarrow and no Spark job — the commit path's read
+    (operators/trigger.decide_on_driver).
+
+    Reads each visible ``*.parquet`` file: in-flight hidden ``.part-*``
+    names, ``_SUCCESS`` and ``.crc`` sidecars are skipped, as Spark's
+    reader skips them.  ``ts`` is normalised one file at a time,
+    because the files disagree on its type: INT96 from the earlier
+    Spark writer, TIMESTAMP(MICROS, UTC) from ``append_lineage_row``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pa.schema(
+        [
+            ("table_name", pa.string()),
+            ("snapshot_id", pa.int64()),
+            ("ts", pa.int64()),  # epoch micros
+            ("operation", pa.string()),
+        ]
+    )
+    parts = []
+    for name in sorted(os.listdir(snapshots_dir)):
+        if name.startswith((".", "_")) or not name.endswith(".parquet"):
+            continue
+        path = os.path.join(snapshots_dir, name)
+        with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as f:
+            t = f.read(columns=schema.names)
+        ts = t["ts"].cast(pa.timestamp("us")).cast(pa.int64())
+        parts.append(t.set_column(schema.get_field_index("ts"), "ts", ts).cast(schema))
+    return pa.concat_tables(parts) if parts else schema.empty_table()
 
 
 def files(spark: SparkSession, sf_dir: str, n_tables: int = config.FILES_TABLE_COUNT) -> DataFrame:

@@ -29,7 +29,7 @@ from typing import Protocol
 
 from pyspark.sql import SparkSession
 
-from .. import config
+from .. import config, io
 from . import maintenance
 
 PYTHON_JOB_TEMPLATE = (
@@ -414,18 +414,26 @@ def evaluate_and_maybe_optimize(
     `shouldOptimizeDataFiles` -> `executor.execute()` chain
     (AwsTableManagementMetricsEvaluator.java:64-85).
 
-    `now` defaults to wall-clock UTC — correct for this PLUMBING path,
-    matching the reference's `System.currentTimeMillis()`; the
-    oracle-checked query path (`time_threshold_trigger` /
-    `should_optimize_decision`) always pins `now` explicitly so
-    results are reproducible."""
+    The decision runs on the driver with no Spark job: the lineage is
+    read with pyarrow (`io.read_lineage`) and cut by
+    `trigger.decide_on_driver`, as the reference walks
+    `SnapshotUtil.currentAncestors` inside its commit callback.  The
+    registered queries keep the Spark form (`trigger.decide_optimize`),
+    which gives the same rows.
+
+    `now` defaults to wall-clock UTC in epoch milliseconds — correct
+    for this PLUMBING path, matching the reference's
+    `System.currentTimeMillis()`; commit timestamps are in micros, so a
+    whole-second clock would read a fresh commit's age up to 1 s short.
+    A pinned `now` is a UTC timestamp literal, as the oracle-checked
+    query path (`time_threshold_trigger` / `should_optimize_decision`)
+    always passes, so results are reproducible."""
     from . import trigger
 
     properties = dict(properties or {})
-    snaps = maintenance.read_snapshots(spark, table_dir)
-    decision = trigger.decide_optimize(
-        snaps,
-        now=now or time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime()),
+    decision = trigger.decide_on_driver(
+        io.read_lineage(os.path.join(table_dir, "_snapshots")),
+        now_ms=time.time_ns() // 1_000_000 if now is None else trigger.epoch_ms_of(now),
         commit_threshold=int(
             properties.get("optimize-data.commit-threshold", config.COMMIT_THRESHOLD)
         ),
@@ -433,8 +441,8 @@ def evaluate_and_maybe_optimize(
             properties.get("optimize-data.time-threshold-ms", config.TIME_THRESHOLD_MS)
         ),
         replace_op="replace",
-    ).collect()
-    if not decision or not decision[0]["should_optimize"]:
+    ).get(os.path.basename(table_dir))
+    if decision is None or not decision[-1]:  # should_optimize
         return None
     # recursion guard: strip reporter keys before handing config to the
     # spawned job (A11; AwsTableManagementMetricsEvaluator.java:93-99)

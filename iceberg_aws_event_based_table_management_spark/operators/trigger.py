@@ -1,8 +1,8 @@
-"""The optimize-trigger evaluator — the reference's brain, Spark-first.
+"""The optimize-trigger evaluator — the reference's brain.
 
 Re-expresses ``shouldOptimizeDataFiles``
-(/root/reference/.../AwsTableManagementMetricsEvaluator.java:108-140)
-as declarative DataFrame logic over a snapshot-lineage table:
+(AwsTableManagementMetricsEvaluator.java:108-140)
+over a snapshot-lineage table:
 
   1. order each table's snapshots newest-first (SnapshotUtil.currentAncestors, :74)
   2. stop at the most recent REPLACE commit (:114-117)
@@ -10,11 +10,20 @@ as declarative DataFrame logic over a snapshot-lineage table:
      OR the remaining count reaches commit-threshold (:128-135)
 
 The reference walks the lineage imperatively with early exit; the
-set-based window formulation below is equivalent (the early exits only
-short-circuit an OR) and is what scales: one shuffle on table_name,
-window + aggregation, no driver-side iteration.  At 100 TB the
-snapshots table is metadata (rows ~ number of commits), so this is
-cheap; partitioning by table_name keeps the window bounded per table.
+cut formulations below are equivalent (the early exits only
+short-circuit an OR), and the rule itself is one function, ``fires``.
+
+Two forms of the cut, one per caller:
+
+- queries decide with Spark (``decide_optimize``): a set-based window
+  + aggregation, one shuffle on table_name.  The registered queries
+  decide over every table of the events-derived lineage, which grows
+  with the data, so the work stays on the executors.
+- a commit decides on the driver (``decide_on_driver``): one
+  vectorized pass over its own table's lineage log, one row per
+  commit of that one table.  Like the reference's walk inside the
+  commit callback, it runs no engine job; a Spark plan over those
+  rows cost two jobs and more than half of a quiet commit's time.
 """
 
 from __future__ import annotations
@@ -57,20 +66,27 @@ def pending_since_replace(snapshots: DataFrame, replace_op: str = config.REPLACE
     return _flag_pending(snapshots, replace_op).filter(F.col("is_pending")).drop("is_pending")
 
 
+def fires(n, age, commit_threshold: int, time_threshold_ms: int) -> tuple:
+    """The time-OR-count rule (:119-135) over a pending count ``n`` and
+    an oldest-pending age ``age`` (-1 when nothing is pending):
+    ``(time_trigger, commit_trigger, should_optimize)``.  Plain
+    operators, so ``n`` and ``age`` may be Columns or ints."""
+    time_trigger = age >= time_threshold_ms
+    commit_trigger = n >= commit_threshold
+    return time_trigger, commit_trigger, time_trigger | commit_trigger
+
+
 def decision_columns(
     n: Column, age: Column, commit_threshold: int, time_threshold_ms: int
 ) -> list[Column]:
-    """The time-OR-count rule (:119-135) over a pending count ``n`` and
-    an oldest-pending age ``age`` (-1 when nothing is pending): the
-    five decision columns every trigger form emits."""
-    time_trigger = age >= F.lit(time_threshold_ms)
-    commit_trigger = n >= F.lit(commit_threshold)
+    """The five decision columns every Spark trigger form emits."""
+    time_trigger, commit_trigger, should = fires(n, age, commit_threshold, time_threshold_ms)
     return [
         n.alias("n_commits_since_replace"),
         age.alias("max_pending_age_ms"),
         time_trigger.alias("time_trigger"),
         commit_trigger.alias("commit_trigger"),
-        (time_trigger | commit_trigger).alias("should_optimize"),
+        should.alias("should_optimize"),
     ]
 
 
@@ -104,3 +120,58 @@ def decide_optimize(
     return agg.select(
         F.col("table_name"), *decision_columns(n, age, commit_threshold, time_threshold_ms)
     )
+
+
+def epoch_ms_of(now: str) -> int:
+    """Epoch milliseconds of a UTC timestamp literal: the driver twin
+    of ``unix_millis(cast(now AS timestamp))`` in a UTC session."""
+    import pandas as pd
+
+    return int(pd.Timestamp(now, tz="UTC").value // 1_000_000)
+
+
+def pending_cut(lineage, replace_op: str = config.REPLACE_OPERATION) -> dict[str, tuple[int, int]]:
+    """Per table of ``lineage`` (a pyarrow Table as ``io.read_lineage``
+    returns it, ``ts`` in epoch micros): the pending count and the
+    oldest pending epoch-ms (-1 when nothing is pending).  Pending rows
+    are those strictly after the table's newest REPLACE in
+    (ts, snapshot_id) order — the whole lineage when it has none —
+    which is the cut ``_flag_pending`` makes with a window.
+
+    One sort, then array arithmetic: each table is a contiguous run of
+    the sorted rows, and its pending rows are the tail of that run
+    after its last REPLACE."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    t = lineage.sort_by([(c, "ascending") for c in ("table_name", "ts", "snapshot_id")])
+    names = t["table_name"].combine_chunks().dictionary_encode()
+    table = names.indices.to_numpy()  # ascending: codes follow first appearance
+    rows = np.arange(len(t))
+    replace = pc.equal(t["operation"], replace_op).fill_null(False).to_numpy(zero_copy_only=False)
+    ids = np.arange(len(names.dictionary))
+    start, end = np.searchsorted(table, ids), np.searchsorted(table, ids, side="right")
+    first_pending = start.copy()
+    np.maximum.at(first_pending, table[replace], rows[replace] + 1)
+    n = end - first_pending
+    ts_ms = t["ts"].to_numpy() // 1000  # floor, as unix_millis truncates micros
+    oldest = np.where(n > 0, ts_ms[np.minimum(first_pending, len(t) - 1)], -1)
+    return {name: (int(c), int(o)) for name, c, o in zip(names.dictionary.to_pylist(), n, oldest)}
+
+
+def decide_on_driver(
+    lineage,
+    *,
+    now_ms: int,
+    commit_threshold: int = config.COMMIT_THRESHOLD,
+    time_threshold_ms: int = config.TIME_THRESHOLD_MS,
+    replace_op: str = config.REPLACE_OPERATION,
+) -> dict[str, tuple[int, int, bool, bool, bool]]:
+    """``decide_optimize``'s rows without a Spark job: table_name ->
+    (n_commits_since_replace, max_pending_age_ms, time_trigger,
+    commit_trigger, should_optimize), from ``pending_cut``."""
+    out = {}
+    for name, (n, oldest) in pending_cut(lineage, replace_op).items():
+        age = now_ms - oldest if n else -1
+        out[name] = (n, age, *fires(n, age, commit_threshold, time_threshold_ms))
+    return out

@@ -409,7 +409,7 @@ def stateful_trigger_stream(
     """
     import pandas as pd
 
-    now_ms = int(pd.Timestamp(now, tz="UTC").value // 1_000_000)
+    now_ms = trigger.epoch_ms_of(now)
     replace_op = config.REPLACE_OPERATION
 
     out_schema = T.StructType(

@@ -1,8 +1,9 @@
-"""The per-commit path runs Spark only for the data write and the
-trigger decision: the `_snapshots` lineage row is a pyarrow file, the
-lineage read has a fixed schema, and compaction counts rows from
-parquet footers.  Lineage files from the earlier Spark writer (INT96
-`ts`) read back under the same schema."""
+"""The per-commit path runs Spark only for the data write: the
+`_snapshots` lineage row is a pyarrow file, the trigger decision reads
+the lineage with pyarrow and cuts it on the driver, the Spark lineage
+read has a fixed schema, and compaction counts rows from parquet
+footers.  Lineage files from the earlier Spark writer (INT96 `ts`)
+read back as the same rows both ways."""
 
 from __future__ import annotations
 
@@ -71,6 +72,28 @@ def test_old_and_new_lineage_files_read_as_one_schema(spark, tmp_path):
     assert got == trigger.decide_optimize(in_memory, **args).collect()
     assert got[0]["n_commits_since_replace"] == 2 and got[0]["should_optimize"]
 
+    # an in-flight hidden file: neither reader may see its REPLACE
+    listed = set(os.listdir(snaps_dir))
+    io.append_lineage_row(snaps_dir, "t_mixed", base + 4_000_000_000, "replace")
+    (written,) = set(os.listdir(snaps_dir)) - listed
+    hidden = os.path.join(snaps_dir, f".{written}")
+    os.rename(os.path.join(snaps_dir, written), hidden)
+    assert pq.read_table(hidden).num_rows == 1
+    lineage = io.read_lineage(snaps_dir)
+    assert lineage.schema.names == ["table_name", "snapshot_id", "ts", "operation"]
+    assert str(lineage.schema.field("ts").type) == "int64"
+    by_driver = sorted(
+        (t, sid, epoch + datetime.timedelta(microseconds=ts), op)
+        for t, sid, ts, op in zip(*(lineage[c].to_pylist() for c in lineage.schema.names))
+    )
+    by_spark = maintenance.read_snapshots(spark, table_dir).orderBy("snapshot_id").collect()
+    assert by_driver == [tuple(r) for r in by_spark]
+    assert by_driver == want
+    decided = trigger.decide_on_driver(
+        lineage, now_ms=trigger.epoch_ms_of(NOW), commit_threshold=2, replace_op="replace"
+    )
+    assert decided == {"t_mixed": tuple(got[0])[1:]}
+
 
 def _jobs(spark, fn):
     """(fn(), number of Spark jobs it ran)."""
@@ -96,18 +119,31 @@ def committed_table(spark, tmp_path):
 
 def test_commit_path_spark_job_counts(spark, committed_table):
     """Spark jobs per step: a quiet commit is its data write (shuffle +
-    write) plus the decision (2 jobs); the lineage read builds without
-    a job; a one-group compaction is planning, its rewrite and nothing
-    for bookkeeping.  A Spark lineage write or a schema-inferring
-    lineage read would raise these counts."""
+    write, 2 jobs) and nothing else; the trigger decision runs no job;
+    the Spark lineage read builds without a job; a one-group compaction
+    is planning, its rewrite and nothing for bookkeeping.  A Spark
+    lineage write, a Spark decision or a schema-inferring lineage read
+    would raise these counts."""
     table_dir, chunk = committed_table
     reporter = jobs.CommitReporter(spark)
     fired, n_commit = _jobs(spark, lambda: reporter.reported_append(chunk, table_dir, n_files=2))
-    assert fired is None and n_commit == 4
+    assert fired is None and n_commit == 2
     fired, n_eval = _jobs(spark, lambda: jobs.evaluate_and_maybe_optimize(spark, table_dir, {}))
-    assert fired is None and n_eval == 2
+    assert fired is None and n_eval == 0
     _, n_read = _jobs(spark, lambda: maintenance.read_snapshots(spark, table_dir))
     assert n_read == 0
     res, n_compact = _jobs(spark, lambda: maintenance.compact_table(spark, table_dir))
     assert res.n_groups == 1 and res.rows_before == res.rows_after == 600
     assert n_compact == 5
+
+
+def test_fresh_commit_age_is_not_negative(spark, tmp_path):
+    """`now` is read in milliseconds: with a zero time threshold the
+    first commit to a fresh table is old enough to fire.  A
+    whole-second clock reads the commit's age as negative and stays
+    quiet."""
+    table_dir = str(tmp_path / "t_fresh")
+    reporter = jobs.CommitReporter(spark, {"optimize-data.time-threshold-ms": "0"})
+    job = reporter.reported_append(spark.range(10), table_dir)
+    assert job is not None
+    assert job.wait_for_completion() == jobs.JobState.SUCCEEDED

@@ -2,7 +2,8 @@
 window/agg formulations must match straightforward imperative mirrors
 of the reference's Java semantics on randomized inputs.
 
-- trigger evaluator vs a literal re-walk of shouldOptimizeDataFiles
+- trigger evaluator, both the Spark form and the driver cut, vs a
+  literal re-walk of shouldOptimizeDataFiles
   (AwsTableManagementMetricsEvaluator.java:108-140)
 - binpack planner invariants (AwsManageProperties.java:48-50 cap)
 - Morton/z-order key vs a bit-twiddling reference
@@ -13,7 +14,8 @@ whole example costs one Spark job, keeping the suite fast.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+import pyarrow as pa
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -23,11 +25,14 @@ NOW_MS = 1_700_000_000_000
 OPS = ("append", "replace", "delete", "overwrite")
 
 snapshot = st.tuples(
-    st.integers(min_value=0, max_value=50_000_000),  # age offset ms before NOW
+    st.one_of(
+        st.integers(min_value=0, max_value=50_000_000),  # age offset ms before NOW
+        st.integers(min_value=0, max_value=3),  # ts ties between snapshot ids
+    ),
     st.sampled_from(OPS),
 )
 timeline = st.lists(snapshot, min_size=0, max_size=12)
-timelines = st.lists(timeline, min_size=1, max_size=20)
+timelines = st.lists(timeline, min_size=0, max_size=20)
 
 
 def _mirror_decision(snaps, *, ct, tt):
@@ -47,7 +52,13 @@ def _mirror_decision(snaps, *, ct, tt):
 
 @settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(timelines)
+@example([])  # an empty log
+@example([[(5, "append"), (5, "replace"), (5, "delete"), (9, "append")]])  # ts ties at the cut
+@example([[(30, "replace"), (20, "append"), (10, "replace"), (3, "append")]])  # several REPLACEs
+@example([[(10, "append"), (4, "overwrite"), (0, "replace")]])  # the newest is a REPLACE
+@example([[(10, "append"), (4, "delete"), (0, "overwrite")], []])  # no REPLACE
 def test_trigger_matches_imperative_reference(spark, tls):
+    """The Spark decision and the driver cut both equal the mirror."""
     ct, tt = 5, 10_800_000
     rows, expected = [], {}
     for t_idx, tl in enumerate(tls):
@@ -59,8 +70,6 @@ def test_trigger_matches_imperative_reference(spark, tls):
             rows.append((name, sid, ts, op))
         if snaps:
             expected[name] = _mirror_decision(snaps, ct=ct, tt=tt)
-    if not rows:
-        return
     df = spark.createDataFrame(
         rows, "table_name string, snapshot_id long, ts_ms long, operation string"
     ).select("table_name", "snapshot_id", F.timestamp_millis("ts_ms").alias("ts"), "operation")
@@ -78,6 +87,21 @@ def test_trigger_matches_imperative_reference(spark, tls):
         ).collect()
     }
     assert got == expected
+    # rows reversed, so input order cannot stand in for the id tie-break
+    names, sids, ts_ms, ops = zip(*rows[::-1]) if rows else ((), (), (), ())
+    lineage = pa.table(
+        {
+            "table_name": pa.array(names, pa.string()),
+            "snapshot_id": pa.array(sids, pa.int64()),
+            "ts": pa.array([ms * 1000 for ms in ts_ms], pa.int64()),  # epoch micros
+            "operation": pa.array(ops, pa.string()),
+        }
+    )
+    assert trigger.epoch_ms_of(now) == NOW_MS
+    on_driver = trigger.decide_on_driver(
+        lineage, now_ms=NOW_MS, commit_threshold=ct, time_threshold_ms=tt, replace_op="replace"
+    )
+    assert on_driver == expected
 
 
 file_entry = st.tuples(st.integers(min_value=1, max_value=2_000_000_000))
