@@ -19,8 +19,6 @@ MAX_FILE_GROUP_SIZE_BYTES = 10_737_418_240
 # optimize-data.strategy (AwsManageProperties.java:52-54)
 STRATEGY_BINPACK = "binpack"
 STRATEGY_SORT = "sort"
-# optimize-data.sleep-wait-ms (AwsManageProperties.java:26-29)
-SLEEP_WAIT_MS = 2000
 # DataOperations.REPLACE analog in the fixture event vocabulary
 # (AwsTableManagementMetricsEvaluator.java:114; FIXTURES.md).
 REPLACE_OPERATION = "purchase"

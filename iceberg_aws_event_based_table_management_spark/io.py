@@ -178,13 +178,15 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         mtime = None
     key = (os.path.abspath(sf_dir), name, mtime)
     if name == "events":
-        # events.parquet carries TIMESTAMP(NANOS).  Spark <= 4.0 rejects it
-        # unless nanosAsLong is set; Spark >= 4.1 ignores the (removed) conf
-        # and reads it natively as TIMESTAMP_NTZ truncated to micros.  Callers
-        # may hand us an externally built session (the evaluator runs inside
-        # the host's session, AwsTableManagementMetricsEvaluator.java:64-85),
-        # so set the legacy conf defensively and branch on what the read
-        # actually produced rather than assuming either behavior.
+        # The fixture events.parquet stores ts as TIMESTAMP(MICROS,
+        # isAdjustedToUTC=false), which reads as a timestamp.  An events
+        # file written with TIMESTAMP(NANOS) is read too: Spark (4.1.2
+        # included) rejects it unless nanosAsLong is set, and then
+        # surfaces it as long ns.  Callers may hand us an externally
+        # built session (the evaluator runs inside the host's session,
+        # AwsTableManagementMetricsEvaluator.java:64-85), so set the
+        # legacy conf defensively and branch on what the read actually
+        # produced rather than assuming either behavior.
         try:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:

@@ -4,19 +4,21 @@ Models the reference's executor layer (SURVEY SS2-A A13, A17-A20):
 
 - `Executor` SPI: `initialize(table, properties)` / `execute()`
   (Executor.java:17,22)
-- dynamic dispatch by impl name via a registry (the Python analog of
+- dispatch by impl name through a dict (the Python analog of
   `loadExecutor`'s reflection, AwsTableManagementMetricsEvaluator.java:152-176)
 - rendered job-script sink: writes the generated SQL/PySpark script to
   a file before running (`createFile`, BaseEmrOptimizeDataExecutor.java:82-89;
   PYTHON_JOB_TEMPLATE, EmrServerlessOptimizeDataExecutor.java:41-44)
-- async submit + synchronous status polling every sleep-wait-ms
-  (`synchronous-enabled` / `waitFor*`, AwsManageProperties.java:20-29,
+- async submit + synchronous wait for a terminal state
+  (`synchronous-enabled` / `waitFor*`, AwsManageProperties.java:20-22,
   AthenaOptimizeDataExecutor.java:122-155)
 
 The remote AWS backends become one local backend: a thread running the
-native compaction (operators.maintenance).  The SPI shape is kept so a
-real remote backend (e.g. an Iceberg `CALL system.rewrite_data_files`)
-can slot in unchanged.
+native compaction (operators.maintenance).  The reference's backends
+poll their services every `sleep-wait-ms`; a thread in this process
+signals its end instead, so nothing polls.  The SPI shape is kept so a
+real Iceberg `CALL system.rewrite_data_files` slots in unchanged
+(`IcebergCallExecutor`).
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ import os
 import threading
 import time
 import uuid
+from dataclasses import dataclass
 from typing import Protocol
 
 from pyspark.sql import SparkSession
@@ -63,21 +66,9 @@ class Executor(Protocol):
     def execute(self) -> None: ...
 
 
-_EXECUTORS: dict[str, type] = {}
-
-
-def register_executor(name: str):
-    def deco(cls):
-        _EXECUTORS[name] = cls
-        cls.impl_name = name
-        return cls
-
-    return deco
-
-
 def load_executor(impl: str) -> Executor:
-    """A13: dynamic dispatch — registry lookup standing in for the
-    no-arg-constructor reflection of `loadExecutor` (:152-176)."""
+    """A13: dispatch — a dict lookup standing in for the no-arg-
+    constructor reflection of `loadExecutor` (:152-176)."""
     try:
         return _EXECUTORS[impl]()
     except KeyError:
@@ -94,168 +85,59 @@ class JobState:
     TERMINAL = frozenset({"SUCCEEDED", "FAILED", "CANCELLED"})
 
 
-# Per-backend poll-state vocabularies, mapped onto the canonical machine
-# above.  Each dict mirrors one of the reference's four pollers:
-# - athena:         QUEUED/RUNNING + FAILED/CANCELLED raise
-#                   (AthenaOptimizeDataExecutor.java:122-155)
-# - emr-ec2:        PENDING/RUNNING loop (EmrOnEc2OptimizeDataExecutor.java:101-130)
-# - emr-eks:        SUBMITTED/PENDING/RUNNING loop
-#                   (EmrOnEksOptimizeDataExecutor.java:165-196)
-# - emr-serverless: +SCHEDULED pre-state
-#                   (EmrServerlessOptimizeDataExecutor.java:154-186)
-BACKEND_STATES: dict[str, dict[str, str]] = {
-    "athena": {
-        "QUEUED": JobState.SUBMITTED,
-        "RUNNING": JobState.RUNNING,
-        "SUCCEEDED": JobState.SUCCEEDED,
-        "FAILED": JobState.FAILED,
-        "CANCELLED": JobState.CANCELLED,
-    },
-    "emr-ec2": {
-        "PENDING": JobState.SUBMITTED,
-        "RUNNING": JobState.RUNNING,
-        "COMPLETED": JobState.SUCCEEDED,
-        "FAILED": JobState.FAILED,
-        "INTERRUPTED": JobState.FAILED,
-        "CANCEL_PENDING": JobState.RUNNING,
-        "CANCELLED": JobState.CANCELLED,
-    },
-    "emr-eks": {
-        "SUBMITTED": JobState.SUBMITTED,
-        "PENDING": JobState.SUBMITTED,
-        "RUNNING": JobState.RUNNING,
-        "COMPLETED": JobState.SUCCEEDED,
-        "FAILED": JobState.FAILED,
-        "CANCEL_PENDING": JobState.RUNNING,
-        "CANCELLED": JobState.CANCELLED,
-    },
-    "emr-serverless": {
-        "SUBMITTED": JobState.SUBMITTED,
-        "SCHEDULED": JobState.SUBMITTED,
-        "PENDING": JobState.SUBMITTED,
-        "RUNNING": JobState.RUNNING,
-        "SUCCESS": JobState.SUCCEEDED,
-        "FAILED": JobState.FAILED,
-        "CANCELLING": JobState.RUNNING,
-        "CANCELLED": JobState.CANCELLED,
-    },
-}
+@dataclass(frozen=True)
+class RewriteSpec:
+    """A job's properties, parsed once: the CALL `render_optimize_sql`
+    renders and the rewrite `LocalCompactionExecutor` runs read the same
+    values (EMRSparkUtil.java:101-128)."""
 
+    #: the CALL's options map; the reference defaults
+    #: (AwsManageProperties.java:48-50) when no option is set
+    options: dict[str, str]
+    strategy: str
+    sort_order: str | None
 
-def normalize_backend_state(backend: str, raw_state: str) -> str:
-    """Map a backend-specific poll state onto the canonical JobState —
-    the four `waitFor*` loops collapse to one machine, but the
-    per-backend vocabularies remain addressable for a real remote
-    executor slotting into the SPI."""
-    try:
-        return BACKEND_STATES[backend][raw_state]
-    except KeyError:
-        raise ValueError(f"unknown state {raw_state!r} for backend {backend!r}") from None
-
-
-@register_executor("local-compaction")
-class LocalCompactionExecutor:
-    """The in-process stand-in for the four AWS executors: submits the
-    rewrite asynchronously and exposes the same poll-until-terminal
-    state machine (A19/A20)."""
-
-    def __init__(self) -> None:
-        self.table_dir: str | None = None
-        self.properties: dict[str, str] = {}
-        self.state = JobState.SUBMITTED
-        self.error: BaseException | None = None
-        self.result: maintenance.CompactionResult | None = None
-        self.script_path: str | None = None
-        self._thread: threading.Thread | None = None
-        self._spark: SparkSession | None = None
-        self._state_lock = threading.Lock()
-
-    def initialize(self, table_dir: str, properties: dict[str, str]) -> None:
-        # config validation mirrors BaseEmrOptimizeDataExecutor.java:55-58
-        if not table_dir:
-            raise ValueError("table_dir is required")
-        self.table_dir = table_dir
-        self.properties = dict(properties)
-        self._spark = SparkSession.getActiveSession()
-
-    def _set_state(self, new: str) -> None:
-        """Terminal-state transition that never overwrites a cancel:
-        once CANCELLED is observed by a poller, a late worker-thread
-        completion must not resurrect the job (the AWS services make
-        the same guarantee — a StopQueryExecution'd query stays
-        CANCELLED even if the engine finished the work)."""
-        with self._state_lock:
-            if self.state != JobState.CANCELLED:
-                self.state = new
-
-    def _run(self) -> None:
-        self._set_state(JobState.RUNNING)
-        try:
-            strategy = self.properties.get("optimize-data.strategy", config.STRATEGY_BINPACK)
-            sort_order = self.properties.get("optimize-data.sort-order")
-            self.result = maintenance.compact_table(
-                self._spark,
-                self.table_dir,
-                strategy=strategy,
-                sort_order=sort_order.split(",") if sort_order else None,
-                max_group_size_bytes=int(
-                    self.properties.get(
-                        "optimize-data.options.max-file-group-size-bytes",
-                        config.MAX_FILE_GROUP_SIZE_BYTES,
-                    )
-                ),
-                target_file_size_bytes=int(
-                    self.properties.get("optimize-data.target-file-size-bytes", 128 * 1024 * 1024)
-                ),
-                partial_progress=self.properties.get(
-                    "optimize-data.options.partial-progress.enabled", "true"
-                )
-                == "true",
-            )
-            self._set_state(JobState.SUCCEEDED)
-        except BaseException as e:  # noqa: BLE001 — reported via poll, like the AWS state machines
-            self.error = e
-            self._set_state(JobState.FAILED)
-
-    def cancel(self) -> str:
-        """The StopQueryExecution / CancelSteps / CancelJobRun analog:
-        accepted in any non-terminal state; the poll loop then surfaces
-        CANCELLED and raises, mirroring Athena's CANCELLED branch
-        (AthenaOptimizeDataExecutor.java:138-140)."""
-        with self._state_lock:
-            if self.state not in JobState.TERMINAL:
-                self.state = JobState.CANCELLED
-            return self.state
-
-    def execute(self) -> None:
-        """A19: fire-and-forget submit; A17/A18: persist the rendered
-        job script first, like every EMR backend does."""
-        sql = render_optimize_sql(os.path.basename(self.table_dir), self.properties)
-        self.script_path = write_job_script(
-            os.path.join(self.table_dir, "_jobs"), render_python_job(sql), "py"
+    @classmethod
+    def parse(cls, properties: dict[str, str]) -> "RewriteSpec":
+        options = {
+            k[len(config.OPTIONS_PREFIX) :]: v
+            for k, v in properties.items()
+            if k.startswith(config.OPTIONS_PREFIX)
+        } or {
+            "max-file-group-size-bytes": str(config.MAX_FILE_GROUP_SIZE_BYTES),
+            "partial-progress.enabled": "true",
+        }
+        return cls(
+            options,
+            properties.get("optimize-data.strategy", config.STRATEGY_BINPACK),
+            properties.get("optimize-data.sort-order"),
         )
-        self._thread = threading.Thread(target=self._run, daemon=True)
-        self._thread.start()
-        if self.properties.get("optimize-data.synchronous-enabled", "false") == "true":
-            self.wait_for_completion()
 
-    def wait_for_completion(self, timeout_s: float = 600.0) -> str:
-        """A20: synchronous poll loop every sleep-wait-ms until a
-        terminal state; FAILED raises, like Athena's
-        `waitForQueryToComplete` (AthenaOptimizeDataExecutor.java:133-140)."""
-        sleep_ms = int(self.properties.get("optimize-data.sleep-wait-ms", config.SLEEP_WAIT_MS))
-        deadline = time.time() + timeout_s
-        while self.state in (JobState.SUBMITTED, JobState.RUNNING):
-            if time.time() > deadline:
-                raise TimeoutError("compaction job did not finish in time")
-            time.sleep(min(sleep_ms / 1000.0, 0.05))
-        if self.state == JobState.FAILED:
-            raise RuntimeError(f"compaction job failed: {self.error}") from self.error
-        if self.state == JobState.CANCELLED:
-            # Athena raises on CANCELLED exactly like FAILED
-            # (AthenaOptimizeDataExecutor.java:138-140)
-            raise RuntimeError("compaction job was cancelled")
-        return self.state
+    def call_sql(self, table_name: str, catalog: str) -> str:
+        body = ",".join(f"'{k}','{v}'" for k, v in sorted(self.options.items()))
+        parts = [
+            f"table => '{table_name}'",
+            f"options => map({body})",
+            f"strategy => '{self.strategy}'",
+        ]
+        if self.sort_order:
+            parts.append(f"sort_order => '{self.sort_order}'")
+        return f"CALL {catalog}.system.rewrite_data_files({', '.join(parts)})"
+
+    def compaction_args(self) -> dict:
+        """`maintenance.compact_table`'s keyword arguments."""
+        opts = self.options
+        return dict(
+            strategy=self.strategy,
+            sort_order=self.sort_order.split(",") if self.sort_order else None,
+            max_group_size_bytes=int(
+                opts.get("max-file-group-size-bytes", config.MAX_FILE_GROUP_SIZE_BYTES)
+            ),
+            target_file_size_bytes=int(
+                opts.get("target-file-size-bytes", maintenance.TARGET_FILE_SIZE_BYTES)
+            ),
+            partial_progress=opts.get("partial-progress.enabled", "true") == "true",
+        )
 
 
 def render_optimize_sql(
@@ -269,25 +151,93 @@ def render_optimize_sql(
     improvement the query-surface render (queries/control_plane.py
     sql_command_render) also makes.  Defaults mirror
     AwsManageProperties.java:48-56."""
-    opts = {
-        k[len(config.OPTIONS_PREFIX) :]: v
-        for k, v in properties.items()
-        if k.startswith(config.OPTIONS_PREFIX)
-    } or {
-        "max-file-group-size-bytes": str(config.MAX_FILE_GROUP_SIZE_BYTES),
-        "partial-progress.enabled": "true",
-    }
-    body = ",".join(f"'{k}','{v}'" for k, v in sorted(opts.items()))
-    parts = [f"table => '{table_name}'", f"options => map({body})"]
-    strategy = properties.get("optimize-data.strategy", config.STRATEGY_BINPACK)
-    parts.append(f"strategy => '{strategy}'")
-    sort_order = properties.get("optimize-data.sort-order")
-    if sort_order:
-        parts.append(f"sort_order => '{sort_order}'")
-    return f"CALL {catalog}.system.rewrite_data_files({', '.join(parts)})"
+    return RewriteSpec.parse(properties).call_sql(table_name, catalog)
 
 
-@register_executor("iceberg-call")
+class LocalCompactionExecutor:
+    """The in-process stand-in for the four AWS executors: submits the
+    rewrite on a thread and exposes the same terminal-state machine
+    (A19/A20).  The rewrite it runs is the CALL it renders: both read
+    one `RewriteSpec`."""
+
+    def __init__(self) -> None:
+        self.table_dir: str | None = None
+        self.properties: dict[str, str] = {}
+        self.spec: RewriteSpec | None = None
+        self.state = JobState.SUBMITTED
+        self.error: BaseException | None = None
+        self.result: maintenance.CompactionResult | None = None
+        self.script_path: str | None = None
+        self._thread: threading.Thread | None = None
+        self._spark: SparkSession | None = None
+        self._state_lock = threading.Lock()
+        self._done = threading.Event()
+
+    def initialize(self, table_dir: str, properties: dict[str, str]) -> None:
+        # config validation mirrors BaseEmrOptimizeDataExecutor.java:55-58
+        if not table_dir:
+            raise ValueError("table_dir is required")
+        self.table_dir = table_dir
+        self.properties = dict(properties)
+        self.spec = RewriteSpec.parse(self.properties)
+        self._spark = SparkSession.getActiveSession()
+
+    def _transition(self, new: str) -> str:
+        """Move to `new` unless the job is already terminal; reaching a
+        terminal state wakes every waiter.  So a cancel sticks: a late
+        worker-thread completion cannot resurrect the job (the AWS
+        services make the same guarantee — a StopQueryExecution'd query
+        stays CANCELLED even if the engine finished the work)."""
+        with self._state_lock:
+            if self.state not in JobState.TERMINAL:
+                self.state = new
+                if new in JobState.TERMINAL:
+                    self._done.set()
+            return self.state
+
+    def _run(self) -> None:
+        self._transition(JobState.RUNNING)
+        try:
+            self.result = maintenance.compact_table(
+                self._spark, self.table_dir, **self.spec.compaction_args()
+            )
+            self._transition(JobState.SUCCEEDED)
+        except BaseException as e:  # noqa: BLE001 — reported by the wait, like the AWS state machines
+            self.error = e
+            self._transition(JobState.FAILED)
+
+    def cancel(self) -> str:
+        """The StopQueryExecution / CancelSteps / CancelJobRun analog:
+        accepted in any non-terminal state; the wait then raises,
+        mirroring Athena's CANCELLED branch
+        (AthenaOptimizeDataExecutor.java:138-140)."""
+        return self._transition(JobState.CANCELLED)
+
+    def execute(self) -> None:
+        """A19: fire-and-forget submit; A17/A18: persist the rendered
+        job script first, like every EMR backend does."""
+        sql = self.spec.call_sql(os.path.basename(self.table_dir), config.CATALOG_NAME)
+        self.script_path = write_job_script(
+            os.path.join(self.table_dir, "_jobs"), render_python_job(sql), "py"
+        )
+        self._thread = threading.Thread(target=self._run, daemon=True)
+        self._thread.start()
+        if self.properties.get("optimize-data.synchronous-enabled", "false") == "true":
+            self.wait_for_completion()
+
+    def wait_for_completion(self, timeout_s: float = 600.0) -> str:
+        """A20: block until a terminal state; FAILED and CANCELLED
+        raise, like Athena's `waitForQueryToComplete`
+        (AthenaOptimizeDataExecutor.java:133-140)."""
+        if not self._done.wait(timeout_s):
+            raise TimeoutError("compaction job did not finish in time")
+        if self.state == JobState.FAILED:
+            raise RuntimeError(f"compaction job failed: {self.error}") from self.error
+        if self.state == JobState.CANCELLED:
+            raise RuntimeError("compaction job was cancelled")
+        return self.state
+
+
 class IcebergCallExecutor:
     """The real-Iceberg table-format seam, made concrete: renders the
     same CALL every reference backend ships and submits it to the
@@ -336,7 +286,7 @@ class IcebergCallExecutor:
 
     def execute(self) -> None:
         """Renders + submits the CALL synchronously (the procedure is
-        itself a blocking Spark job — the async/poll split the AWS
+        itself a blocking Spark job — the async/wait split the AWS
         backends need does not apply in-process)."""
         self.sql_text = render_optimize_sql(
             self.table_identifier, self.properties, catalog=self._catalog
@@ -345,10 +295,16 @@ class IcebergCallExecutor:
         try:
             self._spark.sql(self.sql_text).collect()  # procedure result is 1 summary row
             self.state = JobState.SUCCEEDED
-        except BaseException as e:  # noqa: BLE001 — surfaced like the poll path
+        except BaseException as e:  # noqa: BLE001 — surfaced like the wait path
             self.error = e
             self.state = JobState.FAILED
             raise
+
+
+_EXECUTORS: dict[str, type] = {
+    "local-compaction": LocalCompactionExecutor,
+    "iceberg-call": IcebergCallExecutor,
+}
 
 
 class CommitReporter:

@@ -13,13 +13,15 @@ tables with an explicit `_snapshots` lineage log, mirroring:
 - the compaction commit is a REPLACE snapshot — the watermark the
   trigger evaluator stops at (AwsTableManagementMetricsEvaluator.java:114)
 
-Scale notes: group planning is a window cumsum over the *file
-inventory* (metadata, rows ~ file count — tiny even at 100 TB of
-data); the rewrite itself is one `spark.read(group).repartition(n)`
-job per group, where n = ceil(group_bytes / target_file_bytes), so no
-single task ever sees more than one output file's worth of data.
-Nothing is collected to the driver except the planned inventory, one
-row per data file: the driver listed those files to build it.
+Scale notes: `compact_table` plans its groups on the driver from the
+one listing of `data/` it makes anyway (rows ~ file count — tiny even
+at 100 TB of data), as Iceberg's rewrite plans from the file list it
+holds; `plan_binpack_groups` is the same formula as a Spark window for
+the query path.  The rewrite itself is one
+`spark.read(group).repartition(n)` job per group, where n =
+ceil(group_bytes / target_file_bytes), so no single task ever sees
+more than one output file's worth of data.  Nothing is collected to
+the driver.
 """
 
 from __future__ import annotations
@@ -41,6 +43,8 @@ _BINPACK_BUCKET_BYTES = 2_000_000
 #: shuffle + broadcast join (measured ~0.9 s overhead at sf0.1's 600k
 #: rows vs a 2.3x win at sf10's 60M).  Callers gate `two_level` on it.
 BINPACK_FLAT_MAX_FILES = 2_000_000
+#: Output file size when a job sets no `target-file-size-bytes` option.
+TARGET_FILE_SIZE_BYTES = 128 * 1024 * 1024
 
 
 def plan_binpack_groups(
@@ -51,7 +55,8 @@ def plan_binpack_groups(
     Deterministic first-fit-over-sorted-order via running cumsum:
     files ordered (size desc, path), group = floor(exclusive_cumsum /
     cap).  Expressible identically in SQL (the oracle uses the same
-    formula) — no driver loop.
+    formula) and on the driver (`binpack_listing`, which
+    `compact_table` runs over its own listing).
 
     The cumsum is TWO-LEVEL (r11: the sf10 audit caught the flat
     per-table window at exponent 1.26 / 54 s — one partition per
@@ -69,8 +74,8 @@ def plan_binpack_groups(
     or driver action, the bucket boundaries are constants.
 
     `two_level=False` keeps the flat window for small inventories (at
-    most BINPACK_FLAT_MAX_FILES = 2M rows: `gates.corpus_exceeds` on a
-    footer, or an exact listing length) — the two-level's extra
+    most BINPACK_FLAT_MAX_FILES = 2M rows by `gates.corpus_exceeds` on
+    a footer) — the two-level's extra
     shuffle costs more than it saves there.  An unknown size takes the
     two-level path (its failure mode is a small constant, the flat
     window's is a single-task spill).
@@ -173,13 +178,28 @@ def write_table(spark: SparkSession, df: DataFrame, table_dir: str, n_files: int
     append_snapshot(spark, table_dir, "append")
 
 
-def file_inventory(spark: SparkSession, table_dir: str) -> tuple[DataFrame, int]:
-    """The `<table>.files` metadata analog, from the real filesystem,
-    and its exact file count (the listing's length — no Spark job)."""
-    paths = _list_data_files(table_dir)
-    rows = [(os.path.basename(table_dir), p, os.path.getsize(p)) for p in paths]
-    inv = spark.createDataFrame(rows, "table_name string, file_path string, file_size_bytes long")
-    return inv, len(rows)
+def _sized_data_files(table_dir: str) -> list[tuple[str, int]]:
+    return [(p, os.path.getsize(p)) for p in _list_data_files(table_dir)]
+
+
+def file_inventory(spark: SparkSession, table_dir: str) -> DataFrame:
+    """The `<table>.files` metadata analog, from the real filesystem
+    (building it runs no Spark job)."""
+    rows = [(os.path.basename(table_dir), p, n) for p, n in _sized_data_files(table_dir)]
+    return spark.createDataFrame(rows, "table_name string, file_path string, file_size_bytes long")
+
+
+def binpack_listing(files: list[tuple[str, int]], cap_bytes: int) -> list[tuple[str, int, int]]:
+    """`plan_binpack_groups`' formula over one table's (path, size)
+    listing, on the driver: files ordered (size desc, path), group =
+    floor(exclusive running sum / cap).  Returns (path, size, group_id)
+    in that order.  Integer division, where the Spark form divides in
+    doubles; the two agree below 2^52 bytes."""
+    out, running = [], 0
+    for path, size in sorted(files, key=lambda f: (-f[1], f[0])):
+        out.append((path, size, running // cap_bytes))
+        running += size
+    return out
 
 
 def compact_table(
@@ -189,7 +209,7 @@ def compact_table(
     strategy: str = config.STRATEGY_BINPACK,
     sort_order: list[str] | None = None,
     max_group_size_bytes: int = config.MAX_FILE_GROUP_SIZE_BYTES,
-    target_file_size_bytes: int = 128 * 1024 * 1024,
+    target_file_size_bytes: int = TARGET_FILE_SIZE_BYTES,
     partial_progress: bool = True,
 ) -> CompactionResult:
     """The native `rewrite_data_files` (B1/B2/B3/B4).
@@ -199,21 +219,17 @@ def compact_table(
     files, and commits one REPLACE snapshot per group (partial
     progress) or one for the whole run.
     """
-    inv, n_files = file_inventory(spark, table_dir)
-    planned = plan_binpack_groups(
-        inv, max_group_size_bytes, two_level=n_files > BINPACK_FLAT_MAX_FILES
-    ).collect()  # bounded: one row per data file (metadata-size)
-    groups: dict[int, list] = {}
-    for r in planned:
-        groups.setdefault(r["group_id"], []).append(r)
-    files_before = len(planned)
-    rows_before = io.parquet_rows(_list_data_files(table_dir))
+    files = _sized_data_files(table_dir)
+    groups: dict[int, list[tuple[str, int]]] = {}
+    for path, size, gid in binpack_listing(files, max_group_size_bytes):
+        groups.setdefault(gid, []).append((path, size))
+    rows_before = io.parquet_rows([p for p, _ in files])
 
     replace_ids: list[int] = []
     data_dir = os.path.join(table_dir, "data")
     for gid in sorted(groups):
-        paths = sorted(r["file_path"] for r in groups[gid])
-        n_bytes = sum(r["file_size_bytes"] for r in groups[gid])
+        paths = sorted(p for p, _ in groups[gid])
+        n_bytes = sum(n for _, n in groups[gid])
         n_out = max(1, -(-n_bytes // target_file_size_bytes))  # ceil
         df = spark.read.parquet(*paths)
         if strategy == config.STRATEGY_SORT:
@@ -251,7 +267,7 @@ def compact_table(
     return CompactionResult(
         table_dir=table_dir,
         n_groups=len(groups),
-        files_before=files_before,
+        files_before=len(files),
         files_after=files_after,
         rows_before=rows_before,
         rows_after=rows_after,

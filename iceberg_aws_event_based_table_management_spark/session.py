@@ -33,15 +33,10 @@ def get_spark(app_name: str = "ebtm-spark", shuffle_partitions: int | None = Non
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # events.parquet carries TIMESTAMP(NANOS) which Spark has no
-        # native type for; read as long ns and convert in the IO layer
-        # (io.table) — DuckDB truncates ns->us the same way.
+        # The fixtures store TIMESTAMP(MICROS); an events file written
+        # with TIMESTAMP(NANOS) is rejected without this conf (Spark
+        # 4.1.2 included).  With it the column reads as long ns, which
+        # io.table truncates to micros as DuckDB does.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     return builder.getOrCreate()
-
-
-def tune_for_local_tests(spark: SparkSession) -> SparkSession:
-    """Reduce overhead when an existing session is reused by pytest."""
-    spark.sparkContext.setLogLevel("WARN")
-    return spark

@@ -507,7 +507,8 @@ def run_stateful_trigger(
         ).option("checkpointLocation", os.path.join(state_dir, "ckpt")),
     )
     if os.path.isdir(state_path):
-        state = spark.read.parquet(state_path)
+        # the batches wrote this table under snaps.schema: no inference job
+        state = spark.read.schema(snaps.schema).parquet(state_path)
     else:
         state = spark.createDataFrame([], snaps.schema)
     return trigger.decide_optimize(state, now=now)

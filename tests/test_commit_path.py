@@ -121,8 +121,9 @@ def test_commit_path_spark_job_counts(spark, committed_table):
     """Spark jobs per step: a quiet commit is its data write (shuffle +
     write, 2 jobs) and nothing else; the trigger decision runs no job;
     the Spark lineage read builds without a job; a one-group compaction
-    is planning, its rewrite and nothing for bookkeeping.  A Spark
-    lineage write, a Spark decision or a schema-inferring lineage read
+    is its rewrite (schema read, shuffle, write: 3 jobs), planned on the
+    driver with nothing for bookkeeping.  A Spark lineage write, a Spark
+    decision, a schema-inferring lineage read or a Spark group plan
     would raise these counts."""
     table_dir, chunk = committed_table
     reporter = jobs.CommitReporter(spark)
@@ -134,7 +135,7 @@ def test_commit_path_spark_job_counts(spark, committed_table):
     assert n_read == 0
     res, n_compact = _jobs(spark, lambda: maintenance.compact_table(spark, table_dir))
     assert res.n_groups == 1 and res.rows_before == res.rows_after == 600
-    assert n_compact == 5
+    assert n_compact == 3
 
 
 def test_fresh_commit_age_is_not_negative(spark, tmp_path):

@@ -1,5 +1,5 @@
 """IO-layer contract: the invariants that broke under the driver's
-session in rounds 1-3 (TIMESTAMP(NANOS) surfacing differently across
+session in rounds 1-3 (event timestamps surfacing differently across
 Spark versions/sessions), locked as tests."""
 
 from __future__ import annotations
@@ -13,11 +13,11 @@ from iceberg_aws_event_based_table_management_spark import io
 
 def test_events_ts_is_always_ntz(spark, sf_dir):
     """io.table normalizes events.ts to TIMESTAMP_NTZ regardless of
-    how the session surfaces the parquet TIMESTAMP(NANOS) column —
-    the naive type matches the DuckDB oracle's timestamps."""
+    how the session surfaces the parquet timestamp column — the naive
+    type matches the DuckDB oracle's timestamps."""
     df = io.table(spark, sf_dir, "events")
     assert dict(df.dtypes)["ts"] == "timestamp_ntz"
-    # values are micros-truncated nanos as naive wall clock
+    # values are naive wall clock
     first = df.orderBy("event_id").select("ts").first().ts
     assert isinstance(first, datetime.datetime)
     assert first.tzinfo is None
@@ -53,6 +53,34 @@ def test_events_ltz_surface_normalized_to_ntz(spark, sf_dir, tmp_path):
     orig = ev.orderBy("event_id").select("ts").first().ts
     back = df.orderBy("event_id").select("ts").first().ts
     assert back == orig
+
+
+def test_events_nanos_file_reads_as_the_fixture_values(spark, sf_dir, tmp_path):
+    """The fixtures store events.ts as TIMESTAMP(MICROS); a copy written
+    as TIMESTAMP(NANOS), 999 ns past each fixture instant, must read
+    through io.table as the fixture's own NTZ values (truncated to
+    micros, as DuckDB does)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    ns = pc.add(t["ts"].cast(pa.timestamp("ns")).cast(pa.int64()), 999).cast(pa.timestamp("ns"))
+    d = tmp_path / "nanos"
+    d.mkdir()
+    pq.write_table(
+        t.set_column(t.schema.get_field_index("ts"), "ts", ns),
+        d / "events.parquet",
+        version="2.6",
+        coerce_timestamps=None,
+    )
+    schema = pq.read_metadata(d / "events.parquet").schema
+    assert "nanoseconds" in str(schema.column(schema.names.index("ts")).logical_type)
+
+    got = io.table(spark, str(d), "events")
+    assert dict(got.dtypes)["ts"] == "timestamp_ntz"
+    want = io.table(spark, sf_dir, "events").orderBy("event_id").collect()
+    assert got.orderBy("event_id").collect() == want
 
 
 def test_snapshots_projection_matches_cte_columns(spark, sf_dir):

@@ -4,6 +4,9 @@ event->decision->compaction path (SS3.1) against real parquet dirs."""
 from __future__ import annotations
 
 import os
+import threading
+import time
+import types
 
 import pytest
 from pyspark.sql import functions as F
@@ -48,39 +51,25 @@ def test_binpack_reduces_files_preserves_data(spark, small_table):
     assert not orphans, "each dropped input's .crc sidecar goes with it"
 
 
-def test_compaction_plans_flat_window_for_small_table(spark, small_table, monkeypatch):
-    """compact_table gates on the inventory's exact file count, so a
-    40-file table takes the flat cumsum window (no _bkt bucket column,
-    no offsets shuffle or broadcast join) rather than the two-level
-    plan kept for unknown or >2M-file inventories."""
-    real = maintenance.plan_binpack_groups
-    planned = []
+def test_compaction_plans_on_the_driver(spark, small_table, monkeypatch):
+    """compact_table plans its groups from its own listing of data/:
+    no Spark inventory, no window plan, and data/ is listed once
+    before the rewrite (and once after, for the result)."""
 
-    def spy(*a, **k):
-        planned.append(real(*a, **k))
-        return planned[-1]
+    def no_spark_plan(*a, **k):
+        raise AssertionError("compact_table planned through Spark")
 
-    monkeypatch.setattr(maintenance, "plan_binpack_groups", spy)
-    maintenance.compact_table(spark, small_table, max_group_size_bytes=10_000_000)
-    assert len(planned) == 1
-    assert "_bkt" not in planned[0]._jdf.queryExecution().analyzed().toString()
+    monkeypatch.setattr(maintenance, "file_inventory", no_spark_plan)
+    monkeypatch.setattr(maintenance, "plan_binpack_groups", no_spark_plan)
+    real, listed = maintenance._list_data_files, []
 
+    def counted(table_dir):
+        listed.append(table_dir)
+        return real(table_dir)
 
-def test_compaction_plans_two_level_window_past_flat_max(spark, small_table, monkeypatch):
-    """A listing longer than BINPACK_FLAT_MAX_FILES takes the two-level
-    window (the _bkt bucket column) and still keeps every row."""
-    real = maintenance.plan_binpack_groups
-    planned = []
-
-    def spy(*a, **k):
-        planned.append(real(*a, **k))
-        return planned[-1]
-
-    monkeypatch.setattr(maintenance, "plan_binpack_groups", spy)
-    monkeypatch.setattr(maintenance, "BINPACK_FLAT_MAX_FILES", 39)
+    monkeypatch.setattr(maintenance, "_list_data_files", counted)
     res = maintenance.compact_table(spark, small_table, max_group_size_bytes=10_000_000)
-    assert len(planned) == 1
-    assert "_bkt" in planned[0]._jdf.queryExecution().analyzed().toString()
+    assert listed == [small_table, small_table]
     assert res.files_before == 40 and res.rows_after == res.rows_before
 
 
@@ -99,10 +88,10 @@ def test_partial_progress_one_replace_per_group(spark, small_table):
 
 
 def test_compaction_groups_match_plan(spark, small_table):
-    """compact_table groups the planned rows on the driver: one rewrite
-    per distinct group_id of plan_binpack_groups, every file in one."""
+    """compact_table's driver grouping matches the Spark plan: one
+    rewrite per distinct group_id of plan_binpack_groups."""
     cap = 200_000
-    inv, _ = maintenance.file_inventory(spark, small_table)
+    inv = maintenance.file_inventory(spark, small_table)
     plan = maintenance.plan_binpack_groups(inv, cap, two_level=False).collect()
     res = maintenance.compact_table(
         spark, small_table, max_group_size_bytes=cap, target_file_size_bytes=1_000_000
@@ -248,18 +237,68 @@ def test_cancel_after_success_is_noop(spark, small_table):
     assert ex.cancel() == jobs.JobState.SUCCEEDED  # terminal states stick
 
 
-def test_backend_state_vocabularies_normalize():
-    """The four reference pollers' vocabularies map onto the one
-    canonical machine; unknown states raise."""
-    assert jobs.normalize_backend_state("athena", "QUEUED") == jobs.JobState.SUBMITTED
-    assert jobs.normalize_backend_state("emr-ec2", "PENDING") == jobs.JobState.SUBMITTED
-    assert jobs.normalize_backend_state("emr-eks", "CANCEL_PENDING") == jobs.JobState.RUNNING
-    assert jobs.normalize_backend_state("emr-serverless", "SCHEDULED") == jobs.JobState.SUBMITTED
-    assert jobs.normalize_backend_state("emr-serverless", "SUCCESS") == jobs.JobState.SUCCEEDED
-    for backend in jobs.BACKEND_STATES:
-        assert jobs.normalize_backend_state(backend, "CANCELLED") == jobs.JobState.CANCELLED
-    with pytest.raises(ValueError, match="unknown state"):
-        jobs.normalize_backend_state("athena", "SCHEDULED")
+def test_wait_wakes_on_the_terminal_event(tmp_path, monkeypatch):
+    """wait_for_completion sleeps in no poll loop: a job that finishes,
+    fails or is cancelled while a caller waits wakes it through the
+    event every terminal transition sets.  jobs sees a `time` whose
+    sleep raises; the global module stays intact for py4j's threads."""
+    release = threading.Event()
+
+    def gated_compaction(spark_, table_dir, **kwargs):
+        assert release.wait(30)
+        if kwargs["strategy"] == "fail":
+            raise OSError("rewrite failed")
+        return "done"
+
+    def no_sleep(_seconds):
+        raise AssertionError("wait_for_completion polled")
+
+    monkeypatch.setattr(maintenance, "compact_table", gated_compaction)
+
+    def submit(props):
+        release.clear()
+        ex = jobs.load_executor("local-compaction")
+        ex.initialize(str(tmp_path / "t_wait"), props)
+        ex.execute()
+        return ex
+
+    monkeypatch.setattr(
+        jobs, "time", types.SimpleNamespace(time=time.time, time_ns=time.time_ns, sleep=no_sleep)
+    )
+    ex = submit({})
+    threading.Timer(0.2, release.set).start()
+    assert ex.wait_for_completion(timeout_s=30) == jobs.JobState.SUCCEEDED
+    assert ex.result == "done"
+
+    ex = submit({"optimize-data.strategy": "fail"})
+    threading.Timer(0.2, release.set).start()
+    with pytest.raises(RuntimeError, match="rewrite failed"):
+        ex.wait_for_completion(timeout_s=30)
+
+    ex = submit({})
+    threading.Timer(0.2, ex.cancel).start()
+    with pytest.raises(RuntimeError, match="cancelled"):
+        ex.wait_for_completion(timeout_s=30)
+    release.set()
+    ex._thread.join(timeout=30)
+    assert not ex._thread.is_alive()
+    assert ex.state == jobs.JobState.CANCELLED
+
+
+def test_target_file_size_option_reaches_the_rewrite(spark, small_table):
+    """`optimize-data.options.target-file-size-bytes` is in the CALL's
+    options map, and the local rewrite runs that CALL: setting it
+    changes both the rendered command and the files written."""
+    key = "optimize-data.options.target-file-size-bytes"
+    assert "'target-file-size-bytes'" not in jobs.render_optimize_sql("t", {})
+    assert "'target-file-size-bytes','50000'" in jobs.render_optimize_sql("t", {key: "50000"})
+    total = sum(os.path.getsize(p) for p in maintenance._list_data_files(small_table))
+    ex = jobs.load_executor("local-compaction")
+    ex.initialize(small_table, {key: "50000", "optimize-data.synchronous-enabled": "true"})
+    ex.execute()
+    assert "'target-file-size-bytes','50000'" in open(ex.script_path).read()
+    assert ex.result.files_after == -(-total // 50_000) > 1
+    assert ex.result.rows_after == ex.result.rows_before
 
 
 def test_commit_reporter_closes_the_loop(spark, sf_dir, tmp_path):

@@ -5,7 +5,8 @@ of the reference's Java semantics on randomized inputs.
 - trigger evaluator, both the Spark form and the driver cut, vs a
   literal re-walk of shouldOptimizeDataFiles
   (AwsTableManagementMetricsEvaluator.java:108-140)
-- binpack planner invariants (AwsManageProperties.java:48-50 cap)
+- binpack planner invariants (AwsManageProperties.java:48-50 cap), and
+  compact_table's driver grouping vs the Spark plan
 - Morton/z-order key vs a bit-twiddling reference
 
 Each hypothesis example packs many tables into ONE DataFrame so a
@@ -13,6 +14,9 @@ whole example costs one Spark job, keeping the suite fast.
 """
 
 from __future__ import annotations
+
+import os
+import tempfile
 
 import pyarrow as pa
 from hypothesis import HealthCheck, example, given, settings
@@ -134,6 +138,42 @@ def test_binpack_groups_respect_cap(spark, invs, cap):
             expected[(tname, path)] = running // cap
             running += size
     assert planned == expected
+
+
+listing = st.lists(
+    st.tuples(
+        st.text(alphabet="aAbB0_-", min_size=1, max_size=6),
+        st.one_of(st.sampled_from([1, 64, 4096]), st.integers(min_value=1, max_value=20_000)),
+    ),
+    max_size=25,
+    unique_by=lambda f: f[0],
+)
+
+
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(listing, st.one_of(st.just(1), st.integers(min_value=1, max_value=30_000)))
+@example([], 4096)  # an empty table
+@example([("a", 64), ("B", 64), ("b", 64), ("0", 20_000)], 1)  # ties, cap 1, oversized
+def test_driver_grouping_matches_spark_plan(spark, files, cap):
+    """compact_table's driver grouping (`binpack_listing` over its
+    listing) equals the flat Spark window row for row, over a real
+    directory of files of the given sizes."""
+    with tempfile.TemporaryDirectory() as table_dir:
+        data = os.path.join(table_dir, "data")
+        os.makedirs(data)
+        for name, size in files:
+            with open(os.path.join(data, f"{name}.parquet"), "wb") as fh:
+                fh.truncate(size)
+        on_driver = maintenance.binpack_listing(maintenance._sized_data_files(table_dir), cap)
+        planned = maintenance.plan_binpack_groups(
+            maintenance.file_inventory(spark, table_dir), cap, two_level=False
+        ).collect()
+    in_spark = sorted(
+        ((r["file_path"], r["file_size_bytes"], r["group_id"]) for r in planned),
+        key=lambda r: (-r[1], r[0]),
+    )
+    assert on_driver == in_spark
+    assert len(on_driver) == len(files)
 
 
 @settings(max_examples=30, deadline=None)
