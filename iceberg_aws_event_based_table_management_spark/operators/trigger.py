@@ -24,12 +24,17 @@ Two forms of the cut, one per caller:
   commit of that one table.  Like the reference's walk inside the
   commit callback, it runs no engine job; a Spark plan over those
   rows cost two jobs and more than half of a quiet commit's time.
+  The foreachBatch replay decides the same way over its accumulated
+  log, and the managed-state stream runs the same cut,
+  ``pending_cut``, once per state bucket per micro-batch
+  (streaming/replay.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import config
 from ..io import epoch_ms
@@ -130,18 +135,26 @@ def epoch_ms_of(now: str) -> int:
     return int(pd.Timestamp(now, tz="UTC").value // 1_000_000)
 
 
-def pending_cut(lineage, replace_op: str = config.REPLACE_OPERATION) -> dict[str, tuple[int, int]]:
-    """Per table of ``lineage`` (a pyarrow Table as ``io.read_lineage``
-    returns it, ``ts`` in epoch micros): the pending count and the
-    oldest pending epoch-ms (-1 when nothing is pending).  Pending rows
-    are those strictly after the table's newest REPLACE in
-    (ts, snapshot_id) order — the whole lineage when it has none —
-    which is the cut ``_flag_pending`` makes with a window.
+def pending_cut(lineage, replace_op: str = config.REPLACE_OPERATION):
+    """The REPLACE cut of ``lineage`` (a pyarrow Table as
+    ``io.read_lineage`` returns it, ``ts`` in epoch micros), per table:
+    the pending rows are those strictly after the table's newest
+    REPLACE in (ts, snapshot_id) order — the whole lineage when it has
+    none — which is the cut ``_flag_pending`` makes with a window.
+
+    Returns ``(names, n, oldest, tail)``: the sorted table names, and
+    aligned with them the pending count and the oldest pending epoch-ms
+    (-1 when nothing is pending); ``tail`` is each table's newest
+    REPLACE row and its pending rows.  Any rows cut away can never be
+    pending again, so the cut of ``tail`` plus new rows equals the cut
+    of the whole lineage plus them: the state form keeps ``tail`` as
+    its state (streaming/replay.stateful_trigger_stream).
 
     One sort, then array arithmetic: each table is a contiguous run of
     the sorted rows, and its pending rows are the tail of that run
     after its last REPLACE."""
     import numpy as np
+    import pyarrow as pa
     import pyarrow.compute as pc
 
     t = lineage.sort_by([(c, "ascending") for c in ("table_name", "ts", "snapshot_id")])
@@ -156,7 +169,8 @@ def pending_cut(lineage, replace_op: str = config.REPLACE_OPERATION) -> dict[str
     n = end - first_pending
     ts_ms = t["ts"].to_numpy() // 1000  # floor, as unix_millis truncates micros
     oldest = np.where(n > 0, ts_ms[np.minimum(first_pending, len(t) - 1)], -1)
-    return {name: (int(c), int(o)) for name, c, o in zip(names.dictionary.to_pylist(), n, oldest)}
+    tail = t.filter(pa.array(rows >= np.maximum(start, first_pending - 1)[table]))
+    return names.dictionary.to_pylist(), n, oldest, tail
 
 
 def decide_on_driver(
@@ -171,7 +185,35 @@ def decide_on_driver(
     (n_commits_since_replace, max_pending_age_ms, time_trigger,
     commit_trigger, should_optimize), from ``pending_cut``."""
     out = {}
-    for name, (n, oldest) in pending_cut(lineage, replace_op).items():
-        age = now_ms - oldest if n else -1
+    names, pending, oldest, _ = pending_cut(lineage, replace_op)
+    for name, n, o in zip(names, pending.tolist(), oldest.tolist()):
+        age = now_ms - o if n else -1
         out[name] = (n, age, *fires(n, age, commit_threshold, time_threshold_ms))
     return out
+
+
+#: The columns of ``decide_optimize``'s rows.
+DECISION_SCHEMA = T.StructType(
+    [
+        T.StructField("table_name", T.StringType()),
+        T.StructField("n_commits_since_replace", T.LongType()),
+        T.StructField("max_pending_age_ms", T.LongType()),
+        T.StructField("time_trigger", T.BooleanType()),
+        T.StructField("commit_trigger", T.BooleanType()),
+        T.StructField("should_optimize", T.BooleanType()),
+    ]
+)
+
+
+def decision_frame(spark: SparkSession, decided: dict) -> DataFrame:
+    """Rows shaped as ``decide_on_driver`` returns them (table_name ->
+    the other five columns) as a DataFrame of ``decide_optimize``'s
+    columns.  Built from Arrow, it is a local relation: Spark builds
+    and collects it without a job or a Python worker task, where a
+    list of rows goes through ``parallelize`` and a worker."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    rows = [dict(zip(DECISION_SCHEMA.names, (name, *row))) for name, row in decided.items()]
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(DECISION_SCHEMA))
+    return spark.createDataFrame(table, DECISION_SCHEMA)

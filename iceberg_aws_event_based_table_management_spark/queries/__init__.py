@@ -31,6 +31,7 @@ REGRADE: dict[str, int] = {
     "dedup_near_verified": 16,
     "pipeline_training_corpus": 16,
     "quantile_histogram_sketch": 16,
+    "stream_should_optimize": 16,
 }
 
 

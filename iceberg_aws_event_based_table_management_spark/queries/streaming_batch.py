@@ -14,10 +14,11 @@ import os
 import tempfile
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import config, io
+from ..operators import trigger
 from ..registry import register
 from ..streaming import replay
 from .control_plane import _DECISION_CTE
@@ -309,14 +310,16 @@ def stream_latedrop_outoforder(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_stateful_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C44 (real streaming, managed state, SQL oracle): the trigger
-    evaluator as an applyInPandasWithState operator — per-table
-    (count, oldest-pending-ts) state in Spark's state store, decision
-    emitted in update mode per micro-batch.  The state transition is
-    arrival-order-insensitive (REPLACE watermark + pending-set filter in
-    replay.stateful_trigger_stream), so the final emission per table (max
-    n_commits_seen) equals the batch A10 decision regardless of
-    micro-batch order — the A10 decision CTE is therefore an exact
-    oracle (also asserted in tests/test_streaming.py)."""
+    evaluator as an applyInPandasWithState operator — each state
+    bucket's tables' newest REPLACE and pending commits in Spark's state
+    store, decision emitted in update mode per micro-batch.  The state
+    transition is arrival-order-insensitive (replay.stateful_trigger_stream),
+    so the final emission per table (max n_commits_seen) equals the
+    batch A10 decision regardless of micro-batch order — the A10
+    decision CTE is therefore an exact oracle (also asserted in
+    tests/test_streaming.py).  The final emissions are picked on the
+    driver from the memory sink's rows and returned as an Arrow-built
+    local frame."""
     with tempfile.TemporaryDirectory() as tmp:
         path = replay.replay_dir(spark, sf_dir, tmp)
         stream = replay.stateful_trigger_stream(
@@ -325,14 +328,10 @@ def stream_stateful_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
         sink = replay.run_to_memory(
             stream, f"stateful_trig_{uuid.uuid4().hex[:8]}", output_mode="update"
         )
-        w = Window.partitionBy("table_name").orderBy(F.desc("n_commits_seen"))
-        final = (
-            sink.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn", "n_commits_seen")
-        )
-        rows = final.collect()
-        return spark.createDataFrame(rows, final.schema)
+        final = {}
+        for r in sorted(sink.collect(), key=lambda r: r["n_commits_seen"]):
+            final[r["table_name"]] = tuple(r)[2:]  # the last emission wins
+        return trigger.decision_frame(spark, final)
 
 
 @register(
@@ -344,17 +343,15 @@ def stream_should_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C44 (real streaming, SQL oracle): the trigger evaluator over a
     lineage accumulated via foreachBatch from the replayed commit
     stream — each micro-batch appends to the snapshot state, and the
-    A10 decision runs once over it after the replay ends.  The state
-    table holds ALL events by then, so the result equals the batch
+    A10 decision runs once over it on the driver after the replay ends.
+    The state table holds ALL events by then, so the result equals the batch
     decision independent of batch order — A10's decision CTE is an
     exact oracle (also asserted in tests/test_streaming.py)."""
     with tempfile.TemporaryDirectory() as tmp:
         path = replay.replay_dir(spark, sf_dir, tmp)
-        out = replay.run_stateful_trigger(
+        return replay.run_stateful_trigger(
             spark, path, tmp, now=config.NOW_LITERAL, files_per_trigger=4
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
 
 
 @register(

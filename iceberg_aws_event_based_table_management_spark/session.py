@@ -6,7 +6,8 @@ skew-join handling), Arrow on (vectorized Python boundary), UTC
 session timezone (deterministic timestamp semantics vs the DuckDB
 oracle), and shuffle partitions sized to the local core count rather
 than the 200 default (on a real cluster this is set to ~2-3x total
-cores; AQE coalesces down from there).
+cores; AQE coalesces down from there).  Python workers start from
+``worker/ebtm_daemon.py``, which imports pyspark unzipped (see there).
 """
 
 from __future__ import annotations
@@ -14,6 +15,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: Holds only the worker daemon module, so the workers' path gains no
+#: other top-level names.
+WORKER_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "worker")
 
 
 def get_spark(app_name: str = "ebtm-spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -38,5 +43,7 @@ def get_spark(app_name: str = "ebtm-spark", shuffle_partitions: int | None = Non
         # 4.1.2 included).  With it the column reads as long ns, which
         # io.table truncates to micros as DuckDB does.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.daemon.module", "ebtm_daemon")
+        .config("spark.executorEnv.PYTHONPATH", WORKER_DIR)
     )
     return builder.getOrCreate()

@@ -205,9 +205,10 @@ def _run_available_now(spark: SparkSession, writer: DataStreamWriter) -> None:
     then pays one state-store commit and one task (for a pandas state
     function, one Python worker round) per partition, however little
     state each holds.  The bounded replays here keep a few hundred
-    keys (the trigger's state is about 150 table rows at sf0.01), so
-    the width is 1, measured over 1/2/4/8 on a 4-core box
-    (bench_runs/replay_width_sweep.json):
+    keys at most (the trigger's state is STATE_BUCKETS rows), so the
+    width is 1, measured over 1/2/4/8 on a 4-core box
+    (bench_runs/replay_width_sweep.json, taken when the trigger's
+    state was one row per table):
 
     - perfbench ``trigger_replay``: ``cpu_per_op_s`` 1.22 s at width 1,
       1.49 at 2, 2.07 at 4, 3.31 at 8; state commits 0.16 s against
@@ -216,11 +217,11 @@ def _run_available_now(spark: SparkSession, writer: DataStreamWriter) -> None:
       width 1 against 72.8 s at 8 (sf0.01), 38 s against 85-92 s
       (sf0.1); their summed wall at sf0.01 is 32.9 s against 42.4 s.
 
-    The trade is the applyInPandasWithState trigger at sf0.1: its
-    ~1,500 keys of per-key worker time run on one core, 17-18.5 s of
-    wall against 8.3-9.7 s at width 8, so width 1 only ties width 8
-    on the ten queries' summed wall there (48-49.5 s against
-    46.4-48.4 s) while widths 2 and 4 reach 36-40 s.  Production
+    The trade was the applyInPandasWithState trigger at sf0.1, whose
+    ~1,500 per-table pandas calls ran on one core: 17-18.5 s of wall
+    against 8.3-9.7 s at width 8.  With one call per state bucket it
+    runs in 3.5-4.2 s at width 1 (bench_runs/state_buckets_sweep.json),
+    so width 1 no longer costs that query anything.  Production
     unbounded streams size this to the cluster instead — the caller's
     setting is restored on exit.
     """
@@ -380,6 +381,12 @@ def stream_dedup(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
 # --- C44: the trigger evaluator as an incremental stream ------------------
 
 
+#: State keys of the managed-state trigger: tables hash into this many
+#: buckets, and each bucket is one state row and one pandas call per
+#: micro-batch that touches it (sweep in stateful_trigger_stream).
+STATE_BUCKETS = 4
+
+
 def stateful_trigger_stream(
     events: DataFrame,
     *,
@@ -389,25 +396,45 @@ def stateful_trigger_stream(
 ) -> DataFrame:
     """C44 (managed-state form): ``shouldOptimizeDataFiles``
     (AwsTableManagementMetricsEvaluator.java:108-140) as a custom
-    stateful operator via ``applyInPandasWithState`` — per-table state
-    is (pending-commit count, oldest pending ts), updated per
-    micro-batch, with the trigger decision emitted in update mode.
+    stateful operator via ``applyInPandasWithState``, with the trigger
+    decision emitted in update mode per micro-batch.
 
     Unlike the foreachBatch form (run_stateful_trigger), state lives in
-    Spark's state store (checkpointed, partitioned by table) rather
-    than an external table, and no history is reprocessed per batch:
-    the true incremental analog of the reference's per-commit callback,
-    and the shape that scales to unbounded commit streams.  Per-table
-    state is the pending-commit set plus the newest-REPLACE watermark
-    — O(commits since last optimize), i.e. ~commit-threshold entries —
-    so arrival order across micro-batches doesn't matter: a REPLACE
-    arriving after newer commits still evicts exactly the commits the
-    batch evaluator's lineage rank would cut.  The operator emits the
-    pending count and age; the time-OR-count rule is
-    ``trigger.decision_columns``, applied after it.  Batch equivalence
-    is asserted in tests/test_streaming.py.
+    Spark's state store (checkpointed) rather than an external table,
+    and no history is reprocessed per batch: the true incremental
+    analog of the reference's per-commit callback, and the shape that
+    scales to unbounded commit streams.
+
+    State is keyed by bucket, ``pmod(xxhash64(table_name),
+    STATE_BUCKETS)``, not by table: each pandas call has a fixed cost
+    (about 2 ms), and one call per table was most of a micro-batch.  A
+    bucket's state is parallel arrays: per table its name, commits
+    seen and kept-row count; per kept row its snapshot id, epoch-micro
+    ts and REPLACE flag.  The kept rows are what ``trigger.pending_cut``
+    returns as its ``tail``: each table's newest REPLACE and the
+    commits after it in (ts, id) order — O(commits since the last
+    optimize) per table.  Each batch runs that one cut over the kept
+    rows plus the bucket's new rows, so arrival order across
+    micro-batches doesn't matter: a REPLACE arriving after newer
+    commits still evicts exactly the commits the batch evaluator's
+    lineage rank would cut.  It emits one row per table the batch
+    touched: the pending count and age, and ``n_commits_seen``, which
+    only grows, so the last emission per table is the one with the
+    most commits seen.  The time-OR-count rule is
+    ``trigger.decision_columns``, applied after it.
+
+    The trade: a batch that touches a bucket rewrites that bucket's
+    whole state, O(tables per bucket), where the per-table form
+    rewrote only the touched tables.  STATE_BUCKETS comes from a
+    1/4/16/64 sweep (bench_runs/state_buckets_sweep.json): 1 and 4 tie
+    within run-to-run spread on perfbench ``trigger_replay`` and at
+    sf0.1, 64 costs the most, and 4 keeps the state on more than one
+    key.  Batch equivalence is asserted in tests/test_streaming.py.
     """
+    import numpy as np
     import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     now_ms = trigger.epoch_ms_of(now)
     replace_op = config.REPLACE_OPERATION
@@ -422,47 +449,70 @@ def stateful_trigger_stream(
     )
     state_schema = T.StructType(
         [
-            T.StructField("n_seen", T.LongType()),
-            T.StructField("replace_ts_ms", T.LongType()),  # newest REPLACE watermark
-            T.StructField("replace_id", T.LongType()),  # (-1,-1) = none yet
-            T.StructField("pending_ts_ms", T.ArrayType(T.LongType())),
-            T.StructField("pending_id", T.ArrayType(T.LongType())),
+            T.StructField("table_name", T.ArrayType(T.StringType())),  # sorted
+            T.StructField("n_seen", T.ArrayType(T.LongType())),
+            T.StructField("n_kept", T.ArrayType(T.LongType())),
+            T.StructField("snapshot_id", T.ArrayType(T.LongType())),
+            T.StructField("ts", T.ArrayType(T.LongType())),  # epoch micros
+            T.StructField("is_replace", T.ArrayType(T.BooleanType())),
         ]
     )
 
     def update(key, pdfs, state):
-        (table_name,) = key
-        if state.exists:
-            seen, r_ts, r_id, p_ts, p_id = state.get
-            pending = list(zip(p_ts, p_id))
-        else:
-            seen, r_ts, r_id, pending = 0, -1, -1, []
-        for pdf in pdfs:
-            seen += len(pdf)
-            for op, ts, sid in zip(pdf["operation"], pdf["ts"], pdf["snapshot_id"]):
-                ts_ms = int(pd.Timestamp(ts).value // 1_000_000)
-                if op == replace_op:
-                    if (ts_ms, sid) > (r_ts, r_id):
-                        r_ts, r_id = ts_ms, int(sid)
-                else:
-                    pending.append((ts_ms, int(sid)))
-        # pending = commits strictly newer than the REPLACE watermark in
-        # the lineage order (ts, id) — the rank formulation's cut line
-        pending = [p for p in pending if p > (r_ts, r_id)]
-        state.update(
-            (seen, r_ts, r_id, [p[0] for p in pending], [p[1] for p in pending])
+        batch = pd.concat(list(pdfs), ignore_index=True)
+        batch_names = pa.array(batch["table_name"], pa.string())
+        prev, prev_seen, kept, ids, ts, replace = state.get if state.exists else ([],) * 6
+        lineage = pa.table(
+            {
+                "table_name": pa.concat_arrays(
+                    [pa.array(np.repeat(np.array(prev, object), kept), pa.string()), batch_names]
+                ),
+                "snapshot_id": np.concatenate([np.array(ids, np.int64), batch["snapshot_id"]]),
+                "ts": np.concatenate([np.array(ts, np.int64), batch["ts"]]),
+                "operation": pa.concat_arrays(
+                    [
+                        pa.array(np.where(np.array(replace, bool), replace_op, ""), pa.string()),
+                        pa.array(batch["operation"], pa.string()),
+                    ]
+                ),
+            }
         )
-        oldest = min((p[0] for p in pending), default=-1)
+        names, n, oldest, tail = trigger.pending_cut(lineage, replace_op)
+        # every table seen so far keeps at least one row, so ``names``
+        # holds the previous tables and the batch's
+        table_names = pa.array(names, pa.string())
+        seen = np.zeros(len(names), np.int64)
+        seen[pc.index_in(pa.array(prev, pa.string()), value_set=table_names).to_numpy()] = prev_seen
+        added = pc.value_counts(batch_names)
+        touched = pc.index_in(added.field("values"), value_set=table_names).to_numpy()
+        seen[touched] += added.field("counts").to_numpy()
+        state.update(
+            (
+                names,
+                seen.tolist(),
+                pc.value_counts(tail["table_name"]).field("counts").to_pylist(),  # tail is sorted
+                tail["snapshot_id"].to_pylist(),
+                tail["ts"].to_pylist(),
+                pc.equal(tail["operation"], replace_op).fill_null(False).to_pylist(),
+            )
+        )
         yield pd.DataFrame(
             {
-                "table_name": [table_name],
-                "n_commits_seen": [seen],
-                "n_pending": [len(pending)],
-                "max_age": [(now_ms - oldest) if oldest != -1 else -1],
+                "table_name": table_names.take(touched).to_pandas(),
+                "n_commits_seen": seen[touched],
+                "n_pending": n[touched],
+                "max_age": np.where(n > 0, now_ms - oldest, -1)[touched],
             }
         )
 
-    counts = io.snapshots_from(events).groupBy("table_name").applyInPandasWithState(
+    snaps = io.snapshots_from(events)
+    counts = snaps.select(
+        F.pmod(F.xxhash64("table_name"), F.lit(STATE_BUCKETS)).alias("bucket"),
+        "table_name",
+        "snapshot_id",
+        io.epoch_us("ts").alias("ts"),
+        "operation",
+    ).groupBy("bucket").applyInPandasWithState(
         update,
         outputStructType=out_schema,
         stateStructType=state_schema,
@@ -488,14 +538,16 @@ def run_stateful_trigger(
 ) -> DataFrame:
     """C44: the reference's evaluator over an incrementally built
     lineage — each micro-batch appends its snapshot rows to a
-    snapshot-state table via foreachBatch, and the batch decision (A10)
+    snapshot-state table via foreachBatch, and the decision (A10)
     runs once over the accumulated state after the replay ends.
 
     This is the Spark-native analog of the per-commit `report()`
-    callback: state lives in a table, the decision is the same
-    declarative query, and the stream just drives incremental
-    accumulation.  Returns the final decision DataFrame (no rows when
-    the replay carried no events).
+    callback: state lives in a table, the stream just drives
+    incremental accumulation, and the decision is the commit path's:
+    ``trigger.decide_on_driver`` over the table read with pyarrow.  The
+    result is a local DataFrame built from Arrow, so deciding runs no
+    Spark job and no Python worker task.  Returns the decision rows
+    (none when the replay carried no events).
     """
     os.makedirs(state_dir, exist_ok=True)
     state_path = os.path.join(state_dir, "snapshots_state")
@@ -506,12 +558,12 @@ def run_stateful_trigger(
             lambda batch_df, _: batch_df.write.mode("append").parquet(state_path)
         ).option("checkpointLocation", os.path.join(state_dir, "ckpt")),
     )
-    if os.path.isdir(state_path):
-        # the batches wrote this table under snaps.schema: no inference job
-        state = spark.read.schema(snaps.schema).parquet(state_path)
-    else:
-        state = spark.createDataFrame([], snaps.schema)
-    return trigger.decide_optimize(state, now=now)
+    decided = (
+        trigger.decide_on_driver(io.read_lineage(state_path), now_ms=trigger.epoch_ms_of(now))
+        if os.path.isdir(state_path)
+        else {}
+    )
+    return trigger.decision_frame(spark, decided)
 
 
 def run_merge_upsert_stream(

@@ -4,15 +4,22 @@ compare against the batch DataFrame result."""
 
 from __future__ import annotations
 
+import datetime
 import os
+import tempfile
 import threading
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
-from iceberg_aws_event_based_table_management_spark import io
+from iceberg_aws_event_based_table_management_spark import config, io
 from iceberg_aws_event_based_table_management_spark.operators import trigger
 from iceberg_aws_event_based_table_management_spark.streaming import replay
 
@@ -285,6 +292,101 @@ def test_trigger_forms_ignore_chunk_order(spark, sf_dir, four_chunk_path, order,
     )
     assert _sorted_rows(state) == batch
     assert _sorted_rows(table) == batch
+
+
+def test_foreachbatch_decision_runs_no_spark_job(spark, replay_path, tmp_path, monkeypatch):
+    """After its replay, the foreachBatch form decides on the driver
+    and returns a local frame: deciding and collecting the decision
+    run no Spark job (a Spark decision ran two, and a frame built from
+    a list of rows one more, with a Python worker task)."""
+    sc = spark.sparkContext
+    group = f"decision-{uuid.uuid4().hex}"
+    replay_only = replay._run_available_now
+
+    def replay_then_count(session, writer):
+        replay_only(session, writer)
+        sc.setJobGroup(group, group)
+
+    monkeypatch.setattr(replay, "_run_available_now", replay_then_count)
+    try:
+        rows = replay.run_stateful_trigger(
+            spark, replay_path, str(tmp_path / "state"), now="2024-01-31 00:00:00"
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert rows
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+_BASE = datetime.datetime(2024, 1, 1)
+_CHUNKS = 3
+# (table, ts minute, is REPLACE, chunk): few minutes, so ts ties are
+# common and the snapshot id breaks them
+_event = st.tuples(
+    st.integers(0, 3), st.integers(0, 5), st.booleans(), st.integers(0, _CHUNKS - 1)
+)
+
+
+def _write_chunks(root, events, order):
+    """One parquet file per non-empty chunk, replayed in ``order``."""
+    for slot, chunk in enumerate(order, start=1):
+        mine = [(i, e) for i, e in enumerate(events) if e[3] == chunk]
+        if not mine:
+            continue
+        cdir = os.path.join(root, f"chunk={slot}")
+        os.makedirs(cdir)
+        table = pa.table(
+            {
+                "event_id": pa.array([i for i, _ in mine], pa.int64()),
+                "ts": pa.array(
+                    [_BASE + datetime.timedelta(minutes=m) for _, (_, m, _, _) in mine],
+                    pa.timestamp("us"),
+                ),
+                "user_id": pa.array([u for _, (u, _, _, _) in mine], pa.int64()),
+                "event_type": [
+                    config.REPLACE_OPERATION if r else "click" for _, (_, _, r, _) in mine
+                ],
+                "value": pa.array([0.0] * len(mine)),
+                "props": ["{}"] * len(mine),
+            }
+        )
+        pq.write_table(table, os.path.join(cdir, "part-0.parquet"))
+        replay._pin_slot(cdir, slot)
+
+
+@pytest.mark.parametrize("buckets", [1, 64], ids=["one_bucket", "bucket_per_table"])
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(events=st.lists(_event, min_size=1, max_size=16), order=st.permutations(range(_CHUNKS)))
+# commits at minutes 3 and 4 land first; a REPLACE at minute 2 arrives
+# after them and cuts neither, a REPLACE at minute 5 on another table
+# arrives after its commit and cuts it
+@example(
+    events=[(0, 3, False, 0), (0, 4, False, 0), (0, 2, True, 1), (1, 1, False, 0), (1, 5, True, 2)],
+    order=[0, 1, 2],
+)
+def test_state_form_final_emission_equals_batch_decision(spark, monkeypatch, buckets, events, order):
+    """Over random small lineages and chunk orders, one chunk per
+    micro-batch, the state form's last emission per table equals
+    ``decide_optimize`` over all the events, whether every table shares
+    one state bucket or each has its own."""
+    monkeypatch.setattr(replay, "STATE_BUCKETS", buckets)
+    now = "2024-01-01 00:06:00"
+    thresholds = {"commit_threshold": 3, "time_threshold_ms": 3 * 60_000}
+    with tempfile.TemporaryDirectory() as root:
+        _write_chunks(root, events, order)
+        final = _final_state_decision(
+            spark, root, f"t_prop_{uuid.uuid4().hex[:8]}", files_per_trigger=1,
+            now=now, **thresholds,
+        )
+        snaps = io.snapshots_from(spark.read.schema(replay.EVENT_SCHEMA).parquet(root))
+        batch = trigger.decide_optimize(snaps, now=now, **thresholds)
+        assert _sorted_rows(final) == _sorted_rows(batch)
 
 
 def test_events_max_ts_cached_per_sf_dir(spark, sf_dir, monkeypatch):
